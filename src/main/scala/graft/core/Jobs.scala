@@ -14,9 +14,12 @@ package graft.core
   *
   * Contract: the thunks must be independent (no thunk reads state
   * another writes) — the callers here write to DISTINCT paths or
-  * checkpoint DISTINCT plans. The first failure propagates; remaining
-  * thunks may still be running when it does (their writes go to paths
-  * the failed caller abandons).
+  * checkpoint DISTINCT plans. The first failure (in completion order)
+  * propagates, but only after the remaining thunks are cancelled
+  * (interrupted when running) and the pool has drained: no sibling is
+  * still running when the caller sees the failure, so a caller that
+  * retries into the same paths cannot race an orphaned write. Sibling
+  * failures ride along as suppressed exceptions.
   */
 object Jobs {
 
@@ -36,16 +39,26 @@ object Jobs {
           t
         }
       })
+    val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val futures = thunks.map(t => done.submit(new java.util.concurrent.Callable[A] {
+      def call(): A = try t() catch { case e: Throwable => failures.add(e); throw e }
+    }))
     try {
-      val futures = thunks.map(t =>
-        pool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
-      futures.map { f =>
-        try f.get()
-        catch { // unwrap so callers see the job's own failure
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
+      thunks.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: Throwable =>
+        // unwrap so callers see the job's own failure
+        val first = e match {
+          case x: java.util.concurrent.ExecutionException => Option(x.getCause).getOrElse(x)
+          case x => x
         }
-      }
+        futures.foreach(_.cancel(true))
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+        failures.forEach(f => if (f ne first) first.addSuppressed(f))
+        throw first
     } finally pool.shutdown()
   }
 }

@@ -72,22 +72,19 @@ object Tables {
   * shuffle partitions sized to the local core count (on a real cluster this
   * would be ~2-3x total executor cores), UTC for oracle parity.
   *
-  * Streaming state lives in RocksDB by default: the in-memory
-  * (HDFS-backed) provider keeps every key's state ON HEAP, so at cluster
-  * scale a large keyspace (dedup horizon, sessions per user) evicts the
-  * executors it runs on — RocksDB spills to local disk and bounds heap by
-  * its block cache instead. `inMemoryState = true` opts back into the
-  * default provider for small/test workloads where per-batch RocksDB
-  * overhead outweighs state size (the provider is also swappable at
-  * runtime via `spark.sql.streaming.stateStore.providerClass`).
+  * Streaming state lives in RocksDB: the in-memory (HDFS-backed)
+  * provider keeps every key's state ON HEAP, so at cluster scale a large
+  * keyspace (dedup horizon, sessions per user) evicts the executors it
+  * runs on — RocksDB spills to local disk and bounds heap by its block
+  * cache instead. The provider stays swappable at runtime via
+  * `spark.sql.streaming.stateStore.providerClass`.
   */
 object GraftSession {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  def builder(appName: String = "graft", cores: Int = 4,
-              inMemoryState: Boolean = false): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(appName: String = "graft", cores: Int = 4): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .withExtensions(new GraftExtensions)
@@ -98,7 +95,5 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    if (inMemoryState) b
-    else b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-  }
+      .config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
 }

@@ -260,12 +260,16 @@ object Warc {
     val fs = p.getFileSystem(conf.value)
     // a DIRECTORY match expands to its contained files (the binaryFile
     // source accepted a bare directory path; round 18 restores that —
-    // ADVICE r17), and the driver listing's FileStatus lengths ride into
-    // the tasks so no task re-stats its file
+    // ADVICE r17), skipping `_`- and `.`-prefixed names as the binaryFile
+    // PathFilter does (_SUCCESS, _committed markers, .crc checksums), and
+    // the driver listing's FileStatus lengths ride into the tasks so no
+    // task re-stats its file
+    def visible(st: org.apache.hadoop.fs.FileStatus) = st.isFile &&
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
     val files = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
       .flatMap {
         case st if st.isFile => Seq(st)
-        case st => fs.listStatus(st.getPath).toSeq.filter(_.isFile)
+        case st => fs.listStatus(st.getPath).toSeq.filter(visible)
       }
       .map(st => (st.getPath.toString, st.getLen))
       .sortBy(_._1)

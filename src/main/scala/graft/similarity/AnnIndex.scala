@@ -13,18 +13,13 @@ import org.apache.spark.sql.functions._
   * from the exported tables with results bit-identical to the in-session
   * [[Similarity.ivfTopK]] (spec-pinned round-trip parity).
   *
-  * PUBLISH PROTOCOL — no destroy-then-build window: each [[export]]
-  * builds a fresh VERSIONED root `path/v{N}/` while readers keep serving
-  * the previous version, then publishes it by creating the `_PUBLISHED`
-  * marker file inside it as the LAST write — a single atomic file
-  * create, so a reader either resolves the old version or the complete
-  * new one, never a partial index (the
-  * [[graft.streaming.Streams.maintainedViewStream]] snapshot-swap rule).
-  * Readers ([[servedTopK]], [[loadCentroids]], [[append]]) resolve the
-  * highest published version via [[resolve]]; after a publish the
-  * previous version is RETAINED (in-flight readers finish against it)
-  * and everything older — including junk from crashed exports — is
-  * garbage-collected.
+  * Publish, delta absorb, compaction and maintenance follow the shared
+  * [[IndexLifecycle]] protocol: versioned roots `path/v{N}` published by
+  * an atomic `_PUBLISHED` marker, readers resolving the highest published
+  * version via [[resolve]], and exactly-once named deltas under
+  * `deltas/{name}/` committed through `_DELTAS`. This object holds only
+  * the ANN format: its components, how one slice is built, how each
+  * component folds, its manifest, and serving.
   *
   * Layout under each published version root `path/v{N}`:
   *  - `centroids/`  (cell INT, v ARRAY<DOUBLE>) — the coarse quantizer,
@@ -52,232 +47,12 @@ import org.apache.spark.sql.functions._
   * both quantizers on a [[graft.ops.Sampling.hashSample]] and raise
   * `cells` — the layout is unchanged.
   */
-/** The atomic versioned-publish protocol shared by every persisted index
-  * ([[AnnIndex]], [[HybridIndex]]): build under `path/v{N}`, create the
-  * `_PUBLISHED` marker file as the LAST write (single atomic create),
-  * readers resolve the highest published version, GC keeps the new
-  * version plus its immediate predecessor.
-  */
-private[graft] object IndexPublish {
-
-  val Published = "_PUBLISHED"
-
-  def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def del(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, path)
-    // overwrite semantics for a version root: a crashed export's partial
-    // components at the same number must not survive beside the new ones
-    // and duplicate reads (the q_chunk_format lesson)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  /** Version numbers under `path` that carry the `_PUBLISHED` marker —
-    * i.e. exports that completed. Unmarked `v{N}` directories are
-    * crashed/in-flight builds and are never served.
-    */
-  def publishedVersions(spark: SparkSession, path: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, path)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .map(_.getPath.getName.drop(1).toInt)
-      .filter(v => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$path/v$v/$Published")))
-  }
-
-  /** The serving root for `path`: the highest PUBLISHED version
-    * (`path/v{N}`), or `path` itself when no versioned export exists
-    * (a legacy unversioned layout keeps reading).
-    */
-  def resolve(spark: SparkSession, path: String): String =
-    publishedVersions(spark, path) match {
-      case vs if vs.isEmpty => path
-      case vs => s"$path/v${vs.max}"
-    }
-
-  /** Claim the next version root: returns (root, next, previously
-    * published versions) with any crashed junk at `next` deleted.
-    */
-  def begin(spark: SparkSession, path: String): (String, Int, Seq[Int]) = {
-    val prev = publishedVersions(spark, path)
-    val next = (prev :+ 0).max + 1
-    val root = s"$path/v$next"
-    del(spark, root) // only the TARGET version root — live versions untouched
-    (root, next, prev)
-  }
-
-  /** GC grace window: a PUBLISHED version younger than this is never
-    * collected even when superseded twice, so a reader that resolved a
-    * version just before two rapid publishes can still finish scanning
-    * it — the age check makes keep-new-plus-predecessor honest at
-    * serving timescales (the `_PUBLISHED` marker's filesystem
-    * modification time is the version's publish instant).
-    */
-  val GcGraceMs: Long = 15L * 60 * 1000
-
-  /** PUBLISH `next` (one atomic marker create — readers flip from the
-    * previous version only after every component has landed), then GC:
-    * keep the new version, its immediate predecessor (in-flight
-    * readers finish against it), and any published version still
-    * inside its [[GcGraceMs]] grace window; drop everything older,
-    * plus any unpublished junk a crashed export left behind
-    * (junk carries no marker and gets no grace).
-    */
-  def publish(spark: SparkSession, path: String, next: Int,
-              prev: Seq[Int], graceMs: Long = GcGraceMs): Unit = {
-    val fs = fsOf(spark, path)
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/v$next/$Published"), true).close()
-    val keep = Set(next) ++ prev.reduceOption(_ max _)
-    val now = System.currentTimeMillis()
-    fs.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.matches("v\\d+") && !keep(n.drop(1).toInt)) {
-        val young = try {
-          now - fs.getFileStatus(new org.apache.hadoop.fs.Path(
-            s"$path/$n/$Published")).getModificationTime < graceMs
-        } catch { case _: java.io.FileNotFoundException => false }
-        if (!young) fs.delete(st.getPath, true)
-      }
-    }
-  }
-}
-
-/** The exactly-once NAMED-DELTA ledger shared by every index with an
-  * incremental leg ([[AnnIndex.appendDelta]], [[HybridIndex.appendDelta]]):
-  * `_DELTAS` lists the deltas committed (and still living) under
-  * `root/deltas/{name}/`, swapped atomically per commit; `_ABSORBED`
-  * lists names a COMPACTION folded into the base — the name stays
-  * burned so a replayed absorb of an already-folded batch remains a
-  * no-op after its rows moved out of `deltas/`. `_ABSORBED` is written
-  * once into a version root BEFORE its publish, so it is atomic with
-  * the version swap and needs no swap protocol of its own.
-  */
-private[similarity] object DeltaLog {
-
-  val DeltasFile = "_DELTAS"
-  val AbsorbedFile = "_ABSORBED"
-
-  /** No dot-segments: "." / ".." would escape the deltas directory and
-    * an overwrite-staged write could replace the BASE components.
-    */
-  def validName(name: String): Boolean =
-    name.matches("[A-Za-z0-9_-][A-Za-z0-9._-]*") && !name.contains("..")
-
-  private def readLines(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path): Option[Seq[String]] =
-    try {
-      val in = fs.open(p)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        Some(s.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-      } finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Delta names committed into the index at `root`. PASSIVE, OPTIMISTIC
-    * read: OPEN `_DELTAS` first — an existence pre-check can pass and
-    * the open still race the writer's swap (the writer parks the
-    * current manifest at `.old` mid-commit) — fall back to READING the
-    * `.old` backup, then retry the manifest once more (covering the
-    * backup itself vanishing as the writer completes its swap). Never
-    * rename on the read path: a read-side "repair" would race the
-    * writer's own rename. Uncommitted `deltas/` directories are
-    * invisible.
-    */
-  def committed(spark: SparkSession, root: String): Seq[String] = {
-    val fs = IndexPublish.fsOf(spark, root)
-    val cur = new org.apache.hadoop.fs.Path(s"$root/$DeltasFile")
-    val old = new org.apache.hadoop.fs.Path(s"$root/$DeltasFile.old")
-    readLines(fs, cur).orElse(readLines(fs, old)).orElse(readLines(fs, cur))
-      .getOrElse(Seq.empty)
-  }
-
-  /** Names already folded into the base by a compaction. */
-  def absorbed(spark: SparkSession, root: String): Seq[String] =
-    readLines(IndexPublish.fsOf(spark, root),
-      new org.apache.hadoop.fs.Path(s"$root/$AbsorbedFile")).getOrElse(Seq.empty)
-
-  /** Every name that must never be absorbed again at `root`. */
-  def burned(spark: SparkSession, root: String): Set[String] =
-    (committed(spark, root) ++ absorbed(spark, root)).toSet
-
-  /** Write the absorbed-name ledger into a (pre-publish) version root. */
-  def writeAbsorbed(spark: SparkSession, root: String,
-                    names: Seq[String]): Unit = {
-    val fs = IndexPublish.fsOf(spark, root)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$root/$AbsorbedFile"), true)
-    try {
-      if (names.nonEmpty) out.write((names.mkString("\n") + "\n").getBytes("UTF-8"))
-    } finally out.close()
-  }
-
-  /** MIGRATE deltas that committed into `oldRoot` after a compaction's
-    * `_DELTAS` snapshot: copy each late delta directory into `newRoot`
-    * and commit its name there. One half of the two-sided recheck that
-    * makes an OUT-OF-BAND fold safe against a concurrent absorber —
-    * the compactor calls this right after publishing (covering commits
-    * that landed before its recheck), and the absorber re-resolves
-    * after every commit and re-appends if a new version won meanwhile
-    * (covering commits that landed after). Both sides are idempotent:
-    * directory copy is staged-overwrite, name commit is a no-op on
-    * replay — so the delta arrives in the new version EXACTLY ONCE no
-    * matter which side gets there first.
-    */
-  def migrateLate(spark: SparkSession, oldRoot: String, newRoot: String,
-                  folded: Set[String]): Unit = {
-    val fs = IndexPublish.fsOf(spark, oldRoot)
-    val conf = spark.sparkContext.hadoopConfiguration
-    committed(spark, oldRoot).filterNot(folded).foreach { n =>
-      val src = new org.apache.hadoop.fs.Path(s"$oldRoot/deltas/$n")
-      val dst = new org.apache.hadoop.fs.Path(s"$newRoot/deltas/$n")
-      if (fs.exists(src) && !committed(spark, newRoot).contains(n)) {
-        fs.delete(dst, true)
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst,
-          /* deleteSource = */ false, conf)
-        commit(spark, newRoot, n)
-      }
-    }
-  }
-
-  /** Append `name` to the committed-delta manifest by atomic swap
-    * (write `.new`, move current aside, rename into place, roll back on
-    * failure). Idempotent: an already-committed name is a no-op.
-    * Crash recovery (restore `_DELTAS` from the `.old` backup) happens
-    * HERE, on the single-writer path — one absorb stream per index, and
-    * the streaming foreachBatch serializes its batches.
-    */
-  def commit(spark: SparkSession, root: String, name: String): Unit = {
-    val fs = IndexPublish.fsOf(spark, root)
-    val cur = new org.apache.hadoop.fs.Path(s"$root/$DeltasFile")
-    val old = new org.apache.hadoop.fs.Path(s"$root/$DeltasFile.old")
-    val neu = new org.apache.hadoop.fs.Path(s"$root/$DeltasFile.new")
-    if (!fs.exists(cur) && fs.exists(old))
-      require(fs.rename(old, cur), s"delta-manifest recovery failed for $cur")
-    val names = committed(spark, root)
-    if (names.contains(name)) return
-    val out = fs.create(neu, true)
-    try out.write(((names :+ name).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(old, true)
-    if (fs.exists(cur))
-      require(fs.rename(cur, old), s"delta-manifest swap: could not move $cur aside")
-    if (!fs.rename(neu, cur)) {
-      fs.rename(old, cur)
-      throw new IllegalStateException(s"delta-manifest swap failed for $cur — rolled back")
-    }
-    fs.delete(old, true)
-  }
-
-}
-
-object AnnIndex {
+object AnnIndex extends IndexLifecycle {
 
   import graft.functions.VectorOps.vec_norm
+
+  private val VectorCols = Seq("vec_id", "v", "n", "cell")
+  private val CodeCols = Seq("vec_id", "cell", "codes", "recon_err")
 
   /** Write the inverted lists hive-partitioned by `cell`, CLUSTERED
     * first when the cell count warrants it: repartition on the cell id
@@ -308,6 +83,46 @@ object AnnIndex {
   def resolve(spark: SparkSession, path: String): String =
     IndexPublish.resolve(spark, path)
 
+  private def assign(vectors: DataFrame, idCol: String, vecCol: String,
+                     centers: Seq[Seq[Double]], assignNProbe: Int): DataFrame =
+    if (assignNProbe > 0)
+      graft.chain.KMeans.assignRouted(vectors, idCol, vecCol, centers, assignNProbe)
+    else graft.chain.KMeans.assign(vectors, idCol, vecCol, centers)
+
+  /** One slice's inverted lists and PQ codes under `dir`, from its cell
+    * assignment — the write [[export]], [[append]] and [[appendDelta]]
+    * share. The code table encodes the ALREADY-ASSIGNED rows (same
+    * (id, v) set, v already double-cast) carrying the cell through the
+    * projection: one projection, no second corpus scan, no vec_id join.
+    * The two writes share the assignment plan and write disjoint paths,
+    * so they run overlapped, together with any `alongside` writes.
+    */
+  private def writeSlice(assigned: DataFrame, cbs: Seq[Seq[Seq[Double]]],
+                         dir: String, cells: Int, mode: String,
+                         alongside: Seq[() => Unit] = Nil): Unit = {
+    graft.core.Jobs.inParallel(alongside ++ Seq(
+      () => writeClustered(
+        assigned.select(col("id").as("vec_id"), col("v"),
+          vec_norm(col("v")).as("n"), col("cluster").as("cell")),
+        s"$dir/vectors", cells, mode),
+      () => Similarity.pqEncode(assigned, "id", "v", cbs, carry = Seq("cluster"))
+        .select(col("id").as("vec_id"), col("cluster").as("cell"),
+          col("codes"), col("recon_err"))
+        .write.mode(mode).parquet(s"$dir/codes")))
+    ()
+  }
+
+  /** [[writeSlice]] of `vectors` assigned against the FROZEN quantizers
+    * stored at `root` (no refit).
+    */
+  private def writeFrozenSlice(spark: SparkSession, vectors: DataFrame,
+                               idCol: String, vecCol: String, root: String,
+                               dir: String, assignNProbe: Int, mode: String): Unit = {
+    val centers = loadCentroids(spark, root)
+    writeSlice(assign(vectors, idCol, vecCol, centers, assignNProbe),
+      loadCodebooks(spark, root), dir, centers.length, mode)
+  }
+
   /** Build + persist the IVF(+PQ) index; returns the manifest
     * (component, cell, rows) from read-back counts.
     *
@@ -321,55 +136,37 @@ object AnnIndex {
              vecCol: String, path: String, cells: Int = 16,
              lloydIters: Int = 3, m: Int = 4, ks: Int = 16,
              pqIters: Int = 3, fitRate: Double = 1.0,
-             salt: String = "annfit", assignNProbe: Int = 0): DataFrame = {
-    import spark.implicits._
-    val (root, next, prev) = IndexPublish.begin(spark, path)
-    val fit =
-      if (fitRate >= 1.0) corpus
-      else graft.ops.Sampling.hashSample(corpus, col(idCol), fitRate, salt)
-    val (centers, fitAssigned) =
-      graft.chain.KMeans.run(spark, fit, idCol, vecCol, cells, lloydIters)
-    val assigned =
-      if (fitRate >= 1.0) fitAssigned
-      else if (assignNProbe > 0)
-        graft.chain.KMeans.assignRouted(corpus, idCol, vecCol, centers, assignNProbe)
-      else graft.chain.KMeans.assign(corpus, idCol, vecCol, centers)
-    val cbs = Similarity.pqTrain(spark, corpus, idCol, vecCol, m, ks, pqIters)
-    // both quantizers are trained; the four component writes are now
-    // independent (assigned is checkpoint-rooted, cbs is a driver value)
-    // and write disjoint paths — overlap their jobs (round 18, §2.6)
-    graft.core.Jobs.inParallel(Seq(
-      () => centers.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "v")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids"),
-      () => writeClustered(
-        assigned.select(col("id").as("vec_id"), col("v"),
-          vec_norm(col("v")).as("n"), col("cluster").as("cell")),
-        s"$root/vectors", cells),
-      () => (for { (cb, s) <- cbs.zipWithIndex; (c, j) <- cb.zipWithIndex }
-        yield (s, j, c)).toDF("sub", "cluster", "v")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks"),
-      // encode over the ALREADY-ASSIGNED rows (same (id, v) set, v already
-      // double-cast) carrying the cell through the projection — the old
-      // re-scan of `corpus` + vec_id equi-join (a full shuffle of both
-      // sides at scale) is gone; the encode is one projection
-      () => Similarity.pqEncode(assigned, "id", "v", cbs, carry = Seq("cluster"))
-        .select(col("id").as("vec_id"), col("cluster").as("cell"),
-          col("codes"), col("recon_err"))
-        .write.mode("overwrite").parquet(s"$root/codes")))
-    val manifest = writeManifest(spark, root)
-    IndexPublish.publish(spark, path, next, prev)
-    manifest
-  }
+             salt: String = "annfit", assignNProbe: Int = 0): DataFrame =
+    exportVersion(spark, path) { root =>
+      import spark.implicits._
+      val fit =
+        if (fitRate >= 1.0) corpus
+        else graft.ops.Sampling.hashSample(corpus, col(idCol), fitRate, salt)
+      val (centers, fitAssigned) =
+        graft.chain.KMeans.run(spark, fit, idCol, vecCol, cells, lloydIters)
+      val assigned =
+        if (fitRate >= 1.0) fitAssigned
+        else assign(corpus, idCol, vecCol, centers, assignNProbe)
+      val cbs = Similarity.pqTrain(spark, corpus, idCol, vecCol, m, ks, pqIters)
+      // both quantizers are trained; the four component writes are now
+      // independent (assigned is checkpoint-rooted, cbs is a driver value)
+      // and write disjoint paths — one overlapped batch
+      writeSlice(assigned, cbs, root, cells, "overwrite", alongside = Seq(
+        () => centers.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "v")
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids"),
+        () => (for { (cb, s) <- cbs.zipWithIndex; (c, j) <- cb.zipWithIndex }
+          yield (s, j, c)).toDF("sub", "cluster", "v")
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks")))
+    }
 
-  /** Recompute + persist the manifest from READ-BACK counts (the
-    * source-of-truth rule): per-cell rows for the inverted lists, -1 for
-    * the unpartitioned components. Counts the SERVED index — base plus
-    * committed deltas — through the same reading rule the serving paths
-    * use ([[vectorLists]] / [[pqCodes]]), so the manifest can never
+  /** Per-cell rows for the inverted lists, -1 for the unpartitioned
+    * components; the lists and codes counted through the serving reading
+    * rule ([[vectorLists]] / [[pqCodes]]), so the manifest can never
     * under-count absorbed shards.
     */
-  private def writeManifest(spark: SparkSession, root: String): DataFrame = {
-    val perCell = vectorLists(spark, root)
+  protected def manifestPlan(spark: SparkSession, root: String): DataFrame = {
+    val deltas = committedDeltas(spark, root)
+    val perCell = unionParts(spark, root, "vectors", VectorCols, deltas)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("rows"))
       .select(lit("vectors").as("component"), col("cell"), col("rows"))
@@ -378,21 +175,10 @@ object AnnIndex {
         .agg(count(lit(1)).as("rows"))
         .select(lit(c).as("component"), lit(-1L).as("cell"), col("rows"))
     }.reduce(_ unionByName _)
-      .unionByName(pqCodes(spark, root)
+      .unionByName(unionParts(spark, root, "codes", CodeCols, deltas)
         .agg(count(lit(1)).as("rows"))
         .select(lit("codes").as("component"), lit(-1L).as("cell"), col("rows")))
-    // ONE counting action (round 18): collect the ≤ cells+3 summary rows,
-    // then write and return the LOCAL relation. The r17 lazy read-back
-    // made every consumer action re-read the manifest files — and a later
-    // refresh of the same root could delete them out from under a held
-    // reference (ADVICE r17); the collect-backed snapshot keeps the
-    // one-pass counting cost, makes the return immune to subsequent
-    // index mutations, and its write is a driver-local one-task job.
-    val plan = perCell.unionByName(flat).orderBy("component", "cell")
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(plan.collect(): _*), plan.schema)
-    local.write.mode("overwrite").parquet(s"$root/manifest")
-    local
+    perCell.unionByName(flat).orderBy("component", "cell")
   }
 
   /** INCREMENTAL index maintenance — the daily-shard path: append new
@@ -418,63 +204,24 @@ object AnnIndex {
     // newest shard, never a broken one); structural rebuilds go through
     // [[export]]'s versioned publish
     val root = resolve(spark, path)
-    val centers = loadCentroids(spark, root)
-    val assigned =
-      if (assignNProbe > 0)
-        graft.chain.KMeans.assignRouted(newVectors, idCol, vecCol, centers,
-          assignNProbe)
-      else graft.chain.KMeans.assign(newVectors, idCol, vecCol, centers)
-    val cbs = loadCodebooks(spark, root)
-    // the list append and the code append write disjoint paths from the
-    // same assignment plan (each evaluated it before this change too —
-    // the assign is a codegen projection) — overlap them (round 18, §2.6)
-    graft.core.Jobs.inParallel(Seq(
-      () => writeClustered(
-        assigned.select(col("id").as("vec_id"), col("v"),
-          vec_norm(col("v")).as("n"), col("cluster").as("cell")),
-        s"$root/vectors", centers.length, mode = "append"),
-      // same join-elimination as [[export]]: encode the assigned rows and
-      // carry the cell — one projection, no second scan, no shuffle
-      () => Similarity.pqEncode(assigned, "id", "v", cbs, carry = Seq("cluster"))
-        .select(col("id").as("vec_id"), col("cluster").as("cell"),
-          col("codes"), col("recon_err"))
-        .write.mode("append").parquet(s"$root/codes")))
+    writeFrozenSlice(spark, newVectors, idCol, vecCol, root, root,
+      assignNProbe, "append")
     writeManifest(spark, root)
   }
 
   // ------------------------------------------------------- delta absorb
 
-  /** Delta names committed into the index at `root` — see
-    * [[DeltaLog.committed]] (the shared optimistic-read protocol).
-    */
-  def committedDeltas(spark: SparkSession, root: String): Seq[String] =
-    DeltaLog.committed(spark, root)
-
   /** EXACTLY-ONCE shard absorb — [[append]]'s replay-safe sibling, the
     * unit the streaming landing-directory ingest folds batches through
     * ([[graft.streaming.Streams.annAbsorbStream]]). The shard's
-    * frozen-quantizer assignment and PQ codes are staged under
-    * `root/deltas/{name}/` with OVERWRITE semantics (a replay rebuilds
-    * the same bytes over its own half-written junk), then the name is
-    * committed into the `_DELTAS` manifest by one atomic swap. Readers
-    * union the base lists with COMMITTED deltas only, so a crashed
-    * half-written delta is invisible and a replayed batch is a no-op —
-    * and because the quantizers are frozen, the served results are a
-    * pure function of the absorbed vector SET, whatever the absorb
-    * order or batching. Returns true when the delta was newly
-    * committed, false on a replay of an already-committed name —
-    * including a name a COMPACTION has since folded into the base
-    * (the `_ABSORBED` ledger keeps it burned).
-    *
-    * Safe against a CONCURRENT out-of-band [[compact]] (the absorber
-    * half of [[DeltaLog.migrateLate]]'s two-sided recheck): after the
-    * commit, the serving root re-resolves — if a fold published a new
-    * version meanwhile and that version carries neither the name
-    * (folded or migrated) nor a burn record for it, the append re-runs
-    * against the new root (identical bytes: the fold copies the frozen
-    * quantizers verbatim). Without this, a delta committed into the
-    * old version after the fold's `_DELTAS` snapshot AND after its
-    * post-publish migration sweep would vanish when readers move over.
+    * frozen-quantizer assignment and PQ codes are staged and committed
+    * as a named delta by [[IndexLifecycle]]'s absorb step; because the
+    * quantizers are frozen, the served results are a pure function of
+    * the absorbed vector SET, whatever the absorb order or batching —
+    * and a re-stage after a lost fold race writes identical bytes (the
+    * fold copies the frozen quantizers verbatim). Returns true when the
+    * delta was newly committed, false on a replay of an already-committed
+    * name — including a name a COMPACTION has since folded into the base.
     */
   def appendDelta(spark: SparkSession, newVectors: DataFrame, idCol: String,
                   vecCol: String, path: String, name: String,
@@ -483,166 +230,42 @@ object AnnIndex {
     appendDeltaHooked(spark, newVectors, idCol, vecCol, path, name,
       assignNProbe, () => (), refreshManifest)
 
-  /** [[appendDelta]] with a test seam: `beforeCommit` runs after the
-    * staging writes and before the `_DELTAS` commit — the window a
-    * concurrent fold can win the race in (specs inject a full compact
-    * there to pin the re-append behavior deterministically).
+  /** [[appendDelta]] with the [[IndexLifecycle]] absorb test seam:
+    * `beforeCommit` runs after the staging writes and before the
+    * `_DELTAS` commit (specs inject a full compact there to pin the
+    * re-append behavior deterministically).
     */
   private[graft] def appendDeltaHooked(spark: SparkSession,
       newVectors: DataFrame, idCol: String, vecCol: String, path: String,
       name: String, assignNProbe: Int,
       beforeCommit: () => Unit,
-      refreshManifest: Boolean = true): Boolean = {
-    require(DeltaLog.validName(name), s"bad delta name '$name'")
-    var root = resolve(spark, path)
-    if (DeltaLog.burned(spark, root).contains(name)) return false
-    var hook = beforeCommit
-    var rounds = 0
-    var done = false
-    while (!done) {
-      rounds += 1
-      if (rounds > 10) throw new IllegalStateException(
-        s"appendDelta($name): no stable version after $rounds rounds")
-      val centers = loadCentroids(spark, root)
-      val assigned =
-        if (assignNProbe > 0)
-          graft.chain.KMeans.assignRouted(newVectors, idCol, vecCol, centers,
-            assignNProbe)
-        else graft.chain.KMeans.assign(newVectors, idCol, vecCol, centers)
-      val cbs = loadCodebooks(spark, root)
-      // the two staging writes share the assignment plan and write
-      // disjoint paths — overlap them (round 18, §2.6)
-      graft.core.Jobs.inParallel(Seq(
-        () => writeClustered(
-          assigned.select(col("id").as("vec_id"), col("v"),
-            vec_norm(col("v")).as("n"), col("cluster").as("cell")),
-          s"$root/deltas/$name/vectors", centers.length),
-        // same join-elimination as [[export]]: encode the assigned rows
-        () => Similarity.pqEncode(assigned, "id", "v", cbs, carry = Seq("cluster"))
-          .select(col("id").as("vec_id"), col("cluster").as("cell"),
-            col("codes"), col("recon_err"))
-          .write.mode("overwrite").parquet(s"$root/deltas/$name/codes")))
-      hook(); hook = () => () // the injected race fires once
-      DeltaLog.commit(spark, root, name)
-      val now = resolve(spark, path)
-      if (now == root || DeltaLog.burned(spark, now).contains(name)) done = true
-      else root = now // a fold won the race: re-append against its root
+      refreshManifest: Boolean = true): Boolean =
+    absorb(spark, path, name, beforeCommit, refreshManifest) { (root, dir) =>
+      writeFrozenSlice(spark, newVectors, idCol, vecCol, root, dir,
+        assignNProbe, "overwrite")
     }
-    // refresh the diagnostic read-back manifest (counts base + committed
-    // deltas). A crash between the commit above and this write leaves the
-    // manifest stale until the next absorb — acceptable: `_DELTAS` is the
-    // correctness-bearing manifest, this one is counts. Batch absorbers
-    // pass refreshManifest = false and refresh once per commit batch
-    // (round 18, §2.4 fewer actions): each refresh re-counts the WHOLE
-    // index (base + every committed delta), so per-delta refreshes cost
-    // deltas × index-size where one final refresh costs index-size.
-    if (refreshManifest) writeManifest(spark, root)
-    true
-  }
 
-  /** COMPACTION for the absorb path ([[appendDelta]] /
-    * [[graft.streaming.Streams.annAbsorbStream]]): fold every committed
-    * delta into a fresh versioned BASE via the [[IndexPublish]]
-    * protocol. The quantizers are FROZEN — this is a pure rewrite of
-    * the inverted lists and PQ codes through the serving read rule
-    * (base ∪ committed deltas), no refit — so served results are
-    * bit-identical before and after (spec-pinned). Without it, months
-    * of absorbing union one small parquet directory per delta into
-    * every serving read and rewrite an ever-growing `_DELTAS` list on
-    * every commit; after it, the new version carries the folded rows in
-    * its hive-partitioned base, an empty delta set, and the folded
-    * names burned into its `_ABSORBED` ledger (union with the old
-    * one), so a replayed absorb of an old batch stays exactly-once
-    * across the compaction. Readers are never blocked: in-flight
-    * queries finish on the previous version (retained by publish + GC
-    * grace); new resolves get the compacted base.
-    *
-    * No-op (returns the CURRENT manifest) below `minDeltas` committed
-    * deltas — the threshold the streaming absorb triggers on.
-    *
-    * Safe to run OUT-OF-BAND while an absorb stream keeps committing
-    * (the [[maintain]] entry / [[graft.streaming.Streams.indexMaintainer]]):
-    * the fold works from one `_DELTAS` snapshot, and any delta that
-    * commits into the old version after that snapshot is swept into
-    * the new version by [[DeltaLog.migrateLate]] right after the
-    * publish — with [[appendDelta]]'s own post-commit recheck covering
-    * commits that land even later. The old version (and its in-flight
-    * readers) is protected by the publish GC's predecessor + grace
-    * rules.
+  /** The ANN fold: the quantizers are FROZEN — the centroids and
+    * codebooks copy verbatim and the inverted lists and PQ codes are a
+    * pure rewrite through the serving read rule, no refit — so served
+    * results are bit-identical before and after (spec-pinned).
     */
-  def compact(spark: SparkSession, path: String,
-              minDeltas: Int = 1): DataFrame =
-    compactHooked(spark, path, minDeltas, () => ())
-
-  /** [[compact]] with a test seam: `beforePublish` runs after the fold
-    * writes and before the atomic publish — specs inject a concurrent
-    * absorb there to pin the late-delta migration deterministically.
-    */
-  private[graft] def compactHooked(spark: SparkSession, path: String,
-      minDeltas: Int, beforePublish: () => Unit): DataFrame = {
-    val root = resolve(spark, path)
-    val deltas = DeltaLog.committed(spark, root)
-    if (deltas.size < math.max(1, minDeltas))
-      return spark.read.parquet(s"$root/manifest")
-    val (newRoot, next, prev) = IndexPublish.begin(spark, path)
-    // the four component folds read disjoint stored tables and write
-    // disjoint paths — overlap their jobs (round 18, guide §2.6)
-    graft.core.Jobs.inParallel(Seq(
-      () => spark.read.parquet(s"$root/centroids").coalesce(1)
-        .write.mode("overwrite").parquet(s"$newRoot/centroids"),
-      () => spark.read.parquet(s"$root/codebooks").coalesce(1)
-        .write.mode("overwrite").parquet(s"$newRoot/codebooks"),
-      () => writeClustered(vectorListsOf(spark, root, deltas), s"$newRoot/vectors",
-        spark.read.parquet(s"$root/centroids").count().toInt),
-      () => pqCodesOf(spark, root, deltas)
-        .write.mode("overwrite").parquet(s"$newRoot/codes")))
-    DeltaLog.writeAbsorbed(spark, newRoot,
-      DeltaLog.absorbed(spark, root) ++ deltas)
-    beforePublish()
-    IndexPublish.publish(spark, path, next, prev)
-    // sweep deltas that committed into the old root after our snapshot
-    DeltaLog.migrateLate(spark, root, newRoot, deltas.toSet)
-    writeManifest(spark, newRoot)
-  }
-
-  /** Run a compaction when due — the OUT-OF-BAND maintenance entry, to
-    * be called from a driver-side scheduler or
-    * [[graft.streaming.Streams.indexMaintainer]] rather than from
-    * inside a streaming micro-batch: the fold is index-body-linear, so
-    * running it under `foreachBatch` stalls every `compactEvery`-th
-    * batch by the full index rewrite while shards queue. Returns true
-    * when a fold ran.
-    */
-  def maintain(spark: SparkSession, path: String, minDeltas: Int = 8): Boolean = {
-    val due = DeltaLog.committed(spark, resolve(spark, path)).size >=
-      math.max(1, minDeltas)
-    if (due) compact(spark, path, minDeltas)
-    due
-  }
+  protected def componentFolds(spark: SparkSession, root: String,
+      newRoot: String, deltas: Seq[String]): Seq[() => Unit] = Seq(
+    () => spark.read.parquet(s"$root/centroids").coalesce(1)
+      .write.mode("overwrite").parquet(s"$newRoot/centroids"),
+    () => spark.read.parquet(s"$root/codebooks").coalesce(1)
+      .write.mode("overwrite").parquet(s"$newRoot/codebooks"),
+    () => writeClustered(unionParts(spark, root, "vectors", VectorCols, deltas),
+      s"$newRoot/vectors", spark.read.parquet(s"$root/centroids").count().toInt),
+    () => unionParts(spark, root, "codes", CodeCols, deltas)
+      .write.mode("overwrite").parquet(s"$newRoot/codes"))
 
   /** The full inverted lists at `root`: base `vectors/` plus every
     * COMMITTED delta's — the one reading rule of the serving paths.
     */
   private[graft] def vectorLists(spark: SparkSession, root: String): DataFrame =
-    vectorListsOf(spark, root, committedDeltas(spark, root))
-
-  /** [[vectorLists]] over an EXPLICIT delta snapshot: the compaction
-    * fold pins ONE `_DELTAS` read through all its component writes, so
-    * a delta committed mid-fold can never land in `vectors/` but miss
-    * `codes/` (or double-count after the late-delta migration).
-    */
-  private def vectorListsOf(spark: SparkSession, root: String,
-                            deltas: Seq[String]): DataFrame = {
-    val base = spark.read.option("basePath", s"$root/vectors")
-      .parquet(s"$root/vectors")
-      .select("vec_id", "v", "n", "cell")
-    deltas.foldLeft(base) { (acc, d) =>
-      acc.unionByName(
-        spark.read.option("basePath", s"$root/deltas/$d/vectors")
-          .parquet(s"$root/deltas/$d/vectors")
-          .select("vec_id", "v", "n", "cell"))
-    }
-  }
+    unionParts(spark, root, "vectors", VectorCols, committedDeltas(spark, root))
 
   /** The full PQ code table at `root`: base `codes/` plus every
     * COMMITTED delta's — the [[vectorLists]] rule for the memory-
@@ -650,17 +273,7 @@ object AnnIndex {
     * every shard.
     */
   def pqCodes(spark: SparkSession, root: String): DataFrame =
-    pqCodesOf(spark, root, committedDeltas(spark, root))
-
-  private def pqCodesOf(spark: SparkSession, root: String,
-                        deltas: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(s"$root/codes")
-      .select("vec_id", "cell", "codes", "recon_err")
-    deltas.foldLeft(base) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$root/deltas/$d/codes")
-        .select("vec_id", "cell", "codes", "recon_err"))
-    }
-  }
+    unionParts(spark, root, "codes", CodeCols, committedDeltas(spark, root))
 
   /** The coarse quantizer from an exported index (cells×dim doubles —
     * the bounded serving-process pull).

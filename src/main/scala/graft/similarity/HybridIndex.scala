@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * quantization code table per session; a production retrieval stack
   * builds them ONCE beside the corpus and serves queries from the
   * exported tables. [[export]] materializes both legs' statistics as
-  * plain parquet under one root with the [[IndexPublish]] atomic
-  * versioned-publish protocol (readers never see a partial index), and
+  * plain parquet under one root, published, absorbed into and folded by
+  * the shared [[IndexLifecycle]] protocol (readers never see a partial
+  * index; deltas commit exactly once), and
   * [[servedTopK]] answers hybrid queries from disk with results
   * bit-identical to the in-session composition: the scoring tails are
   * the batch ops' OWN builders ([[graft.ops.TextOps.bm25Rank]],
@@ -41,10 +42,8 @@ import org.apache.spark.sql.functions._
   *
   * INCREMENTAL leg ([[appendDelta]]): arriving documents append their
   * postings/termstats/corpusstats partials and their vector codes as a
-  * NAMED DELTA under `deltas/{name}/` with the exactly-once
-  * [[DeltaLog]] protocol [[AnnIndex.appendDelta]] established
-  * (overwrite staging, one atomic `_DELTAS` swap, committed-only
-  * reads, replay no-op). Because BM25's per-term statistics are
+  * NAMED DELTA under `deltas/{name}/` ([[IndexLifecycle]]'s absorb
+  * step). Because BM25's per-term statistics are
   * integer counts over DISJOINT document sets, the served union is
   * bit-identical to a full re-export over the union corpus
   * (parity-spec'd): df sums by token, the corpus sums add, and the BQ
@@ -60,9 +59,18 @@ import org.apache.spark.sql.functions._
   * the postings would additionally be bucketed by `tok` for static
   * pruning; the layout is otherwise unchanged.
   */
-object HybridIndex {
+object HybridIndex extends IndexLifecycle {
 
   import graft.functions.VectorOps.vec_norm
+
+  /** The five components and their stored columns. */
+  private val Parts = Seq(
+    "postings"    -> Seq("tok", "doc_id", "dl", "tf"),
+    "termstats"   -> Seq("tok", "df"),
+    "corpusstats" -> Seq("n_docs", "nonempty_docs", "sum_dl"),
+    "bqcodes"     -> Seq("vec_id", "code"),
+    "vectors"     -> Seq("vec_id", "v", "n"))
+  private val PartCols = Parts.toMap
 
   /** Build + publish the hybrid index; returns the manifest
     * (component, rows) from read-back counts.
@@ -70,21 +78,23 @@ object HybridIndex {
   def export(spark: SparkSession, docs: DataFrame, docId: String,
              textCol: String, vectors: DataFrame, vecId: String,
              vecCol: String, path: String, bits: Int = 48, table: Int = 1,
-             maxDim: Int = 1024): DataFrame = {
-    val (root, next, prev) = IndexPublish.begin(spark, path)
-    writeComponents(spark, docs, docId, textCol, vectors, vecId, vecCol,
-      root, bits, table, maxDim)
-    val manifest = writeManifest(spark, root)
-    IndexPublish.publish(spark, path, next, prev)
-    manifest
-  }
+             maxDim: Int = 1024): DataFrame =
+    exportVersion(spark, path) { root =>
+      writeComponents(docs, docId, textCol, vectors, vecId, vecCol,
+        root, bits, table, maxDim)
+    }
+
+  /** avgdl derived from the stored integer sums in one division. */
+  private def withAvgdl(sums: DataFrame): DataFrame =
+    sums.select(col("n_docs"), col("nonempty_docs"), col("sum_dl"),
+      (col("sum_dl").cast("double") / col("nonempty_docs").cast("double"))
+        .as("avgdl"))
 
   /** One corpus slice's five components under `dir` — shared verbatim by
     * the base export and the delta staging, so the two legs cannot
     * drift in tokenization, statistics conventions, or code geometry.
     */
-  private def writeComponents(spark: SparkSession, docs: DataFrame,
-                              docId: String, textCol: String,
+  private def writeComponents(docs: DataFrame, docId: String, textCol: String,
                               vectors: DataFrame, vecId: String,
                               vecCol: String, dir: String, bits: Int,
                               table: Int, maxDim: Int): Unit = {
@@ -93,8 +103,8 @@ object HybridIndex {
     // the LEXICAL leg (postings + termstats + corpusstats, all fed by the
     // checkpointed postings) and the VECTOR leg (bqcodes + vectors, fed by
     // the embeddings table) touch disjoint inputs and write disjoint
-    // paths — run them concurrently (round 18, guide §2.6) so the five
-    // sequential component writes become two overlapped pipelines
+    // paths — run them concurrently so the five sequential component
+    // writes become two overlapped pipelines
     val lexLeg = () => {
       val postings = base
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
@@ -109,12 +119,9 @@ object HybridIndex {
       // convention. dl comes from the CHECKPOINTED postings (exactly the
       // >= 1-token docs, one row per (tok, doc)) — never a second
       // tokenization scan. Integer sums stored; avgdl is one division.
-      docs.agg(count(lit(1)).as("n_docs"))
+      withAvgdl(docs.agg(count(lit(1)).as("n_docs"))
         .crossJoin(postings.select("doc_id", "dl").distinct()
-          .agg(count(lit(1)).as("nonempty_docs"), sum("dl").as("sum_dl")))
-        .select(col("n_docs"), col("nonempty_docs"), col("sum_dl"),
-          (col("sum_dl").cast("double") / col("nonempty_docs").cast("double"))
-            .as("avgdl"))
+          .agg(count(lit(1)).as("nonempty_docs"), sum("dl").as("sum_dl"))))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/corpusstats")
     }
     val vecLeg = () => {
@@ -132,11 +139,11 @@ object HybridIndex {
 
   /** EXACTLY-ONCE incremental append — the lexical+vector twin of
     * [[AnnIndex.appendDelta]]: the arriving documents' five components
-    * are staged under `root/deltas/{name}/` with OVERWRITE semantics by
-    * the SAME builder the base export uses, then the name commits into
-    * the `_DELTAS` manifest by one atomic swap. Served results over the
-    * absorbed index are bit-identical to a full re-export of the union
-    * corpus (disjoint-doc integer statistics — see the class doc).
+    * are staged by the SAME builder the base export uses and committed
+    * as a named delta by [[IndexLifecycle]]'s absorb step. Served results
+    * over the absorbed index are bit-identical to a full re-export of the
+    * union corpus (disjoint-doc integer statistics — see the class doc),
+    * and a re-stage after a lost fold race writes identical bytes.
     * Returns true when newly committed, false on a replay.
     */
   def appendDelta(spark: SparkSession, docs: DataFrame, docId: String,
@@ -148,169 +155,61 @@ object HybridIndex {
     appendDeltaHooked(spark, docs, docId, textCol, vectors, vecId, vecCol,
       path, name, bits, table, maxDim, () => (), refreshManifest)
 
-  /** [[appendDelta]] with the [[AnnIndex.appendDeltaHooked]] test seam
-    * and the same absorber-side half of the concurrent-fold recheck:
-    * after the commit, the root re-resolves, and if an out-of-band
-    * [[compact]] published meanwhile without this name (folded,
-    * migrated, or burned), the append re-runs against the new root —
-    * identical bytes, every component being corpus-independent or
-    * disjoint-additive.
-    */
+  /** [[appendDelta]] with the [[IndexLifecycle]] absorb test seam. */
   private[graft] def appendDeltaHooked(spark: SparkSession, docs: DataFrame,
       docId: String, textCol: String, vectors: DataFrame, vecId: String,
       vecCol: String, path: String, name: String, bits: Int, table: Int,
       maxDim: Int, beforeCommit: () => Unit,
-      refreshManifest: Boolean = true): Boolean = {
-    require(DeltaLog.validName(name), s"bad delta name '$name'")
-    var root = IndexPublish.resolve(spark, path)
-    requireIntegerSums(spark, root)
-    if (DeltaLog.burned(spark, root).contains(name)) return false
-    var hook = beforeCommit
-    var rounds = 0
-    var done = false
-    while (!done) {
-      rounds += 1
-      if (rounds > 10) throw new IllegalStateException(
-        s"appendDelta($name): no stable version after $rounds rounds")
-      writeComponents(spark, docs, docId, textCol, vectors, vecId, vecCol,
-        s"$root/deltas/$name", bits, table, maxDim)
-      hook(); hook = () => () // the injected race fires once
-      DeltaLog.commit(spark, root, name)
-      val now = IndexPublish.resolve(spark, path)
-      if (now == root || DeltaLog.burned(spark, now).contains(name)) done = true
-      else root = now // a fold won the race: re-append against its root
+      refreshManifest: Boolean = true): Boolean =
+    absorb(spark, path, name, beforeCommit, refreshManifest) { (_, dir) =>
+      writeComponents(docs, docId, textCol, vectors, vecId, vecCol, dir,
+        bits, table, maxDim)
     }
-    // diagnostic counts; _DELTAS bears correctness. Batch absorbers pass
-    // refreshManifest = false and refresh once per commit batch (round
-    // 18, §2.4): each refresh re-counts the whole served index.
-    if (refreshManifest) writeManifest(spark, root)
-    true
-  }
 
-  /** COMPACTION for the hybrid absorb path — [[AnnIndex.compact]]'s
-    * lexical twin: fold base + committed deltas into a fresh versioned
-    * base by PURE REWRITE of the stored tables (no re-tokenization —
-    * postings/bqcodes/vectors union as rows, termstats merges by
-    * token-sum, corpusstats merges its integer sums and re-derives
-    * avgdl), published atomically with the folded names burned into the
-    * new version's `_ABSORBED` ledger. Served bits are unchanged
-    * (spec-pinned) and a long-lived absorb stream stops unioning one
-    * small directory per delta into every query. No-op below
-    * `minDeltas`.
+  /** The hybrid fold: a PURE REWRITE of the stored tables (no
+    * re-tokenization) — postings/bqcodes/vectors union as rows, termstats
+    * merges by token-sum, corpusstats merges its integer sums and
+    * re-derives avgdl. Served bits are unchanged (spec-pinned).
     */
-  def compact(spark: SparkSession, path: String,
-              minDeltas: Int = 1): DataFrame =
-    compactHooked(spark, path, minDeltas, () => ())
-
-  /** [[compact]] with the [[AnnIndex.compactHooked]] test seam; like
-    * the ANN fold it pins ONE `_DELTAS` snapshot through every
-    * component write, publishes, then sweeps late-committed deltas
-    * into the new version ([[DeltaLog.migrateLate]]) — safe to run
-    * out-of-band while the absorb stream keeps committing.
-    */
-  private[graft] def compactHooked(spark: SparkSession, path: String,
-      minDeltas: Int, beforePublish: () => Unit): DataFrame = {
-    val root = IndexPublish.resolve(spark, path)
-    requireIntegerSums(spark, root)
-    val deltas = DeltaLog.committed(spark, root)
-    if (deltas.size < math.max(1, minDeltas))
-      return spark.read.parquet(s"$root/manifest")
-    val (newRoot, next, prev) = IndexPublish.begin(spark, path)
-    // the five component folds read disjoint stored tables and write
-    // disjoint paths — overlap their jobs (round 18, guide §2.6)
-    graft.core.Jobs.inParallel(Seq(
-      () => unionPartsOf(spark, root, "postings",
-          Seq("tok", "doc_id", "dl", "tf"), deltas)
-        .write.mode("overwrite").parquet(s"$newRoot/postings"),
-      () => unionPartsOf(spark, root, "termstats", Seq("tok", "df"), deltas)
-        .groupBy("tok").agg(sum("df").as("df"))
-        .write.mode("overwrite").parquet(s"$newRoot/termstats"),
-      () => unionPartsOf(spark, root, "corpusstats",
-          Seq("n_docs", "nonempty_docs", "sum_dl"), deltas)
-        .agg(sum("n_docs").as("n_docs"),
-          sum("nonempty_docs").as("nonempty_docs"), sum("sum_dl").as("sum_dl"))
-        .select(col("n_docs"), col("nonempty_docs"), col("sum_dl"),
-          (col("sum_dl").cast("double") / col("nonempty_docs").cast("double"))
-            .as("avgdl"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$newRoot/corpusstats"),
-      () => unionPartsOf(spark, root, "bqcodes", Seq("vec_id", "code"), deltas)
-        .write.mode("overwrite").parquet(s"$newRoot/bqcodes"),
-      () => unionPartsOf(spark, root, "vectors", Seq("vec_id", "v", "n"), deltas)
-        .write.mode("overwrite").parquet(s"$newRoot/vectors")))
-    DeltaLog.writeAbsorbed(spark, newRoot,
-      DeltaLog.absorbed(spark, root) ++ deltas)
-    beforePublish()
-    IndexPublish.publish(spark, path, next, prev)
-    DeltaLog.migrateLate(spark, root, newRoot, deltas.toSet)
-    writeManifest(spark, newRoot)
-  }
-
-  /** Run a compaction when due — the out-of-band maintenance entry
-    * ([[AnnIndex.maintain]]'s lexical twin). Returns true when a fold
-    * ran.
-    */
-  def maintain(spark: SparkSession, path: String, minDeltas: Int = 8): Boolean = {
-    val due = DeltaLog.committed(spark,
-      IndexPublish.resolve(spark, path)).size >= math.max(1, minDeltas)
-    if (due) compact(spark, path, minDeltas)
-    due
-  }
+  protected def componentFolds(spark: SparkSession, root: String,
+      newRoot: String, deltas: Seq[String]): Seq[() => Unit] =
+    Parts.map { case (c, _) => () =>
+      val merged = served(spark, root, c, deltas)
+      (if (c == "corpusstats") merged.coalesce(1) else merged)
+        .write.mode("overwrite").parquet(s"$newRoot/$c")
+    }
 
   // ---------------------------------------------------- served reading rule
 
-  /** Base component plus every COMMITTED delta's — the one reading rule
-    * of the serving paths (the [[AnnIndex.vectorLists]] discipline).
-    */
-  private def unionParts(spark: SparkSession, root: String, component: String,
-                         cols: Seq[String]): DataFrame =
-    unionPartsOf(spark, root, component, cols,
-      DeltaLog.committed(spark, root))
-
-  /** [[unionParts]] over an EXPLICIT delta snapshot — the compaction
-    * fold pins one `_DELTAS` read through all five component writes so
-    * a mid-fold commit cannot make them disagree.
-    */
-  private def unionPartsOf(spark: SparkSession, root: String,
-                           component: String, cols: Seq[String],
-                           deltas: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(s"$root/$component")
-      .select(cols.map(col): _*)
-    deltas.foldLeft(base) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(s"$root/deltas/$d/$component")
-        .select(cols.map(col): _*))
-    }
+  /** Component `c` as served: base plus `deltas`, the statistics merged. */
+  private def served(spark: SparkSession, root: String, c: String,
+                     deltas: Seq[String]): DataFrame = c match {
+    case "termstats"   => unionParts(spark, root, c, PartCols(c), deltas)
+      .groupBy("tok").agg(sum("df").as("df"))
+    case "corpusstats" => corpusstatsAll(spark, root, deltas)
+    case _             => unionParts(spark, root, c, PartCols(c), deltas)
   }
 
-  /** Merged per-term document frequencies: integer df partials sum by
-    * token across base + deltas (disjoint document sets — exact).
+  /** Merged one-row corpus statistics: the stored integer sums add
+    * (disjoint document sets — exact) and avgdl re-derives in one
+    * division — bit-identical to a full export of the union corpus.
+    * Pre-round-16 exports stored only (n_docs, avgdl) — such a LEGACY
+    * base still serves as-is when it is the only part (its avgdl is
+    * already final), but it cannot combine with deltas: the integer sums
+    * are gone, so the merge is checked by [[requireMutable]] at the
+    * mutation entries and double-checked here, failing with a re-export
+    * message instead of an AnalysisException over a missing column.
     */
-  private def termstatsAll(spark: SparkSession, root: String): DataFrame =
-    unionParts(spark, root, "termstats", Seq("tok", "df"))
-      .groupBy("tok").agg(sum("df").as("df"))
-
-  /** Merged one-row corpus statistics: the stored integer sums add and
-    * avgdl re-derives in one division — bit-identical to a full export
-    * of the union corpus. Pre-round-16 exports stored only
-    * (n_docs, avgdl) — such a LEGACY base still serves as-is when it is
-    * the only part (its avgdl is already final), but it cannot combine
-    * with deltas: the integer sums are gone, so the merge is checked by
-    * [[requireIntegerSums]] at the mutation entries and double-checked
-    * here, failing with a re-export message instead of an
-    * AnalysisException over a missing column.
-    */
-  private def corpusstatsAll(spark: SparkSession, root: String): DataFrame = {
+  private def corpusstatsAll(spark: SparkSession, root: String,
+                             deltas: Seq[String]): DataFrame = {
     val base = spark.read.parquet(s"$root/corpusstats")
     if (!base.columns.contains("sum_dl")) {
-      if (DeltaLog.committed(spark, root).nonEmpty)
-        throw new IllegalStateException(legacyMsg(root))
+      if (deltas.nonEmpty) throw new IllegalStateException(legacyMsg(root))
       base.select(col("n_docs"), col("avgdl"))
-    } else unionParts(spark, root, "corpusstats",
-      Seq("n_docs", "nonempty_docs", "sum_dl"))
-      .agg(sum("n_docs").as("n_docs"),
-        sum("nonempty_docs").as("nonempty_docs"), sum("sum_dl").as("sum_dl"))
-      .select(col("n_docs"),
-        (col("sum_dl").cast("double") / col("nonempty_docs").cast("double"))
-          .as("avgdl"))
+    } else withAvgdl(
+      unionParts(spark, root, "corpusstats", PartCols("corpusstats"), deltas)
+        .agg(sum("n_docs").as("n_docs"),
+          sum("nonempty_docs").as("nonempty_docs"), sum("sum_dl").as("sum_dl")))
   }
 
   private def legacyMsg(root: String): String =
@@ -322,38 +221,19 @@ object HybridIndex {
   /** Loud guard for the mutation entries: a legacy (2-column) base can
     * serve read-only but must not grow deltas it can never merge.
     */
-  private def requireIntegerSums(spark: SparkSession, root: String): Unit =
+  override protected def requireMutable(spark: SparkSession, root: String): Unit =
     if (!spark.read.parquet(s"$root/corpusstats").columns.contains("sum_dl"))
       throw new IllegalStateException(legacyMsg(root))
-
-  private val Components =
-    Seq("postings", "termstats", "corpusstats", "bqcodes", "vectors")
 
   /** Read-back counts through the SERVED reading rule (base + committed
     * deltas; termstats/corpusstats counted after their merge).
     */
-  private def writeManifest(spark: SparkSession, root: String): DataFrame = {
-    val manifest = Components.map { c =>
-      val df = c match {
-        case "termstats"   => termstatsAll(spark, root)
-        case "corpusstats" => corpusstatsAll(spark, root)
-        case "postings"    => unionParts(spark, root, c,
-          Seq("tok", "doc_id", "dl", "tf"))
-        case "bqcodes"     => unionParts(spark, root, c, Seq("vec_id", "code"))
-        case _             => unionParts(spark, root, c, Seq("vec_id", "v", "n"))
-      }
-      df.agg(count(lit(1)).as("rows"))
+  protected def manifestPlan(spark: SparkSession, root: String): DataFrame = {
+    val deltas = committedDeltas(spark, root)
+    Parts.map { case (c, _) =>
+      served(spark, root, c, deltas).agg(count(lit(1)).as("rows"))
         .select(lit(c).as("component"), col("rows"))
     }.reduce(_ unionByName _).orderBy("component")
-    // ONE counting action (round 18, the AnnIndex.writeManifest
-    // treatment): collect the 5 summary rows, write and return the LOCAL
-    // relation — snapshot semantics (immune to later refreshes of the
-    // same path), no per-consumer re-read, and the write itself is a
-    // driver-local one-task job.
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(manifest.collect(): _*), manifest.schema)
-    local.write.mode("overwrite").parquet(s"$root/manifest")
-    local
   }
 
   /** Answer hybrid top-k FROM THE EXPORTED TABLES: the BM25 leg scores
@@ -401,18 +281,18 @@ object HybridIndex {
     // resolve ONCE so every component comes from the same version even if
     // a rebuild publishes mid-query
     val root = IndexPublish.resolve(spark, path)
+    val deltas = committedDeltas(spark, root)
     val qt = lexQueries.select(col("qid"), col("tok"))
     val terms = qt.select("tok").distinct()
-    val hits = unionParts(spark, root, "postings",
-        Seq("tok", "doc_id", "dl", "tf"))
+    val hits = served(spark, root, "postings", deltas)
       .join(broadcast(terms), "tok")
       .select("doc_id", "dl", "tok", "tf")
     // df partials filtered to the query terms BEFORE the merge sum — the
     // broadcast join pushes down to every part's parquet scan
-    val dfreq = unionParts(spark, root, "termstats", Seq("tok", "df"))
+    val dfreq = unionParts(spark, root, "termstats", PartCols("termstats"), deltas)
       .join(broadcast(terms), "tok")
       .groupBy("tok").agg(sum("df").as("df"))
-    val stats = corpusstatsAll(spark, root)
+    val stats = corpusstatsAll(spark, root, deltas).select("n_docs", "avgdl")
     val lex = graft.ops.TextOps.bm25Rank(hits, dfreq, stats, qt, legK, k1, b)
       .select(col("qid").as("query_id"), col("doc_id"), col("rank"))
     val q0 = queryVecs
@@ -421,8 +301,8 @@ object HybridIndex {
       .withColumn("qn", vec_norm(col("qv")))
       .withColumn("qcode", Similarity.lshBucket(col("qv"), bits, table, maxDim))
     val vec = Similarity.bqRank(
-        unionParts(spark, root, "bqcodes", Seq("vec_id", "code")),
-        unionParts(spark, root, "vectors", Seq("vec_id", "v", "n"))
+        served(spark, root, "bqcodes", deltas),
+        served(spark, root, "vectors", deltas)
           .select(col("vec_id"), col("v").as("cv"), col("n").as("cn")),
         q0, legK, cands)
       .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))

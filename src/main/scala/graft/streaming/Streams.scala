@@ -911,7 +911,7 @@ object Streams {
     * which supersedes all deltas under a new published version.
     *
     * `compactEvery` > 0 folds the committed deltas into a fresh
-    * versioned base ([[graft.similarity.AnnIndex.compact]] — frozen
+    * versioned base ([[graft.similarity.AnnIndex.maintain]] — frozen
     * quantizers, a pure rewrite) once that many have accumulated, so a
     * long-lived absorb stream never grows an unbounded per-read union
     * of small delta directories. The compaction runs inside the same
@@ -946,7 +946,7 @@ object Streams {
           graft.similarity.AnnIndex.appendDelta(batch.sparkSession, batch,
             "vec_id", "v", indexPath, f"d$id%06d", assignNProbe)
           if (compactEvery > 0)
-            graft.similarity.AnnIndex.compact(batch.sparkSession, indexPath,
+            graft.similarity.AnnIndex.maintain(batch.sparkSession, indexPath,
               minDeltas = compactEvery)
         }
         ()
@@ -987,7 +987,7 @@ object Streams {
             b.select(col("doc_id").as("vec_id"), col("v")), "vec_id", "v",
             indexPath, f"d$id%06d")
           if (compactEvery > 0)
-            graft.similarity.HybridIndex.compact(b.sparkSession, indexPath,
+            graft.similarity.HybridIndex.maintain(b.sparkSession, indexPath,
               minDeltas = compactEvery)
         }
         ()

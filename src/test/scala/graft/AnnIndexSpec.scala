@@ -285,6 +285,30 @@ class AnnIndexSpec extends SparkTestBase {
     assert(!AnnIndex.appendDelta(spark, extra, "vec_id", "embedding", p, "d3"))
   }
 
+  test("compact below minDeltas returns a manifest snapshot that a later absorb cannot move") {
+    val p = graft.io.IoScratch.dir + "/ann_compact_early"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+      .delete(new org.apache.hadoop.fs.Path(p), true)
+    val a = embs.filter(col("vec_id") < 300)
+    val b1 = embs.filter(col("vec_id") >= 300 && col("vec_id") < 400)
+    val b2 = embs.filter(col("vec_id") >= 400)
+    AnnIndex.export(spark, a, "vec_id", "embedding", p,
+      cells = 4, lloydIters = 3, m = 4, ks = 4, pqIters = 3)
+    assert(AnnIndex.appendDelta(spark, b1, "vec_id", "embedding", p, "d1"))
+    val v1 = AnnIndex.resolve(spark, p)
+    val held = AnnIndex.compact(spark, p, minDeltas = 5) // below: early return
+    assert(AnnIndex.resolve(spark, p) == v1)
+    // the refresh rewrites the manifest files of the same root
+    assert(AnnIndex.appendDelta(spark, b2, "vec_id", "embedding", p, "d2",
+      refreshManifest = true))
+    val rows = held.as[(String, Long, Long)].collect().toSeq
+    val n1 = a.count() + b1.count()
+    assert(rows.filter(_._1 == "vectors").map(_._3).sum == n1)
+    assert(rows.find(_._1 == "codes").get._3 == n1,
+      "the held early-return manifest must keep its own counts")
+  }
+
   test("out-of-band compact: a delta committed DURING the fold migrates into the new version") {
     val p = graft.io.IoScratch.dir + "/ann_compact_race1"
     val ref = graft.io.IoScratch.dir + "/ann_compact_race1_ref"

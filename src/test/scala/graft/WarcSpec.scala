@@ -142,6 +142,22 @@ class WarcSpec extends SparkTestBase {
       lenient.filter($"warc_type" === "response").count() >= 1)
   }
 
+  test("directory read skips _- and .-prefixed metadata files beside the archives") {
+    import spark.implicits._
+    val path = graft.io.IoScratch.dir + "/warc_landing"
+    Warc.write((1L to 10L).map(i => rec(i, s"body-$i")).toDS().repartition(2), path)
+    // metadata a committer or the local checksum FS leaves in a landing
+    // directory: non-empty, and not WARC — a strict parse would throw
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, ".x.crc"),
+      "crc-bytes".getBytes("UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "_committed"),
+      "{\"added\":[]}".getBytes("UTF-8"))
+    val back = Warc.read(spark, path)
+    assert(back.filter($"warc_type" === "response").count() == 10L)
+    assert(back.select("file").as[String].collect()
+      .forall(_.endsWith(".warc.gz")))
+  }
+
   test("mediaText: a planted corrupt PDF flows through the batch dispatch as empty text, no throw") {
     import spark.implicits._
     def http(ctype: String, body: Array[Byte]): Array[Byte] =
