@@ -1,7 +1,8 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** ANN index PERSISTENCE — the serving handoff of a 100 TB index build.
   *
@@ -43,9 +44,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: the quantizer/codebook fits are the bounded driver pulls
   * of [[graft.chain.KMeans]]; the corpus is written once, hive-
   * partitioned on the cell id (cells ∝ n keeps directories scan-sized);
-  * the manifest is one read-back count per component. At 100 TB train
-  * both quantizers on a [[graft.ops.Sampling.hashSample]] and raise
-  * `cells` — the layout is unchanged.
+  * the manifest is one read-back count per component, and those counts
+  * read no column data: the quantizers are read through their declared
+  * schemas ([[CentroidSchema]], [[CodebookSchema]]) and the lists and
+  * codes through their `cell` column alone, so no count pays a schema-
+  * inference job. At 100 TB train both quantizers on a
+  * [[graft.ops.Sampling.hashSample]] and raise `cells` — the layout is
+  * unchanged.
   */
 object AnnIndex extends IndexLifecycle {
 
@@ -53,6 +58,28 @@ object AnnIndex extends IndexLifecycle {
 
   private val VectorCols = Seq("vec_id", "v", "n", "cell")
   private val CodeCols = Seq("vec_id", "cell", "codes", "recon_err")
+
+  /** The declared schemas of the components [[export]] writes from
+    * driver values: every read of them passes its schema, so none runs
+    * a schema-inference job. `vectors/` and `codes/` carry the caller's
+    * `vec_id` type and keep Spark's inference on their full-row reads.
+    */
+  val CentroidSchema: StructType = StructType(Seq(
+    StructField("cell", IntegerType), StructField("v", ArrayType(DoubleType))))
+  val CodebookSchema: StructType = StructType(Seq(
+    StructField("sub", IntegerType), StructField("cluster", IntegerType),
+    StructField("v", ArrayType(DoubleType))))
+
+  /** The counting schema of the lists and codes: the `cell` column only
+    * (the hive partition column of `vectors/`, a data column of `codes/`).
+    */
+  private val CellSchema = StructType(Seq(StructField("cell", IntegerType)))
+
+  private def centroids(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(CentroidSchema).parquet(s"$root/centroids")
+
+  private def codebooks(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(CodebookSchema).parquet(s"$root/codebooks")
 
   /** Write the inverted lists hive-partitioned by `cell`, CLUSTERED
     * first when the cell count warrants it: repartition on the cell id
@@ -160,25 +187,27 @@ object AnnIndex extends IndexLifecycle {
     }
 
   /** Per-cell rows for the inverted lists, -1 for the unpartitioned
-    * components; the lists and codes counted through the serving reading
-    * rule ([[vectorLists]] / [[pqCodes]]), so the manifest can never
-    * under-count absorbed shards.
+    * components; the lists and codes counted over the serving reading
+    * rule's parts (base plus committed deltas, as [[vectorLists]] /
+    * [[pqCodes]] read them), so the manifest can never under-count
+    * absorbed shards. Count-only: no part reads column data or infers a
+    * schema, so a delta whose `vec_id` type differs from the base still
+    * counts. The components are tagged and counted by ONE aggregation,
+    * one shuffle instead of one per component.
     */
   protected def manifestPlan(spark: SparkSession, root: String): DataFrame = {
     val deltas = committedDeltas(spark, root)
-    val perCell = unionParts(spark, root, "vectors", VectorCols, deltas)
-      .groupBy(col("cell").cast("long").as("cell"))
+    def cells(component: String) =
+      unionParts(spark, root, component, Seq("cell"), deltas, Some(CellSchema))
+    def tagged(component: String, rows: DataFrame, cell: Column) =
+      rows.select(lit(component).as("component"), cell.cast("long").as("cell"))
+    Seq(tagged("vectors", cells("vectors"), col("cell")),
+      tagged("centroids", centroids(spark, root), lit(-1L)),
+      tagged("codebooks", codebooks(spark, root), lit(-1L)),
+      tagged("codes", cells("codes"), lit(-1L)))
+      .reduce(_ unionByName _)
+      .groupBy("component", "cell")
       .agg(count(lit(1)).as("rows"))
-      .select(lit("vectors").as("component"), col("cell"), col("rows"))
-    val flat = Seq("centroids", "codebooks").map { c =>
-      spark.read.parquet(s"$root/$c")
-        .agg(count(lit(1)).as("rows"))
-        .select(lit(c).as("component"), lit(-1L).as("cell"), col("rows"))
-    }.reduce(_ unionByName _)
-      .unionByName(unionParts(spark, root, "codes", CodeCols, deltas)
-        .agg(count(lit(1)).as("rows"))
-        .select(lit("codes").as("component"), lit(-1L).as("cell"), col("rows")))
-    perCell.unionByName(flat).orderBy("component", "cell")
   }
 
   /** INCREMENTAL index maintenance — the daily-shard path: append new
@@ -252,12 +281,12 @@ object AnnIndex extends IndexLifecycle {
     */
   protected def componentFolds(spark: SparkSession, root: String,
       newRoot: String, deltas: Seq[String]): Seq[() => Unit] = Seq(
-    () => spark.read.parquet(s"$root/centroids").coalesce(1)
+    () => centroids(spark, root).coalesce(1)
       .write.mode("overwrite").parquet(s"$newRoot/centroids"),
-    () => spark.read.parquet(s"$root/codebooks").coalesce(1)
+    () => codebooks(spark, root).coalesce(1)
       .write.mode("overwrite").parquet(s"$newRoot/codebooks"),
     () => writeClustered(unionParts(spark, root, "vectors", VectorCols, deltas),
-      s"$newRoot/vectors", spark.read.parquet(s"$root/centroids").count().toInt),
+      s"$newRoot/vectors", centroids(spark, root).count().toInt),
     () => unionParts(spark, root, "codes", CodeCols, deltas)
       .write.mode("overwrite").parquet(s"$newRoot/codes"))
 
@@ -276,18 +305,21 @@ object AnnIndex extends IndexLifecycle {
     unionParts(spark, root, "codes", CodeCols, committedDeltas(spark, root))
 
   /** The coarse quantizer from an exported index (cells×dim doubles —
-    * the bounded serving-process pull).
+    * the bounded serving-process pull, one scan job; the unique `cell`
+    * key orders the rows on the driver).
     */
   def loadCentroids(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"${resolve(spark, path)}/centroids").orderBy("cell")
-      .collect().map(_.getSeq[Double](1).toSeq).toSeq
+    centroids(spark, resolve(spark, path)).collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toSeq).toSeq
 
-  /** PQ codebooks from an exported index (m×ks×subDim doubles). */
+  /** PQ codebooks from an exported index (m×ks×subDim doubles; one scan
+    * job, ordered on the driver by the unique (`sub`, `cluster`) key).
+    */
   def loadCodebooks(spark: SparkSession, path: String): Seq[Seq[Seq[Double]]] =
-    spark.read.parquet(s"${resolve(spark, path)}/codebooks")
-      .orderBy("sub", "cluster")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](2).toSeq)).toSeq
-      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
+    codebooks(spark, resolve(spark, path)).collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toSeq))
+      .sortBy(_._1).toSeq
+      .groupBy(_._1._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
 
   /** Answer IVF top-k FROM THE EXPORTED TABLES — the serving path: load
     * the (tiny) centroid table, probe each query's nProbe nearest cells,

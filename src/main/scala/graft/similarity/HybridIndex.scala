@@ -233,7 +233,7 @@ object HybridIndex extends IndexLifecycle {
     Parts.map { case (c, _) =>
       served(spark, root, c, deltas).agg(count(lit(1)).as("rows"))
         .select(lit(c).as("component"), col("rows"))
-    }.reduce(_ unionByName _).orderBy("component")
+    }.reduce(_ unionByName _)
   }
 
   /** Answer hybrid top-k FROM THE EXPORTED TABLES: the BM25 leg scores

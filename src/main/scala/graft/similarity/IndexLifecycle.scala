@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The atomic versioned-publish protocol shared by every persisted index
   * ([[AnnIndex]], [[HybridIndex]]): build under `path/v{N}`, create the
@@ -383,12 +384,17 @@ private[graft] trait IndexLifecycle {
   /** The one reading rule of the serving paths, the manifest and the
     * fold: base `component` plus each delta's in `deltas` (the committed
     * set, or a fold's pinned snapshot). Read with `basePath` so a
-    * hive-partitioned component keeps its partition column.
+    * hive-partitioned component keeps its partition column. A declared
+    * `schema` replaces each part's schema-inference job (and reads only
+    * its columns); without one every part infers its own.
     */
   protected def unionParts(spark: SparkSession, root: String, component: String,
-                           cols: Seq[String], deltas: Seq[String]): DataFrame = {
-    def part(dir: String) = spark.read.option("basePath", dir).parquet(dir)
-      .select(cols.map(col): _*)
+                           cols: Seq[String], deltas: Seq[String],
+                           schema: Option[StructType] = None): DataFrame = {
+    def part(dir: String) = {
+      val reader = spark.read.option("basePath", dir)
+      schema.fold(reader)(reader.schema).parquet(dir).select(cols.map(col): _*)
+    }
     deltas.foldLeft(part(s"$root/$component")) { (acc, d) =>
       acc.unionByName(part(s"$root/deltas/$d/$component"))
     }
@@ -400,15 +406,25 @@ private[graft] trait IndexLifecycle {
   /** ONE counting action: collect the summary rows, write and return the
     * LOCAL relation — immune to later refreshes of the same root (which
     * would delete the files under a lazy read-back), no per-consumer
-    * re-read, and the write is a driver-local one-task job.
+    * re-read, and the write is a driver-local one-task job landing one
+    * file.
     */
   private def snapshotManifest(spark: SparkSession, root: String,
                                plan: DataFrame): DataFrame = {
     val local = snapshot(spark, plan)
-    local.write.mode("overwrite").parquet(s"$root/manifest")
+    local.coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
     local
   }
 
-  private def snapshot(spark: SparkSession, plan: DataFrame): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(plan.collect(): _*), plan.schema)
+  /** The collected rows of `plan` as a local relation, ORDERED ON THE
+    * DRIVER by the manifest key — `component`, then `cell` where the
+    * column exists: a manifest is a handful of rows, so a Spark sort
+    * would only add a range-exchange job.
+    */
+  private def snapshot(spark: SparkSession, plan: DataFrame): DataFrame = {
+    val byCell = plan.columns.contains("cell")
+    val rows = plan.collect().sortBy(r => (r.getAs[String]("component"),
+      if (byCell) r.getAs[Long]("cell") else 0L))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.similarity.{AnnIndex, Similarity}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Round-trip parity for the exported ANN index: the serving path over
   * the persisted tables must answer exactly what the in-session
@@ -418,6 +419,83 @@ class AnnIndexSpec extends SparkTestBase {
       assert(!AnnIndex.appendDelta(spark, shard, "vec_id", "embedding",
         p, f"s$i%02d"))
     }
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: quantizer loads run one job each; a refreshing appendDelta at most 12") {
+    val p = graft.io.IoScratch.dir + "/ann_job_budget"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+      .delete(new org.apache.hadoop.fs.Path(p), true)
+    AnnIndex.export(spark, embs.filter(col("vec_id") < 300), "vec_id", "embedding",
+      p, cells = 4, lloydIters = 3, m = 4, ks = 4, pqIters = 3)
+    // the shard's own read (and its schema inference) happens here, not
+    // inside the counted call
+    val shard = embs.filter(col("vec_id") >= 300 && col("vec_id") < 350)
+    val (centers, centroidJobs) = jobsOf(AnnIndex.loadCentroids(spark, p))
+    assert(centers.length == 4)
+    assert(centroidJobs == 1, s"loadCentroids ran $centroidJobs jobs")
+    val (cbs, codebookJobs) = jobsOf(AnnIndex.loadCodebooks(spark, p))
+    assert(cbs.length == 4 && cbs.forall(_.length == 4))
+    assert(codebookJobs == 1, s"loadCodebooks ran $codebookJobs jobs")
+    val (added, appendJobs) = jobsOf(AnnIndex.appendDelta(spark, shard,
+      "vec_id", "embedding", p, "d1", refreshManifest = true))
+    assert(added)
+    assert(appendJobs <= 12, s"appendDelta ran $appendJobs jobs")
+  }
+
+  test("declared quantizer schemas match what export writes; manifest equals an independent recount") {
+    val p = graft.io.IoScratch.dir + "/ann_schema_recount"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+      .delete(new org.apache.hadoop.fs.Path(p), true)
+    AnnIndex.export(spark, embs.filter(col("vec_id") < 300), "vec_id", "embedding",
+      p, cells = 4, lloydIters = 3, m = 4, ks = 4, pqIters = 3)
+    val v1 = AnnIndex.resolve(spark, p)
+    // names and types, nullability ignored
+    def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> (f.dataType match {
+      case ArrayType(t, _) => ArrayType(t)
+      case t => t
+    }))
+    def inferred(c: String) = shape(spark.read.parquet(s"$v1/$c").schema)
+    assert(inferred("centroids") == shape(AnnIndex.CentroidSchema))
+    assert(inferred("codebooks") == shape(AnnIndex.CodebookSchema))
+    assert(AnnIndex.appendDelta(spark, embs.filter(col("vec_id") >= 300 &&
+      col("vec_id") < 400), "vec_id", "embedding", p, "d1"))
+    assert(AnnIndex.appendDelta(spark, embs.filter(col("vec_id") >= 400),
+      "vec_id", "embedding", p, "d2"))
+    val root = AnnIndex.resolve(spark, p)
+    // one file, rows in manifest-key order
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/manifest"))
+      .count(_.getPath.getName.endsWith(".parquet")) == 1)
+    val rows = spark.read.parquet(s"$root/manifest")
+      .as[(String, Long, Long)].collect().toSeq
+    assert(rows == rows.sortBy(r => (r._1, r._2)))
+    val manifest = rows.toSet
+    val perCell = AnnIndex.vectorLists(spark, root).groupBy("cell").count()
+      .as[(Int, Long)].collect().map { case (c, n) => ("vectors", c.toLong, n) }
+    val recount = perCell.toSet ++ Set(
+      ("centroids", -1L, 4L), ("codebooks", -1L, 16L),
+      ("codes", -1L, AnnIndex.pqCodes(spark, root).count()))
+    assert(manifest == recount)
+    assert(perCell.map(_._3).sum == embs.count())
   }
 
   private val anyPublished = "_PUBLISHED"
