@@ -42,17 +42,14 @@ git -C "$change" worktree add --quiet --detach "$tmp/parent" "$rev"
 
 # run_side <dir> <jsonl> <seed>: one run; its record line is appended
 run_side() {
-  local dir=$1 jsonl=$2 seed=$3 log
-  log="$tmp/run.log"
-  if (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$seed" \
-        --seconds "$seconds" --trace 0) > "$log" 2> "$tmp/run.err"; then
-    grep '^{"record"' "$log" >> "$jsonl" || true
-  else
+  local dir=$1 jsonl=$2 seed=$3
+  (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$seed" \
+      --seconds "$seconds" --trace 0) > "$tmp/run.log" 2> "$tmp/run.err" || {
     echo "perf_ab: run failed in $dir (seed $seed):" >&2
     tail -n 5 "$tmp/run.err" >&2
-    grep '^{"record"' "$log" >> "$jsonl" || true
-  fi
-  tail -n 1 "$log"
+  }
+  grep '^{"record"' "$tmp/run.log" >> "$jsonl" || true
+  tail -n 1 "$tmp/run.log"
 }
 
 i=0
