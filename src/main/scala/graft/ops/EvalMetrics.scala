@@ -5,6 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Distributed model-evaluation metrics over prediction tables — the
   * "score a trained model on 10^9 held-out rows" pass.
+  *
+  * `partitions` on [[aucExact]] / [[aucByGroup]] is the range width of
+  * [[WindowOps.rankFunctions]]: derived from the scored frame's size by
+  * default ([[WindowOps.rankWidth]]; width 1 is the plain window), used as
+  * given when positive. On [[prCurve]] it is [[PrefixSum]]'s fixed width.
   */
 object EvalMetrics {
 
@@ -30,7 +35,7 @@ object EvalMetrics {
     * One row per group: (group, n_pos, n_neg, auc).
     */
   def aucByGroup(df: DataFrame, groupCol: String, labelCol: String,
-                 scoreCol: String, partitions: Int = 32): DataFrame = {
+                 scoreCol: String, partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     val lab0 = col(labelCol).cast("int")
     val lab = when(lab0 === 0 || lab0 === 1, lab0)
       .otherwise(raise_error(concat(
@@ -102,7 +107,7 @@ object EvalMetrics {
   }
 
   def aucExact(df: DataFrame, labelCol: String, scoreCol: String,
-               partitions: Int = 32): DataFrame = {
+               partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     val lab0 = col(labelCol).cast("int")
     val lab = when(lab0 === 0 || lab0 === 1, lab0)
       .otherwise(raise_error(concat(

@@ -17,29 +17,37 @@ import org.apache.spark.sql.functions._
   *
   * Shape at 100 TB: one two-phase hash aggregation; five numbers per
   * group cross the wire.
+  *
+  * `partitions`, on the rank-based operators (winsorize, madPerGroup,
+  * flagOutliers, psi, psiByGroup), is the range width of the
+  * [[WindowOps]] exact-rank scaffold: by default
+  * ([[WindowOps.DerivedWidth]]) each ranked frame gets a width derived
+  * from its size estimate ([[WindowOps.rankWidth]]) — 1, the plain
+  * window, for a frame within one advisory partition; a positive value
+  * is used as given.
   */
 object StatsOps {
 
   /** Winsorize: clip a column at its GLOBAL [loQ, hiQ] discrete quantiles
     * (outlier capping before scale-sensitive statistics/training) — the
-    * bounds come from the distributed quantile pass and broadcast back as
-    * a 1-row table, so the clip itself is a pure codegen'd projection.
+    * bounds come from the distributed quantile pass, collected on the
+    * driver, and enter the plan as literals, so the clip itself is a pure
+    * codegen'd projection (no join).
     * Adds `<valueCol>_w` (double); bounds follow `quantile_disc`
     * semantics (engine-replayable, no interpolated phantom values).
     */
   def winsorize(df: DataFrame, valueCol: String, loQ: Double, hiQ: Double,
-                partitions: Int = 32): DataFrame = {
+                partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     require(loQ > 0 && hiQ <= 1 && loQ < hiQ,
       s"winsorize needs 0 < loQ < hiQ <= 1: ($loQ, $hiQ)")
-    val qs = graft.ops.WindowOps.exactQuantilesGlobal(
-      df.select(col(valueCol)), valueCol, Seq(loQ, hiQ), partitions)
-    val bounds = qs.agg(
-      min(when(col("q") === loQ, col("value"))).as("_lo"),
-      max(when(col("q") === hiQ, col("value"))).as("_hi"))
-    df.crossJoin(broadcast(bounds))
-      .withColumn(s"${valueCol}_w",
-        least(greatest(col(valueCol).cast("double"), col("_lo")), col("_hi")))
-      .drop("_lo", "_hi")
+    val bounds = graft.ops.WindowOps.exactQuantilesGlobal(
+        df.select(col(valueCol)), valueCol, Seq(loQ, hiQ), partitions)
+      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    // a bound no value reaches (empty input) is NULL, which the clip skips
+    def bound(q: Double) =
+      bounds.get(q).map(lit).getOrElse(lit(null).cast("double"))
+    df.withColumn(s"${valueCol}_w",
+      least(greatest(col(valueCol).cast("double"), bound(loQ)), bound(hiQ)))
   }
 
   /** Per-group robust location/scale — median and MAD (median absolute
@@ -54,7 +62,7 @@ object StatsOps {
     * rows). Output: (group, median, mad).
     */
   def madPerGroup(df: DataFrame, groupCol: String, valCol: String,
-                  partitions: Int = 32): DataFrame = {
+                  partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     Seq("_mv", "_mc").foreach(c => require(!df.columns.contains(c),
       s"madPerGroup: input must not contain reserved column '$c'"))
     // one scan + one hash aggregation; localCheckpoint so the two ranked
@@ -110,7 +118,7 @@ object StatsOps {
     * scan. Output: input row + (median, mad, is_outlier).
     */
   def flagOutliers(df: DataFrame, groupCol: String, valCol: String,
-                   k: Double, partitions: Int = 32): DataFrame = {
+                   k: Double, partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     require(k > 0, s"flagOutliers: k must be positive, got $k")
     val stats = madPerGroup(df, groupCol, valCol, partitions)
     val dev = abs(col(valCol).cast("double") - col("median"))
@@ -285,7 +293,7 @@ object StatsOps {
     */
   def psiByGroup(ref: DataFrame, cur: DataFrame, groupCol: String,
                  valueCol: String, bins: Int = 10,
-                 partitions: Int = 32): DataFrame = {
+                 partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     require(bins >= 2, s"psiByGroup needs at least 2 bins: $bins")
     val qs = (1 until bins).map(_.toDouble / bins)
     def slim(df: DataFrame) =
@@ -328,7 +336,7 @@ object StatsOps {
   }
 
   def psi(ref: DataFrame, cur: DataFrame, valueCol: String, bins: Int = 10,
-          partitions: Int = 32): DataFrame = {
+          partitions: Int = WindowOps.DerivedWidth): DataFrame = {
     require(bins >= 2, s"psi needs at least 2 bins: $bins")
     val spark = ref.sparkSession
     val qs = (1 until bins).map(_.toDouble / bins)
@@ -339,7 +347,7 @@ object StatsOps {
     def slim(df: DataFrame) =
       df.select(col(valueCol).cast("double").as("v")).where(col("v").isNotNull)
     val edges = WindowOps.exactQuantilesGlobal(slim(ref), "v", qs, partitions)
-      .orderBy("q").select(col("value").cast("double"))
+      .select(col("value").cast("double"))
       .collect().map(_.getDouble(0)).toSeq
     def bucket(v: org.apache.spark.sql.Column) =
       edges.map(e => when(v > lit(e), 1).otherwise(0)).reduce(_ + _) + 1

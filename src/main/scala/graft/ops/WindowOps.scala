@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, graftbridge, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Window-function operators — extension phase beyond the reference surface
   * (SURVEY.md §2.5: "grouping sets/cube/rollup, window functions ... Spark
@@ -42,38 +46,112 @@ object WindowOps {
     df.withColumn("prev", lag(col(valCol), 1).over(w))
   }
 
+  /** `partitions` value that asks the exact-rank scaffold for its derived
+    * range width ([[rankWidth]]); the default of every rank and quantile
+    * operator built on it. Any positive value is used as given.
+    */
+  val DerivedWidth: Int = 0
+
+  /** The range width the exact-rank scaffold gives `df` when the caller
+    * passes no width: the optimizer's size estimate of `df` over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, rounded up and
+    * clamped to [1, `spark.sql.shuffle.partitions`]. A frame that fits one
+    * advisory partition is ranked by the plain window (width 1). Without
+    * CBO the estimate errs high, so a large input is never under-split.
+    * The division runs in BigInt because estimates can overflow a Long (see
+    * `graftbridge.localCheckpointCappedStats`).
+    */
+  def rankWidth(df: DataFrame): Int = {
+    val conf = graftbridge.sqlConf(df.sparkSession)
+    val advisory = BigInt(math.max(1L,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+    val cap = math.max(1, conf.getConf(SQLConf.SHUFFLE_PARTITIONS))
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    ((est + advisory - 1) / advisory).max(1).min(cap).toInt
+  }
+
+  /** The exact-rank scaffold under [[rankFunctions]] and [[groupValueCum]]:
+    * runs `local` (windows partitioned by the keys it is given) over ranges
+    * of `df` sorted by (group, `orderCols`), and adds `_pid` (the range),
+    * `_off` (the `weight` of the group's rows in earlier ranges) and `_n`
+    * (the group's total `weight`), so a global position is `_off` plus the
+    * local one.
+    *
+    * At width 1 there is one range, so there are no offsets: `local` runs
+    * partitioned by the group alone, `_off` is 0 and `_n` is the group's
+    * window sum — one hash exchange, nothing materialized. At width P > 1:
+    *
+    *  1. range-partition by (group, orderCols) — each group's rows split
+    *     across consecutive sorted ranges, P parallel sorts; equal sort
+    *     keys land in ONE partition (range assignment is a deterministic
+    *     function of the key), so tie groups never straddle a boundary.
+    *     The ranges are MATERIALIZED (the [[PrefixSum]] rationale): the
+    *     offsets and the local pass must see the SAME boundaries, and
+    *     RangePartitioner's sampling is not stable across re-executions,
+    *  2. `local` partitioned by (range, group),
+    *  3. per-(range, group) weights → per-group running offsets and totals,
+    *     computed IN-PLAN (a G·P-row aggregate windowed per group, ≤ P rows
+    *     per window — nothing collects to the driver) and broadcast-joined
+    *     back.
+    */
+  private def rankScaffold(df: DataFrame, groupCol: String,
+                           orderCols: Seq[Column], weight: Column,
+                           partitions: Int)(
+      local: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
+    require(partitions >= 0,
+      s"partitions must be positive, or DerivedWidth: $partitions")
+    val g = col(groupCol)
+    val width = if (partitions == DerivedWidth) rankWidth(df) else partitions
+    if (width == 1) {
+      local(df.withColumn("_pid", lit(0)), Seq(g))
+        .withColumn("_off", lit(0L))
+        .withColumn("_n", sum(weight).over(Window.partitionBy(g)))
+    } else {
+      val parted = df
+        .repartitionByRange(width, (g +: orderCols): _*)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+      val wOff = Window.partitionBy(g).orderBy("_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val offs = parted.groupBy(col("_pid"), g).agg(sum(weight).as("_c"))
+        .withColumn("_off", coalesce(sum(col("_c")).over(wOff), lit(0L)))
+        .withColumn("_n", sum(col("_c")).over(Window.partitionBy(g)))
+        .select(col("_pid").as("_opid"), g.as("_og"), col("_off"), col("_n"))
+      local(parted, Seq(col("_pid"), g))
+        .join(broadcast(offs), col("_pid") === col("_opid") && g === col("_og"))
+        .drop("_opid", "_og")
+    }
+  }
+
   /** Distributed ranking functions — ntile / percent_rank / cume_dist per
     * group WITHOUT a whole-group single-task sort.
     *
     * `Window.partitionBy(lowCardinalityKey).orderBy(...)` with rank
     * functions is a genuine straggler shape: every group's FULL sort lands
     * on one task because ntile/percent_rank/cume_dist need whole-group
-    * ranks. This is the two-pass range-partitioned form (the
-    * [[PrefixSum]] pattern, generalized to per-group ranks):
+    * ranks. This runs on the exact-rank scaffold ([[rankScaffold]], the
+    * [[PrefixSum]] pattern generalized to per-group ranks):
     *
-    *  1. range-partition by (group, orderCols) — each group's rows split
-    *     across consecutive sorted ranges, P parallel sorts; equal sort
-    *     keys land in ONE partition (range assignment is a deterministic
-    *     function of the key), so tie groups never straddle a boundary,
-    *  2. per-(partition, group) local row_number, plus min/max row_number
+    *  1. per range and group, a local row_number plus min/max row_number
     *     over each distinct order key (tie-aware rank and cume counts),
-    *  3. per-(partition, group) counts → per-group running offsets and
-    *     totals, computed IN-PLAN (a G·P-row aggregate windowed per group,
-    *     ≤ P rows per window — nothing collects to the driver) and
-    *     broadcast-joined back,
-    *  4. closed forms over the global rank: standard ntile bucketing
+    *  2. the scaffold's per-group offset and total turn them global,
+    *  3. closed forms over the global rank: standard ntile bucketing
     *     (first n%k buckets get one extra row), percent_rank =
     *     (rank−1)/(n−1), cume_dist = peers_through_current / n.
     *
-    * Results are bit-identical to the one-task-per-group window (asserted
-    * in WindowOpsSpec) and partitioning-independent. `orderCols` should be
-    * a total order within each group for ntile determinism (ties make any
-    * engine's ntile order-dependent); percent_rank/cume_dist are tie-aware
-    * either way. Output adds `ntile_<k>`, `pct_rank`, `cume` (+ `_pid`
-    * when `keepPid`, for distribution assertions in specs).
+    * `partitions` is the range width; by default it is derived from the
+    * input's size ([[rankWidth]]), and an input that fits one advisory
+    * partition is ranked by the plain window partitioned by the group
+    * (no range exchange, no checkpoint, no offsets). Results are
+    * bit-identical to the one-task-per-group window (asserted in
+    * WindowRankSpec) at every width. `orderCols` should be a total order
+    * within each group for ntile determinism (ties make any engine's ntile
+    * order-dependent); percent_rank/cume_dist are tie-aware either way.
+    * Output adds `ntile_<k>`, `pct_rank`, `cume` (+ `_pid` when `keepPid`,
+    * for distribution assertions in specs; 0 at width 1).
     */
   def rankFunctions(df: DataFrame, groupCol: String, orderCols: Seq[String],
-                    numTiles: Int, partitions: Int = 32,
+                    numTiles: Int, partitions: Int = DerivedWidth,
                     keepPid: Boolean = false,
                     keepRanks: Boolean = false): DataFrame = {
     val reserved = Seq("_pid", "_lrn", "_lmin", "_lmax", "_off", "_n", "_c",
@@ -81,32 +159,15 @@ object WindowOps {
     reserved.foreach(c => require(!df.columns.contains(c),
       s"rankFunctions: input must not contain reserved column '$c'"))
     val ordCols: Seq[Column] = orderCols.map(col)
-    // MATERIALIZE pass 1 (PrefixSum rationale): the counts aggregate and
-    // the final join must see the SAME range boundaries, and
-    // RangePartitioner's sampling is not stable across re-executions.
-    val parted = df
-      .repartitionByRange(partitions, (col(groupCol) +: ordCols): _*)
-      .withColumn("_pid", F.spark_partition_id())
-      .localCheckpoint()
-    val wl = Window.partitionBy(col("_pid"), col(groupCol)).orderBy(ordCols: _*)
-    val wk = Window.partitionBy((Seq(col("_pid"), col(groupCol)) ++ ordCols): _*)
-    val local = parted
-      .withColumn("_lrn", row_number().over(wl).cast("long"))
-      .withColumn("_lmin", min(col("_lrn")).over(wk)) // local tie-aware rank
-      .withColumn("_lmax", max(col("_lrn")).over(wk)) // local peers-through count
-    // per-group start offset of each partition + group total, in-plan:
-    // G·P rows, each per-group window ≤ P rows — trivially distributed
-    val cnts = parted.groupBy(col("_pid"), col(groupCol))
-      .agg(count(lit(1)).as("_c"))
-    val wOff = Window.partitionBy(groupCol).orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = cnts
-      .withColumn("_off", coalesce(sum(col("_c")).over(wOff), lit(0L)))
-      .withColumn("_n", sum(col("_c")).over(Window.partitionBy(groupCol)))
-      .select(col("_pid").as("_opid"), col(groupCol).as("_og"),
-        col("_off"), col("_n"))
-    val joined = local.join(broadcast(offs),
-      col("_pid") === col("_opid") && col(groupCol) === col("_og"))
+    val joined = rankScaffold(df, groupCol, ordCols, lit(1L), partitions) {
+      (frame, keys) =>
+        val wl = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
+        val wk = Window.partitionBy((keys ++ ordCols): _*)
+        frame
+          .withColumn("_lrn", row_number().over(wl).cast("long"))
+          .withColumn("_lmin", min(col("_lrn")).over(wk)) // local tie-aware rank
+          .withColumn("_lmax", max(col("_lrn")).over(wk)) // local peers-through count
+    }
     val grn = col("_off") + col("_lrn")     // global row_number
     val grank = col("_off") + col("_lmin")  // global tie-aware rank
     val gcume = col("_off") + col("_lmax")  // global rows-through-peers
@@ -134,7 +195,7 @@ object WindowOps {
       if (keepRanks) out0.withColumn("rank", grank)
         .withColumn("peers_through", gcume).withColumn("group_n", n)
       else out0
-    val out = out1.drop("_lrn", "_lmin", "_lmax", "_off", "_n", "_opid", "_og")
+    val out = out1.drop("_lrn", "_lmin", "_lmax", "_off", "_n")
     if (keepPid) out else out.drop("_pid")
   }
 
@@ -142,11 +203,14 @@ object WindowOps {
     * count, INCLUSIVE cumulative count in value order, and group total —
     * the weighted-rank core all quantile forms share. The collapse to
     * distinct values happens FIRST (one hash aggregation), so the
-    * range-partitioned cumulative pass scales with |distinct values|,
-    * not |rows| — the decisive difference on low-cardinality measures.
-    * Same two-pass shape as [[rankFunctions]]: P parallel sorted ranges,
-    * per-(range, group) partial sums, in-plan broadcast offsets. Nulls
-    * are excluded (the `percentile` / `quantile_cont` contract).
+    * cumulative pass scales with |distinct values|, not |rows| — the
+    * decisive difference on low-cardinality measures. The cumulative pass
+    * runs on the exact-rank scaffold ([[rankScaffold]]) over the collapsed
+    * table, whose size sets the derived width ([[rankWidth]]) when
+    * `partitions` is [[DerivedWidth]]: at width 1 it is one window
+    * partitioned by the group, at width P it is P parallel sorted ranges
+    * with per-(range, group) partial sums and in-plan broadcast offsets.
+    * Nulls are excluded (the `percentile` / `quantile_cont` contract).
     */
   private def groupValueCum(df: DataFrame, groupCol: String, valueCol: String,
                             partitions: Int,
@@ -170,38 +234,39 @@ object WindowOps {
           .filter(col("_v").isNotNull)
           .groupBy(groupCol, "_v").agg(count(lit(1)).as("_cnt"))
     }
-    val parted = counts
-      .repartitionByRange(partitions, col(groupCol), col("_v"))
-      .withColumn("_pid", F.spark_partition_id())
-      .localCheckpoint()
-    val wl = Window.partitionBy(col("_pid"), col(groupCol)).orderBy("_v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted.withColumn("_lcum", sum(col("_cnt")).over(wl))
-    val pcnts = parted.groupBy(col("_pid"), col(groupCol))
-      .agg(sum(col("_cnt")).as("_c"))
-    val wOff = Window.partitionBy(groupCol).orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = pcnts
-      .withColumn("_off", coalesce(sum(col("_c")).over(wOff), lit(0L)))
-      .withColumn("_n", sum(col("_c")).over(Window.partitionBy(groupCol)))
-      .select(col("_pid").as("_opid"), col(groupCol).as("_og"),
-        col("_off"), col("_n"))
-    local.join(broadcast(offs),
-        col("_pid") === col("_opid") && col(groupCol) === col("_og"))
-      .select(col(groupCol), col("_v"), col("_cnt"),
-        (col("_off") + col("_lcum")).as("_cum"), col("_n"))
+    rankScaffold(counts, groupCol, Seq(col("_v")), col("_cnt"), partitions) {
+      (frame, keys) =>
+        frame.withColumn("_lcum", sum(col("_cnt")).over(
+          Window.partitionBy(keys: _*).orderBy("_v")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    }.select(col(groupCol), col("_v"), col("_cnt"),
+      (col("_off") + col("_lcum")).as("_cum"), col("_n"))
   }
+
+  /** Schema of [[exactQuantilesGlobal]]'s result. */
+  private val GlobalQuantileSchema = StructType(Seq(
+    StructField("q", DoubleType, nullable = false),
+    StructField("value", DoubleType, nullable = true)))
 
   /** Exact GLOBAL discrete quantiles without a one-task global sort:
     * quantile_disc(q) = min value whose cumulative distribution reaches q
     * (the element at sorted position ceil(q·n), ties collapse), from the
-    * collapsed weighted-cumulative table — one tiny aggregation per q.
-    * Exactly matches DuckDB's `quantile_disc` (oracle-checked).
+    * collapsed weighted-cumulative table ([[groupValueCum]], at the derived
+    * width by default — a collapsed table that fits one advisory partition
+    * is one plain window). Exactly matches DuckDB's `quantile_disc`
+    * (oracle-checked).
     *
-    * Output: (q, value), one row per requested quantile, in q order.
+    * EAGER: every q is answered by one aggregate row (`min(_v)` where the
+    * cumulative share reaches q, one column per distinct q), which is
+    * collected here; the result is a local relation, so a consumer reads
+    * it with no further job.
+    *
+    * Output: (q DOUBLE NOT NULL, value DOUBLE), one row per distinct
+    * requested quantile, in q order; a q that no value reaches (an empty
+    * input) has no row.
     */
   def exactQuantilesGlobal(df: DataFrame, valueCol: String, qs: Seq[Double],
-                           partitions: Int = 32): DataFrame = {
+                           partitions: Int = DerivedWidth): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must lie in (0, 1]: $qs")
     require(!df.columns.contains("_qg"),
@@ -209,12 +274,14 @@ object WindowOps {
     val cum = groupValueCum(
       df.select(col(valueCol)).withColumn("_qg", lit(1)),
       "_qg", valueCol, partitions)
-    cum
-      .select(explode(typedLit(qs.sorted)).as("q"), col("_v"),
-        (col("_cum").cast("double") / col("_n").cast("double")).as("_cume"))
-      .filter(col("_cume") >= col("q"))
-      .groupBy("q").agg(min(col("_v")).as("value"))
-      .orderBy("q")
+    val cume = col("_cum").cast("double") / col("_n").cast("double")
+    val probes = qs.distinct.sorted
+    val hit = cum.agg(min(when(cume >= probes.head, col("_v"))),
+        probes.tail.map(q => min(when(cume >= q, col("_v")))): _*)
+      .head()
+    val rows = probes.indices.filterNot(hit.isNullAt)
+      .map(i => Row(probes(i), hit.getDouble(i)))
+    df.sparkSession.createDataFrame(rows.asJava, GlobalQuantileSchema)
   }
 
   /** Per-group DISCRETE quantiles — the group-partitioned dual of
@@ -226,7 +293,7 @@ object WindowOps {
     */
   def exactQuantilesByGroupDiscrete(df: DataFrame, groupCol: String,
                                     valueCol: String, qs: Seq[Double],
-                                    partitions: Int = 32): DataFrame = {
+                                    partitions: Int = DerivedWidth): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must lie in (0, 1]: $qs")
     val cum = groupValueCum(df, groupCol, valueCol, partitions)
@@ -250,7 +317,7 @@ object WindowOps {
     * Output: (group, q, value), one row per group × quantile.
     */
   def exactQuantilesByGroup(df: DataFrame, groupCol: String, valueCol: String,
-                            qs: Seq[Double], partitions: Int = 32): DataFrame =
+                            qs: Seq[Double], partitions: Int = DerivedWidth): DataFrame =
     quantilesFromCum(groupValueCum(df, groupCol, valueCol, partitions),
       groupCol, qs)
 
@@ -268,7 +335,7 @@ object WindowOps {
   def exactQuantilesByGroupWeighted(df: DataFrame, groupCol: String,
                                     valueCol: String, weightCol: String,
                                     qs: Seq[Double],
-                                    partitions: Int = 32): DataFrame =
+                                    partitions: Int = DerivedWidth): DataFrame =
     quantilesFromCum(
       groupValueCum(df, groupCol, valueCol, partitions, Some(weightCol)),
       groupCol, qs)

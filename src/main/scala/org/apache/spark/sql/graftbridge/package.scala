@@ -20,6 +20,12 @@ package object graftbridge {
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
 
+  /** The session's typed SQL configuration, for reading a setting through
+    * its `ConfigEntry` (fallbacks and byte-size units resolved).
+    */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** `localCheckpoint` that CAPS the size estimate the checkpoint carries
     * forward. `Dataset.localCheckpoint` wraps the materialized RDD in a
     * `LogicalRDD` that preserves the ORIGIN plan's `Statistics` (so that a

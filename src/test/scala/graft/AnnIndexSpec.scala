@@ -422,21 +422,8 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.TestBus.drain(sc)
-      (out, started.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[A](body: => A): (A, Int) =
+    org.apache.spark.TestBus.jobsOf(spark.sparkContext)(body)
 
   test("job budget: quantizer loads run one job each; a refreshing appendDelta at most 12") {
     val p = graft.io.IoScratch.dir + "/ann_job_budget"

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.WindowOps
 
 /** Distributed rank functions: must equal the one-task-per-group window
-  * bit-for-bit at any partition count, while never giving a whole group to
-  * a single task.
+  * bit-for-bit at any partition count (the derived default included), while
+  * never giving a whole group to a single task when split into ranges.
   */
 class WindowRankSpec extends SparkTestBase {
   import spark.implicits._
@@ -22,7 +22,7 @@ class WindowRankSpec extends SparkTestBase {
         percent_rank().over(w).as("p"),
         cume_dist().over(w).as("c"))
       .as[(Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap
-    for (p <- Seq(1, 8, 32)) {
+    for (p <- Seq(1, 8, 32, WindowOps.DerivedWidth)) {
       val got = WindowOps.rankFunctions(orders, "o_orderpriority",
           Seq("o_totalprice", "o_orderkey"), numTiles = 10, partitions = p)
         .select(col("o_orderkey"), col("ntile_10"), col("pct_rank"), col("cume"))
@@ -76,7 +76,7 @@ class WindowRankSpec extends SparkTestBase {
       .select(pmod(hash(col("id")), lit(997)).cast("double").as("x"))
     val sorted = df.orderBy("x").as[Double].collect()
     def disc(q: Double): Double = sorted(math.ceil(q * sorted.length).toInt - 1)
-    for (p <- Seq(1, 8, 32)) {
+    for (p <- Seq(1, 8, 32, WindowOps.DerivedWidth)) {
       val got = WindowOps.exactQuantilesGlobal(df.repartition(11), "x",
           Seq(0.1, 0.5, 0.9, 1.0), partitions = p)
         .as[(Double, Double)].collect().toMap
@@ -94,11 +94,114 @@ class WindowRankSpec extends SparkTestBase {
       df.groupBy("g").agg(percentile(col("v"), lit(q)).as("value"))
         .as[(String, Double)].collect().map { case (g, v) => (g, q, v) }
     }.toSet
-    for (p <- Seq(1, 8, 32)) {
+    for (p <- Seq(1, 8, 32, WindowOps.DerivedWidth)) {
       val got = WindowOps.exactQuantilesByGroup(df.repartition(11), "g", "v",
           Seq(0.1, 0.5, 0.9), partitions = p)
         .as[(String, Double, Double)].collect().toSet
       assert(got == expect, s"quantiles diverged at partitions=$p")
+    }
+  }
+
+  /** The lazy global form: explode the qs, keep the values whose
+    * cumulative share reaches q, min per q, order by q — over one plain
+    * cumulative window. The collected form must equal it row for row and
+    * in schema, nullability included.
+    */
+  private def lazyGlobalQuantiles(df: org.apache.spark.sql.DataFrame,
+                                  valueCol: String, qs: Seq[Double]) = {
+    val cum = df.select(col(valueCol).cast("double").as("_v"))
+      .filter(col("_v").isNotNull)
+      .groupBy("_v").agg(count(lit(1)).as("_cnt"))
+      .withColumn("_cum", sum(col("_cnt")).over(Window.orderBy("_v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("_n", sum(col("_cnt")).over(Window.partitionBy()))
+    cum.select(explode(typedLit(qs.sorted)).as("q"), col("_v"),
+        (col("_cum").cast("double") / col("_n").cast("double")).as("_cume"))
+      .filter(col("_cume") >= col("q"))
+      .groupBy("q").agg(min(col("_v")).as("value"))
+      .orderBy("q")
+  }
+
+  test("exactQuantilesGlobal collects: same rows and schema as the lazy form on edge inputs") {
+    val xs = spark.range(0, 3000)
+      .select(pmod(hash(col("id")), lit(211)).cast("double").as("x"))
+    val empty = spark.range(0).select(col("id").cast("double").as("x"))
+    val cases = Seq(
+      "general" -> (xs, Seq(0.25, 0.5, 0.75, 0.95)),
+      "empty input" -> (empty, Seq(0.5, 0.9)),
+      "duplicate qs" -> (xs, Seq(0.9, 0.5, 0.5, 0.9)),
+      "q = 1.0" -> (xs, Seq(1.0)))
+    for ((label, (df, qs)) <- cases; p <- Seq(WindowOps.DerivedWidth, 8)) {
+      val got = WindowOps.exactQuantilesGlobal(df, "x", qs, partitions = p)
+      val want = lazyGlobalQuantiles(df, "x", qs)
+      assert(got.schema == want.schema, s"$label: schema ${got.schema} vs ${want.schema}")
+      assert(got.collect().toSeq == want.collect().toSeq, s"$label rows at partitions=$p")
+    }
+    assert(WindowOps.exactQuantilesGlobal(empty, "x", Seq(0.5)).count() == 0)
+    assert(WindowOps.exactQuantilesGlobal(xs, "x", Seq(0.5, 0.5)).count() == 1)
+    assert(WindowOps.exactQuantilesGlobal(xs, "x", Seq(1.0)).head().getDouble(1) == 210.0)
+  }
+
+  test("job budget: exactQuantilesGlobal at the default width stays in its job budget and returns a local relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val df = spark.range(0, 5000)
+      .select(pmod(hash(col("id")), lit(997)).cast("double").as("x"))
+    val (got, jobs) = org.apache.spark.TestBus.jobsOf(spark.sparkContext)(
+      WindowOps.exactQuantilesGlobal(df, "x", Seq(0.25, 0.5, 0.75, 0.95)))
+    assert(jobs <= 3, s"exactQuantilesGlobal ran $jobs jobs")
+    assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      got.queryExecution.optimizedPlan.treeString)
+    val (_, readJobs) = org.apache.spark.TestBus.jobsOf(spark.sparkContext)(got.collect())
+    assert(readJobs == 0, s"reading the result ran $readJobs jobs")
+  }
+
+  test("a frame within one advisory partition derives width 1: no range exchange, no checkpoint") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val df = spark.range(0, 400).select((col("id") % 3).as("g"),
+      pmod(hash(col("id")), lit(53)).as("v"), col("id"))
+    assert(WindowOps.rankWidth(df) == 1)
+    def checkpoints(out: org.apache.spark.sql.DataFrame) =
+      out.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }.size
+    def rangeExchange(out: org.apache.spark.sql.DataFrame) =
+      out.queryExecution.executedPlan.toString.contains("rangepartitioning")
+    val ranked = WindowOps.rankFunctions(df, "g", Seq("v", "id"), numTiles = 4)
+    val quant = WindowOps.exactQuantilesByGroup(df, "g", "v", Seq(0.5))
+    for ((name, out) <- Seq("rankFunctions" -> ranked, "exactQuantilesByGroup" -> quant)) {
+      assert(checkpoints(out) == 0, s"$name checkpointed at width 1")
+      assert(!rangeExchange(out), s"$name planned a range exchange at width 1")
+    }
+    // the ranged form of the same call does checkpoint its ranges
+    assert(checkpoints(WindowOps.rankFunctions(df, "g", Seq("v", "id"),
+      numTiles = 4, partitions = 8)) > 0)
+    // and both forms agree bit for bit
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select("id", "ntile_4", "pct_rank", "cume").collect().toSet
+    assert(rows(ranked) == rows(WindowOps.rankFunctions(df, "g", Seq("v", "id"),
+      numTiles = 4, partitions = 8)))
+  }
+
+  test("with a tiny advisory partition size the derived width is spark.sql.shuffle.partitions") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(key)
+    val df = spark.range(0, 2000).select((col("id") % 2).as("g"),
+      pmod(hash(col("id")), lit(101)).cast("double").as("v"), col("id"))
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    try {
+      spark.conf.set(key, "1")
+      assert(WindowOps.rankWidth(df) == shufflePartitions)
+      val pids = WindowOps.rankFunctions(df, "g", Seq("v", "id"), numTiles = 4,
+          keepPid = true)
+        .select("_pid").distinct().count()
+      assert(pids > 1 && pids <= shufflePartitions, s"$pids ranges")
+      val expect = df.select(col("g"), col("v"), percentile(col("v"), lit(0.5))
+        .over(Window.partitionBy("g")).as("m")).select("g", "m").distinct()
+        .as[(Long, Double)].collect().toSet
+      val got = WindowOps.exactQuantilesByGroup(df, "g", "v", Seq(0.5))
+        .select("g", "value").as[(Long, Double)].collect().toSet
+      assert(got == expect)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 

@@ -3,18 +3,20 @@
 #
 #   tools/perf_ab.sh <parent-rev> <workload> <seed>...
 #
-# Run from the root of the checkout. The parent revision is checked out into
-# a temporary git worktree (removed on exit). For each seed the script runs
-# `perfbench/run.py --trace 0` once on each side, alternating which side runs
-# first, and appends each run's `{"record": ...}` line to parent.jsonl or
-# change.jsonl under .bench_build/perf_ab/ (both emptied at start). It ends
-# with `perfbench/compare.py parent.jsonl change.jsonl`. The run length is
-# BENCHMARK.json's run_seconds. The parent side builds its own benchmark
-# from scratch, so its first run takes a few minutes longer.
+# Run from the root of the checkout. The parent revision is unpacked with
+# `git archive` into a temporary directory (removed on exit). For each seed
+# the script runs `perfbench/run.py --trace 0 --keep` once on each side,
+# alternating which side runs first, and appends each run's `{"record": ...}`
+# line to parent.jsonl or change.jsonl under .bench_build/perf_ab/, and each
+# operation's median latency (side, seed, calib_ms, op, median_s, count) to
+# ops.tsv there (all three emptied at start); the kept run directory is then
+# deleted. It ends with `perfbench/compare.py parent.jsonl change.jsonl`. The
+# run length is BENCHMARK.json's run_seconds. The parent side builds its own
+# benchmark from scratch, so its first run takes a few minutes longer.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,13p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,16p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 rev=$1 workload=$2
@@ -30,25 +32,46 @@ out="$change/.bench_build/perf_ab"
 mkdir -p "$out"
 : > "$out/parent.jsonl"
 : > "$out/change.jsonl"
+printf 'side\tseed\tcalib_ms\top\tmedian_s\tcount\n' > "$out/ops.tsv"
 
 tmp=$(mktemp -d)
-cleanup() {
-  git -C "$change" worktree remove --force "$tmp/parent" 2>/dev/null || true
-  git -C "$change" worktree prune
-  rm -rf "$tmp"
-}
-trap cleanup EXIT
-git -C "$change" worktree add --quiet --detach "$tmp/parent" "$rev"
+trap 'rm -rf "$tmp"' EXIT
+mkdir "$tmp/parent"
+git -C "$change" archive "$rev" | tar -x -C "$tmp/parent"
 
-# run_side <dir> <jsonl> <seed>: one run; its record line is appended
+# op_medians <side> <seed> <record.json>: one ops.tsv line per operation
+op_medians() {
+  python3 - "$@" "$change/perfbench" >> "$out/ops.tsv" <<'PY'
+import json, statistics, sys
+side, seed, path, bench = sys.argv[1:5]
+sys.path.insert(0, bench)
+import analyze
+rec = json.load(open(path))
+by_op = {}
+for op in rec["ops"]:
+    if op["ok"]:
+        by_op.setdefault(op["name"], []).append(analyze.latency_s(op))
+for name in sorted(by_op):
+    xs = by_op[name]
+    print(f"{side}\t{seed}\t{rec['calib_ms']}\t{name}\t{statistics.median(xs):.4f}\t{len(xs)}")
+PY
+}
+
+# run_side <side> <dir> <seed>: one run; its record line is appended to
+# <side>.jsonl and its per-operation medians to ops.tsv
 run_side() {
-  local dir=$1 jsonl=$2 seed=$3
+  local side=$1 dir=$2 seed=$3 kept
   (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$seed" \
-      --seconds "$seconds" --trace 0) > "$tmp/run.log" 2> "$tmp/run.err" || {
+      --seconds "$seconds" --trace 0 --keep) > "$tmp/run.log" 2> "$tmp/run.err" || {
     echo "perf_ab: run failed in $dir (seed $seed):" >&2
     tail -n 5 "$tmp/run.err" >&2
   }
-  grep '^{"record"' "$tmp/run.log" >> "$jsonl" || true
+  grep '^{"record"' "$tmp/run.log" >> "$out/$side.jsonl" || true
+  kept=$(sed -n 's/^perfbench: run directory kept at //p' "$tmp/run.err")
+  if [ -n "$kept" ]; then
+    op_medians "$side" "$seed" "$kept/record.json" || echo "perf_ab: no op medians for $side seed $seed" >&2
+    rm -rf "$kept"
+  fi
   tail -n 1 "$tmp/run.log"
 }
 
@@ -62,9 +85,9 @@ for seed in "$@"; do
   for side in $order; do
     echo "== seed $seed, $side"
     if [ "$side" = parent ]; then
-      run_side "$tmp/parent" "$out/parent.jsonl" "$seed"
+      run_side parent "$tmp/parent" "$seed"
     else
-      run_side "$change" "$out/change.jsonl" "$seed"
+      run_side change "$change" "$seed"
     fi
   done
   i=$((i + 1))
