@@ -43,6 +43,6 @@ class OOB(spark: SparkSession, val jobName: String) extends Serializable {
 object OOB {
   /** Read a previously saved job's OOB table (oob_get across jobs). */
   def load(spark: SparkSession, dir: String, jobName: String): Map[String, String] =
-    spark.read.parquet(s"$dir/${jobName}_oob")
+    graft.core.Tables.parquet(spark, s"$dir/${jobName}_oob")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 }

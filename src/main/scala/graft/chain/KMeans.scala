@@ -72,26 +72,43 @@ object KMeans {
       // for HotSpot's JIT (measured 26 s/iteration at n=50k that this
       // shape runs in ~2 s). Same adds, same cast chain → same centers;
       // partial aggregation still combines map-side on (cluster, d).
-      val sums = assigned
+      val updated = centersOf(assigned
         .select(col("cluster"), posexplode(col("v")).as(Seq("d", "x")))
         .groupBy("cluster", "d")
         .agg(sum(col("x").cast("decimal(38,18)")).cast("double").as("m"),
-          count(lit(1)).as("n"))
-      val updated = sums
-        .groupBy("cluster")
-        .agg(transform(
-          array_sort(collect_list(struct(col("d"), (col("m") / col("n")).as("c")))),
-          s => s("c")).as("c"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toMap
-      centers = centers.indices.map(i => updated.getOrElse(i, centers(i)))
+          count(lit(1)).as("n")), Seq("cluster"))
+      centers = centers.indices.map(i => updated.getOrElse(Seq(i), centers(i)))
     }
-    // materialize the final assignment, then release the iteration cache —
-    // a long-lived session issuing many runs must not accrete pinned
-    // corpus copies (localCheckpoint is eager, so `pts` is done serving)
-    val finalAssign = assign(pts, "id", "v", centers).localCheckpoint()
+    // the final assignment is a LAZY checkpoint (the same optimizer
+    // barrier): its consumer's first job materializes it, so a caller
+    // that keeps only the centers runs no job for it, and overlapped
+    // consumers still share one materialization. The iteration cache is
+    // released now — a long-lived session issuing many runs must not
+    // accrete pinned corpus copies — so that first job re-reads the
+    // points from their source.
+    val finalAssign = assign(pts, "id", "v", centers).localCheckpoint(false)
     pts.unpersist(false)
     (centers, finalAssign)
   }
+
+  /** The Lloyd update from per-(`keys`, d) sums `m` over `n` points:
+    * the k×dim aggregate rows are collected and each center is
+    * assembled on the driver — components in `d` order, each `m / n`,
+    * the IEEE division Spark's `/` performs on (double, long) — instead
+    * of regrouping them by key in a second shuffle. A row with a null
+    * key (a point whose vector holds a null element has no cluster)
+    * belongs to no center.
+    */
+  private[graft] def centersOf(sums: DataFrame,
+                               keys: Seq[String]): Map[Seq[Int], Seq[Double]] =
+    sums.select((keys ++ Seq("d", "m", "n")).map(col): _*).collect()
+      .filterNot(r => keys.indices.exists(r.isNullAt))
+      .groupBy(r => keys.indices.map(r.getInt))
+      .map { case (key, rows) =>
+        key -> rows.sortBy(_.getInt(keys.length)).map { r =>
+          r.getDouble(keys.length + 1) / r.getLong(keys.length + 2)
+        }.toSeq
+      }
 
   /** ROUTED assignment for large k — the FAISS-IVF assign rule: cluster
     * the k centers themselves into ~√k coarse cells (a driver-side Lloyd

@@ -1,13 +1,15 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Named-dataset catalog — the Spark-native analog of Disco's DDFS tags
   * (reference: lib/disco/ddfs.py:98-114 `blobs`, :334-364 `walk`): a tag is a
   * named, mutable pointer to data; here a name resolves to a parquet path (or
   * a registered temp view for tag→tag DAGs, see [[TagCatalog]]).
   *
-  * Scale notes: readers are plain `spark.read.parquet` so Catalyst keeps
+  * Scale notes: readers are [[parquet]] — a `spark.read.parquet` whose
+  * data schema is read from one footer on the driver — so Catalyst keeps
   * predicate pushdown / column pruning / partition pruning; no eager caching
   * (100 TB tables must stream, not pin).
   */
@@ -17,7 +19,60 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. With
+    * `mergeSchema` off, Spark infers a data schema from ONE footer —
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * path — but reads it inside a 1-task job, a scheduler round trip
+    * that moves no data. [[footerSchema]] reads that same footer on the
+    * driver and the read declares it; partition columns are still
+    * discovered from the directory names by Spark. Where the footer
+    * cannot be chosen the way Spark would choose it, this is the plain
+    * inferring read (which also raises Spark's own error for a missing or
+    * empty path).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+
+  /** The data schema Spark's single-footer inference returns for `path`,
+    * or None where this does not reproduce it: a glob, a missing path, no
+    * data file, a layout that is neither flat nor hive-partitioned
+    * (`k=v` directories all the way down), a footer column that shares a
+    * partition column's name, or a footer that does not read.
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.graftbridge.{hiddenPathName, parquetFooterSchema, sqlConf}
+    if (path.exists("{}[]*?\\".contains(_))) return None
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // InMemoryFileIndex's listing: hidden names skipped at every level;
+    // each leaf carries the `k` of the `k=v` directories above it, and
+    // any other directory leaves the layout to Spark
+    def leaves(dir: Path, keys: Seq[String]): Option[Seq[(FileStatus, Seq[String])]] =
+      fs.listStatus(dir).toSeq.filterNot(k => hiddenPathName(k.getPath.getName))
+        .foldLeft(Option(Seq.empty[(FileStatus, Seq[String])])) { (acc, k) =>
+          val name = k.getPath.getName
+          if (!k.isDirectory) acc.map(_ :+ (k -> keys))
+          else if (!name.contains("=")) None
+          else for (a <- acc; b <- leaves(k.getPath, keys :+ name.takeWhile(_ != '='))) yield a ++ b
+        }
+    scala.util.Try {
+      // listing a file root lists the file itself, as Spark's index does
+      leaves(new Path(path), Nil).flatMap { ls =>
+        val key = (n: String) =>
+          if (sqlConf(spark).caseSensitiveAnalysis) n else n.toLowerCase(java.util.Locale.ROOT)
+        val partCols = ls.flatMap(_._2).map(key).toSet
+        val files = ls.map(_._1).sortBy(_.getPath.toString)
+        def named(n: String) = files.find(_.getPath.getName == n)
+        val data = files.filterNot(f => Set("_metadata", "_common_metadata")(f.getPath.getName))
+        named("_common_metadata").orElse(named("_metadata")).orElse(data.headOption)
+          .map(parquetFooterSchema(spark, _))
+          .filterNot(_.fieldNames.exists(n => partCols(key(n))))
+      }
+    }.toOption.flatten
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -113,7 +113,7 @@ object Sinks {
   def writeSharded(df: DataFrame, path: String, shardCol: String): DataFrame = {
     writePartitioned(df, path, Seq(shardCol))
     val spark = df.sparkSession
-    val written = spark.read.option("basePath", path).parquet(path)
+    val written = graft.core.Tables.parquet(spark, path)
     val rows = written.groupBy(shardCol)
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))

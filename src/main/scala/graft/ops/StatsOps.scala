@@ -78,8 +78,13 @@ object StatsOps {
     val dev = counts.join(broadcast(med), groupCol)
       .select(col(groupCol),
         abs(col("_mv") - col("_med")).as("_dev"), col("_mc"))
+    // `dev` has exactly `counts`' rows, but its size estimate is the
+    // join's product of both sides: a derived width is taken from `counts`
+    val devWidth =
+      if (partitions == WindowOps.DerivedWidth) WindowOps.rankWidth(counts)
+      else partitions
     graft.ops.WindowOps.exactQuantilesByGroupWeighted(
-        dev, groupCol, "_dev", "_mc", Seq(0.5), partitions)
+        dev, groupCol, "_dev", "_mc", Seq(0.5), devWidth)
       .select(col(groupCol), col("value").as("mad"))
       .join(broadcast(med), groupCol)
       .select(col(groupCol), col("_med").as("median"), col("mad"))

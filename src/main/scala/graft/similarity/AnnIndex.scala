@@ -62,7 +62,8 @@ object AnnIndex extends IndexLifecycle {
   /** The declared schemas of the components [[export]] writes from
     * driver values: every read of them passes its schema, so none runs
     * a schema-inference job. `vectors/` and `codes/` carry the caller's
-    * `vec_id` type and keep Spark's inference on their full-row reads.
+    * `vec_id` type, so their full-row reads take each part's schema from
+    * its own footer, read on the driver ([[graft.core.Tables.parquet]]).
     */
   val CentroidSchema: StructType = StructType(Seq(
     StructField("cell", IntegerType), StructField("v", ArrayType(DoubleType))))

@@ -202,7 +202,7 @@ object HybridIndex extends IndexLifecycle {
     */
   private def corpusstatsAll(spark: SparkSession, root: String,
                              deltas: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(s"$root/corpusstats")
+    val base = graft.core.Tables.parquet(spark, s"$root/corpusstats")
     if (!base.columns.contains("sum_dl")) {
       if (deltas.nonEmpty) throw new IllegalStateException(legacyMsg(root))
       base.select(col("n_docs"), col("avgdl"))
@@ -222,7 +222,7 @@ object HybridIndex extends IndexLifecycle {
     * serve read-only but must not grow deltas it can never merge.
     */
   override protected def requireMutable(spark: SparkSession, root: String): Unit =
-    if (!spark.read.parquet(s"$root/corpusstats").columns.contains("sum_dl"))
+    if (!graft.core.Tables.parquet(spark, s"$root/corpusstats").columns.contains("sum_dl"))
       throw new IllegalStateException(legacyMsg(root))
 
   /** Read-back counts through the SERVED reading rule (base + committed

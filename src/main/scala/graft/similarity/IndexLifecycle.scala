@@ -356,7 +356,7 @@ private[graft] trait IndexLifecycle {
     requireMutable(spark, root)
     val deltas = committedDeltas(spark, root)
     if (deltas.size < math.max(1, minDeltas))
-      return snapshot(spark, spark.read.parquet(s"$root/manifest"))
+      return snapshot(spark, graft.core.Tables.parquet(spark, s"$root/manifest"))
     val newRoot = publishVersion(spark, path) { newRoot =>
       graft.core.Jobs.inParallel(componentFolds(spark, root, newRoot, deltas))
       DeltaLog.writeAbsorbed(spark, newRoot,
@@ -383,18 +383,18 @@ private[graft] trait IndexLifecycle {
 
   /** The one reading rule of the serving paths, the manifest and the
     * fold: base `component` plus each delta's in `deltas` (the committed
-    * set, or a fold's pinned snapshot). Read with `basePath` so a
-    * hive-partitioned component keeps its partition column. A declared
-    * `schema` replaces each part's schema-inference job (and reads only
-    * its columns); without one every part infers its own.
+    * set, or a fold's pinned snapshot). Each part is read at its own
+    * directory, so a hive-partitioned component keeps its partition
+    * column. A declared `schema` reads only its columns; without one
+    * each part takes its own footer's schema ([[graft.core.Tables.parquet]],
+    * read on the driver), so a delta keeps the type its caller wrote.
     */
   protected def unionParts(spark: SparkSession, root: String, component: String,
                            cols: Seq[String], deltas: Seq[String],
                            schema: Option[StructType] = None): DataFrame = {
-    def part(dir: String) = {
-      val reader = spark.read.option("basePath", dir)
-      schema.fold(reader)(reader.schema).parquet(dir).select(cols.map(col): _*)
-    }
+    def part(dir: String) =
+      schema.fold(graft.core.Tables.parquet(spark, dir))(spark.read.schema(_).parquet(dir))
+        .select(cols.map(col): _*)
     deltas.foldLeft(part(s"$root/$component")) { (acc, d) =>
       acc.unionByName(part(s"$root/deltas/$d/$component"))
     }

@@ -712,19 +712,13 @@ object Similarity {
       val assigned = subs
         .select(col("s"), clusterExpr.as("cluster"), col("sub"))
         .localCheckpoint(false)
-      val updated = assigned
+      val updated = graft.chain.KMeans.centersOf(assigned
         .select(col("s"), col("cluster"), posexplode(col("sub")).as(Seq("d", "x")))
         .groupBy("s", "cluster", "d")
         .agg(sum(col("x").cast("decimal(38,18)")).cast("double").as("m"),
-          count(lit(1)).as("n"))
-        .groupBy("s", "cluster")
-        .agg(transform(
-          array_sort(collect_list(struct(col("d"), (col("m") / col("n")).as("c")))),
-          e => e("c")).as("c"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq).toMap
+          count(lit(1)).as("n")), Seq("s", "cluster"))
       centers = (0 until m).map(s =>
-        centers(s).indices.map(j => updated.getOrElse((s, j), centers(s)(j))))
+        centers(s).indices.map(j => updated.getOrElse(Seq(s, j), centers(s)(j))))
     }
     subs.unpersist(false)
     centers

@@ -73,4 +73,35 @@ package object graftbridge {
       case _ => ck
     }
   }
+
+  /** The schema Spark's single-footer parquet inference reads from one
+    * file — `ParquetFileFormat.mergeSchemasInParallel` on one file, but
+    * on the driver instead of inside a 1-task job: the same
+    * `SKIP_ROW_GROUPS` footer read, the same converter settings, and the
+    * Spark row-metadata key preferred over the parquet schema when
+    * present.
+    */
+  def parquetFooterSchema(spark: SparkSession,
+                          file: org.apache.hadoop.fs.FileStatus): types.StructType = {
+    import execution.datasources.parquet._
+    val conf = sqlConf(spark)
+    val hadoopConf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hadoopConf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
+  }
+
+  /** The names a file index never lists (`_x` and `.x` but not
+    * `_metadata`/`_common_metadata` or `k=v`, and `._COPYING_` files).
+    */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -258,4 +258,76 @@ class ChainSpec extends SparkTestBase {
     assert(logloss(w) < logloss(w1round),
       s"more rounds must reduce training loss: ${logloss(w)} vs ${logloss(w1round)}")
   }
+
+  /** The Lloyd loop in its earlier form, kept as the reference for the
+    * driver-assembled centers: the per-(cluster, d) sums regrouped by
+    * cluster in a second shuffle (`collect_list`, `array_sort`, `m / n`
+    * in Spark). A null cluster (a point whose vector holds a null
+    * element) matches no center index.
+    */
+  private def referenceLloyd(points: org.apache.spark.sql.DataFrame, idCol: String,
+      vecCol: String, k: Int, iterations: Int): Seq[Seq[Double]] = {
+    val pts = points.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
+    var centers: Seq[Seq[Double]] = pts.orderBy("id").limit(k)
+      .select("v").collect().map(_.getSeq[Double](0).toSeq).toSeq
+    for (_ <- 1 to iterations) {
+      val assigned = KMeans.assign(pts, "id", "v", centers)
+        .select("cluster", "v").localCheckpoint(false)
+      val updated = assigned
+        .select(col("cluster"), posexplode(col("v")).as(Seq("d", "x")))
+        .groupBy("cluster", "d")
+        .agg(sum(col("x").cast("decimal(38,18)")).cast("double").as("m"),
+          count(lit(1)).as("n"))
+        .groupBy("cluster")
+        .agg(transform(
+          array_sort(collect_list(struct(col("d"), (col("m") / col("n")).as("c")))),
+          s => s("c")).as("c"))
+        .collect().filterNot(_.isNullAt(0))
+        .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toMap
+      centers = centers.indices.map(i => updated.getOrElse(i, centers(i)))
+    }
+    centers
+  }
+
+  private def bits(cs: Seq[Seq[Double]]): Seq[Seq[Long]] =
+    cs.map(_.map(java.lang.Double.doubleToRawLongBits))
+
+  /** Random 8-dim vectors, plus the two degenerate shapes: the first two
+    * points equal (the second init center never wins a point, so its
+    * cluster stays empty) and one late point with a null element.
+    */
+  private def lloydInputs: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val random = (0L until 240L).map(i => (i, Seq.fill(8)(rnd.nextGaussian() * 3)))
+    val dup = random.head +: (random.head._1 + 1000L, random.head._2) +: random.tail
+    val withNull = random.map { case (i, v) =>
+      val boxed: Seq[java.lang.Double] = v.map(java.lang.Double.valueOf)
+      (i, if (i == 100L) boxed.updated(5, null) else boxed)
+    }
+    Seq("random" -> random.toDF("id", "vec"),
+      "empty cluster" -> dup.sortBy(_._1).toDF("id", "vec")
+        .withColumn("id", when(col("id") === 1000L, lit(-1L)).otherwise(col("id"))),
+      "null element" -> withNull.toDF("id", "vec"))
+  }
+
+  test("KMeans.run centers are bit-identical to the regrouping reference") {
+    lloydInputs.foreach { case (name, pts) =>
+      val (centers, _) = KMeans.run(spark, pts, "id", "vec", k = 4, iterations = 3)
+      val want = referenceLloyd(pts, "id", "vec", k = 4, iterations = 3)
+      assert(bits(centers) == bits(want), name)
+    }
+  }
+
+  test("pqTrain codebooks are bit-identical to the regrouping reference per subspace") {
+    lloydInputs.foreach { case (name, pts) =>
+      val cbs = graft.similarity.Similarity.pqTrain(spark, pts, "id", "vec",
+        m = 2, ks = 4, iterations = 3)
+      val want = (0 until 2).map { s =>
+        referenceLloyd(pts.select(col("id"), slice(col("vec"), s * 4 + 1, 4).as("sub")),
+          "id", "sub", k = 4, iterations = 3)
+      }
+      assert(cbs.map(bits) == want.map(bits), name)
+    }
+  }
 }

@@ -180,6 +180,23 @@ class WindowRankSpec extends SparkTestBase {
       numTiles = 4, partitions = 8)))
   }
 
+  test("madPerGroup's deviation pass takes the width of the collapsed counts, not of their join") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    // about 3000 distinct (g, v) pairs: the collapse fits one advisory
+    // partition, while the join's product estimate runs to gigabytes
+    val df = spark.range(0, 5000).select((col("id") % 3).as("g"),
+      pmod(hash(col("id")), lit(1000)).cast("double").as("v"))
+    val mad = graft.ops.StatsOps.madPerGroup(df, "g", "v")
+    // the one materialized input is the shared collapse: no ranged pass
+    // checkpoints its ranges, and nothing is range-partitioned
+    val rdds = mad.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd.id }
+    assert(rdds.distinct.size == 1, mad.queryExecution.optimizedPlan.treeString)
+    assert(!mad.queryExecution.executedPlan.toString.contains("rangepartitioning"))
+    val ranged = graft.ops.StatsOps.madPerGroup(df, "g", "v", partitions = 8)
+    assert(mad.as[(Long, Double, Double)].collect().toSet ==
+      ranged.as[(Long, Double, Double)].collect().toSet)
+  }
+
   test("with a tiny advisory partition size the derived width is spark.sql.shuffle.partitions") {
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val before = spark.conf.getOption(key)

@@ -10,13 +10,15 @@
 # line to parent.jsonl or change.jsonl under .bench_build/perf_ab/, and each
 # operation's median latency (side, seed, calib_ms, op, median_s, count) to
 # ops.tsv there (all three emptied at start); the kept run directory is then
-# deleted. It ends with `perfbench/compare.py parent.jsonl change.jsonl`. The
-# run length is BENCHMARK.json's run_seconds. The parent side builds its own
-# benchmark from scratch, so its first run takes a few minutes longer.
+# deleted. It ends with `perfbench/compare.py parent.jsonl change.jsonl` and a
+# per-operation table from ops.tsv: each side's median over its runs of the
+# per-run medians, and the change in percent. The run length is
+# BENCHMARK.json's run_seconds. The parent side builds its own benchmark from
+# scratch, so its first run takes a few minutes longer.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,16p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,17p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 rev=$1 workload=$2
@@ -95,3 +97,20 @@ done
 
 echo "== $out/parent.jsonl vs $out/change.jsonl"
 python3 "$change/perfbench/compare.py" "$out/parent.jsonl" "$out/change.jsonl"
+
+echo "== per-operation medians (s) from $out/ops.tsv"
+python3 - "$out/ops.tsv" <<'PY'
+import csv, statistics, sys
+meds = {}
+with open(sys.argv[1]) as fh:
+    for row in csv.DictReader(fh, delimiter="\t"):
+        meds.setdefault(row["op"], {}).setdefault(row["side"], []).append(float(row["median_s"]))
+print(f"{'operation':<24}{'parent':>10}{'change':>10}{'change %':>10}{'runs':>8}")
+for op in sorted(meds):
+    p, c = meds[op].get("parent", []), meds[op].get("change", [])
+    pm = statistics.median(p) if p else None
+    cm = statistics.median(c) if c else None
+    pct = f"{100 * (cm - pm) / pm:+.1f}" if pm and cm is not None else "-"
+    fmt = lambda x: f"{x:.3f}" if x is not None else "-"
+    print(f"{op:<24}{fmt(pm):>10}{fmt(cm):>10}{pct:>10}{len(p):>4}/{len(c):<3}")
+PY
