@@ -43,36 +43,69 @@ object Tables {
     */
   private[graft] def footerSchema(spark: SparkSession,
                                   path: String): Option[StructType] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    import org.apache.spark.sql.graftbridge.{hiddenPathName, parquetFooterSchema, sqlConf}
+    import org.apache.spark.sql.graftbridge.{parquetFooterSchema, sqlConf}
     if (path.exists("{}[]*?\\".contains(_))) return None
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // InMemoryFileIndex's listing: hidden names skipped at every level;
-    // each leaf carries the `k` of the `k=v` directories above it, and
-    // any other directory leaves the layout to Spark
-    def leaves(dir: Path, keys: Seq[String]): Option[Seq[(FileStatus, Seq[String])]] =
-      fs.listStatus(dir).toSeq.filterNot(k => hiddenPathName(k.getPath.getName))
-        .foldLeft(Option(Seq.empty[(FileStatus, Seq[String])])) { (acc, k) =>
-          val name = k.getPath.getName
-          if (!k.isDirectory) acc.map(_ :+ (k -> keys))
-          else if (!name.contains("=")) None
-          else for (a <- acc; b <- leaves(k.getPath, keys :+ name.takeWhile(_ != '='))) yield a ++ b
-        }
     scala.util.Try {
-      // listing a file root lists the file itself, as Spark's index does
-      leaves(new Path(path), Nil).flatMap { ls =>
+      leafFiles(spark, path).flatMap { ls =>
         val key = (n: String) =>
           if (sqlConf(spark).caseSensitiveAnalysis) n else n.toLowerCase(java.util.Locale.ROOT)
-        val partCols = ls.flatMap(_._2).map(key).toSet
+        val partCols = ls.flatMap(_._2).map(kv => key(kv._1)).toSet
         val files = ls.map(_._1).sortBy(_.getPath.toString)
         def named(n: String) = files.find(_.getPath.getName == n)
-        val data = files.filterNot(f => Set("_metadata", "_common_metadata")(f.getPath.getName))
-        named("_common_metadata").orElse(named("_metadata")).orElse(data.headOption)
+        named("_common_metadata").orElse(named("_metadata"))
+          .orElse(files.find(f => !summaryFile(f)))
           .map(parquetFooterSchema(spark, _))
           .filterNot(_.fieldNames.exists(n => partCols(key(n))))
       }
     }.toOption.flatten
   }
+
+  /** The row count of each data file under the parquet directory `path`,
+    * with the `k=v` pairs of the directories above it: the sum of the
+    * file's row-group row counts, read from its footer on the driver —
+    * the rows a reader of the file reads, without a job. Summary files
+    * (`_metadata`, `_common_metadata`) are not data and are left out, as
+    * Spark's scans leave them out. A missing `path` raises Spark's own
+    * path-not-found error; a layout that is neither flat nor
+    * hive-partitioned is refused.
+    */
+  private[graft] def footerRows(spark: SparkSession,
+                                path: String): Seq[(Seq[(String, String)], Long)] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.graftbridge.{parquetFooterRows, pathNotFound}
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) throw pathNotFound(p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString)
+    val ls = leafFiles(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"$path: not a flat or hive-partitioned parquet layout"))
+    ls.filterNot(l => summaryFile(l._1)).map { case (f, kv) => kv -> parquetFooterRows(spark, f) }
+  }
+
+  private def summaryFile(f: org.apache.hadoop.fs.FileStatus): Boolean =
+    Set("_metadata", "_common_metadata")(f.getPath.getName)
+
+  /** InMemoryFileIndex's listing of `path`: hidden names skipped at every
+    * level, each file with the `k=v` pairs of the directories above it
+    * (values as written in the path); a file root lists as the file
+    * itself. None where a directory is not `k=v` — Spark's own discovery
+    * then decides the layout. A missing path throws.
+    */
+  private def leafFiles(spark: SparkSession, path: String): Option[Seq[Leaf]] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.graftbridge.hiddenPathName
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(dir: Path, kvs: Seq[(String, String)]): Option[Seq[Leaf]] =
+      fs.listStatus(dir).toSeq.filterNot(st => hiddenPathName(st.getPath.getName))
+        .foldLeft(Option(Seq.empty[Leaf])) { (acc, st) =>
+          val (k, v) = st.getPath.getName.span(_ != '=')
+          if (!st.isDirectory) acc.map(_ :+ (st -> kvs))
+          else if (v.isEmpty) None
+          else for (a <- acc; b <- leaves(st.getPath, kvs :+ (k -> v.drop(1)))) yield a ++ b
+        }
+    leaves(new Path(path), Nil)
+  }
+
+  private type Leaf = (org.apache.hadoop.fs.FileStatus, Seq[(String, String)])
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -1,7 +1,9 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** ANN index PERSISTENCE — the serving handoff of a 100 TB index build.
@@ -44,13 +46,11 @@ import org.apache.spark.sql.types._
   * Scale shape: the quantizer/codebook fits are the bounded driver pulls
   * of [[graft.chain.KMeans]]; the corpus is written once, hive-
   * partitioned on the cell id (cells ∝ n keeps directories scan-sized);
-  * the manifest is one read-back count per component, and those counts
-  * read no column data: the quantizers are read through their declared
-  * schemas ([[CentroidSchema]], [[CodebookSchema]]) and the lists and
-  * codes through their `cell` column alone, so no count pays a schema-
-  * inference job. At 100 TB train both quantizers on a
-  * [[graft.ops.Sampling.hashSample]] and raise `cells` — the layout is
-  * unchanged.
+  * the manifest is counted from the parquet footers of the served data
+  * files, read on the driver — no Spark job, but O(files) footer reads,
+  * so a fold that keeps the file count down keeps the refresh cheap. At
+  * 100 TB train both quantizers on a [[graft.ops.Sampling.hashSample]]
+  * and raise `cells` — the layout is unchanged.
   */
 object AnnIndex extends IndexLifecycle {
 
@@ -71,10 +71,13 @@ object AnnIndex extends IndexLifecycle {
     StructField("sub", IntegerType), StructField("cluster", IntegerType),
     StructField("v", ArrayType(DoubleType))))
 
-  /** The counting schema of the lists and codes: the `cell` column only
-    * (the hive partition column of `vectors/`, a data column of `codes/`).
+  /** The manifest's schema: one row per (component, cell) that holds
+    * rows; `cell` is null for the lists' default (null) partition.
     */
-  private val CellSchema = StructType(Seq(StructField("cell", IntegerType)))
+  private val ManifestSchema = StructType(Seq(
+    StructField("component", StringType, nullable = false),
+    StructField("cell", LongType),
+    StructField("rows", LongType, nullable = false)))
 
   private def centroids(spark: SparkSession, root: String): DataFrame =
     spark.read.schema(CentroidSchema).parquet(s"$root/centroids")
@@ -188,27 +191,33 @@ object AnnIndex extends IndexLifecycle {
     }
 
   /** Per-cell rows for the inverted lists, -1 for the unpartitioned
-    * components; the lists and codes counted over the serving reading
-    * rule's parts (base plus committed deltas, as [[vectorLists]] /
-    * [[pqCodes]] read them), so the manifest can never under-count
-    * absorbed shards. Count-only: no part reads column data or infers a
-    * schema, so a delta whose `vec_id` type differs from the base still
-    * counts. The components are tagged and counted by ONE aggregation,
-    * one shuffle instead of one per component.
+    * components, as a local relation: each data file's row count is read
+    * from its parquet footer on the driver ([[graft.core.Tables.footerRows]])
+    * and summed per (component, cell), so the refresh runs no Spark job.
+    * The lists and codes are counted over the serving reading rule's
+    * parts (base plus committed deltas, as [[vectorLists]] / [[pqCodes]]
+    * read them), so the manifest can never under-count absorbed shards,
+    * and footers carry no `vec_id` type, so a delta whose type differs
+    * from the base still counts. A group with no rows has no manifest
+    * row; a missing part fails as its read would.
     */
-  protected def manifestPlan(spark: SparkSession, root: String): DataFrame = {
+  override protected[graft] def manifestPlan(spark: SparkSession,
+                                            root: String): DataFrame = {
     val deltas = committedDeltas(spark, root)
-    def cells(component: String) =
-      unionParts(spark, root, component, Seq("cell"), deltas, Some(CellSchema))
-    def tagged(component: String, rows: DataFrame, cell: Column) =
-      rows.select(lit(component).as("component"), cell.cast("long").as("cell"))
-    Seq(tagged("vectors", cells("vectors"), col("cell")),
-      tagged("centroids", centroids(spark, root), lit(-1L)),
-      tagged("codebooks", codebooks(spark, root), lit(-1L)),
-      tagged("codes", cells("codes"), lit(-1L)))
-      .reduce(_ unionByName _)
-      .groupBy("component", "cell")
-      .agg(count(lit(1)).as("rows"))
+    def cellOf(kvs: Seq[(String, String)]): java.lang.Long =
+      kvs.collectFirst { case ("cell", v) if v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
+        java.lang.Long.valueOf(v.toLong)
+      }.orNull
+    def counted(component: String, dirs: Seq[String],
+                cell: Seq[(String, String)] => java.lang.Long = _ => -1L) =
+      dirs.flatMap(graft.core.Tables.footerRows(spark, _))
+        .groupMapReduce(f => cell(f._1))(_._2)(_ + _).toSeq
+        .collect { case (c, n) if n > 0 => Row(component, c, n) }
+    val rows = counted("vectors", partDirs(root, "vectors", deltas), cellOf) ++
+      counted("centroids", Seq(s"$root/centroids")) ++
+      counted("codebooks", Seq(s"$root/codebooks")) ++
+      counted("codes", partDirs(root, "codes", deltas))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
   }
 
   /** INCREMENTAL index maintenance — the daily-shard path: append new
@@ -249,7 +258,7 @@ object AnnIndex extends IndexLifecycle {
     * quantizers are frozen, the served results are a pure function of
     * the absorbed vector SET, whatever the absorb order or batching —
     * and a re-stage after a lost fold race writes identical bytes (the
-    * fold copies the frozen quantizers verbatim). Returns true when the
+    * fold copies the frozen quantizer files verbatim). Returns true when the
     * delta was newly committed, false on a replay of an already-committed
     * name — including a name a COMPACTION has since folded into the base.
     */
@@ -275,21 +284,36 @@ object AnnIndex extends IndexLifecycle {
         assignNProbe, "overwrite")
     }
 
-  /** The ANN fold: the quantizers are FROZEN — the centroids and
-    * codebooks copy verbatim and the inverted lists and PQ codes are a
-    * pure rewrite through the serving read rule, no refit — so served
-    * results are bit-identical before and after (spec-pinned).
+  /** The ANN fold: the quantizers are FROZEN — the `centroids/` and
+    * `codebooks/` files are copied byte for byte, no job — and the
+    * inverted lists and PQ codes are a pure rewrite through the serving
+    * read rule, no refit, so served results are bit-identical before and
+    * after (spec-pinned). The rewrites read at [[sized]] width, so a fold
+    * of small deltas writes few files; the cell count for
+    * [[writeClustered]] is the centroids' footer row count.
     */
   protected def componentFolds(spark: SparkSession, root: String,
       newRoot: String, deltas: Seq[String]): Seq[() => Unit] = Seq(
-    () => centroids(spark, root).coalesce(1)
-      .write.mode("overwrite").parquet(s"$newRoot/centroids"),
-    () => codebooks(spark, root).coalesce(1)
-      .write.mode("overwrite").parquet(s"$newRoot/codebooks"),
-    () => writeClustered(unionParts(spark, root, "vectors", VectorCols, deltas),
-      s"$newRoot/vectors", centroids(spark, root).count().toInt),
-    () => unionParts(spark, root, "codes", CodeCols, deltas)
+    () => IndexPublish.copyDir(spark, s"$root/centroids", s"$newRoot/centroids"),
+    () => IndexPublish.copyDir(spark, s"$root/codebooks", s"$newRoot/codebooks"),
+    () => writeClustered(sized(unionParts(spark, root, "vectors", VectorCols, deltas)),
+      s"$newRoot/vectors",
+      graft.core.Tables.footerRows(spark, s"$root/centroids").map(_._2).sum.toInt),
+    () => sized(unionParts(spark, root, "codes", CodeCols, deltas))
       .write.mode("overwrite").parquet(s"$newRoot/codes"))
+
+  /** `df` coalesced to its optimizer size estimate over
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, rounded up, at
+    * least 1: a union of small delta scans otherwise runs (and writes)
+    * one task per file. Not clamped to the shuffle partitions —
+    * `coalesce` never widens, so a large input keeps its scan splits.
+    */
+  private def sized(df: DataFrame): DataFrame = {
+    val advisory = BigInt(math.max(1L, graftbridge.sqlConf(df.sparkSession)
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    df.coalesce(((est + advisory - 1) / advisory).max(1).min(Int.MaxValue).toInt)
+  }
 
   /** The full inverted lists at `root`: base `vectors/` plus every
     * COMMITTED delta's — the one reading rule of the serving paths.

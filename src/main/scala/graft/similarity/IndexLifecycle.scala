@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 /** The atomic versioned-publish protocol shared by every persisted index
   * ([[AnnIndex]], [[HybridIndex]]): build under `path/v{N}`, create the
@@ -25,6 +24,17 @@ private[graft] object IndexPublish {
     // components at the same number must not survive beside the new ones
     // and duplicate reads (the q_chunk_format lesson)
     if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** Copy the directory `src` to `dst` byte for byte, no Spark job:
+    * whatever was at `dst` is deleted first (overwrite semantics).
+    */
+  def copyDir(spark: SparkSession, src: String, dst: String): Unit = {
+    val fs = fsOf(spark, src)
+    val to = new org.apache.hadoop.fs.Path(dst)
+    fs.delete(to, true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(src), fs, to,
+      /* deleteSource = */ false, spark.sparkContext.hadoopConfiguration)
   }
 
   /** Version numbers under `path` that carry the `_PUBLISHED` marker —
@@ -183,14 +193,11 @@ private[similarity] object DeltaLog {
   def migrateLate(spark: SparkSession, oldRoot: String, newRoot: String,
                   folded: Set[String]): Unit = {
     val fs = IndexPublish.fsOf(spark, oldRoot)
-    val conf = spark.sparkContext.hadoopConfiguration
     committed(spark, oldRoot).filterNot(folded).foreach { n =>
-      val src = new org.apache.hadoop.fs.Path(s"$oldRoot/deltas/$n")
-      val dst = new org.apache.hadoop.fs.Path(s"$newRoot/deltas/$n")
-      if (fs.exists(src) && !committed(spark, newRoot).contains(n)) {
-        fs.delete(dst, true)
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst,
-          /* deleteSource = */ false, conf)
+      val src = s"$oldRoot/deltas/$n"
+      if (fs.exists(new org.apache.hadoop.fs.Path(src)) &&
+          !committed(spark, newRoot).contains(n)) {
+        IndexPublish.copyDir(spark, src, s"$newRoot/deltas/$n")
         commit(spark, newRoot, n)
       }
     }
@@ -265,11 +272,14 @@ private[graft] trait IndexLifecycle {
 
   /** Read-back counts of the SERVED index at `root` (base plus committed
     * deltas) — the source-of-truth rule: the manifest says what serves.
+    * [[writeManifest]] collects it, so a plan that is already a local
+    * relation costs no job before the manifest write.
     */
   protected def manifestPlan(spark: SparkSession, root: String): DataFrame
 
-  /** One independent job per component: rewrite base ∪ `deltas` at
-    * `root` as the base of `newRoot` (the jobs run overlapped).
+  /** One independent step per component: rewrite (or copy) base ∪
+    * `deltas` at `root` as the base of `newRoot` (the steps run
+    * overlapped).
     */
   protected def componentFolds(spark: SparkSession, root: String,
                                newRoot: String, deltas: Seq[String]): Seq[() => Unit]
@@ -304,8 +314,10 @@ private[graft] trait IndexLifecycle {
     * it runs once, after the staging writes and before the `_DELTAS`
     * commit — the window a concurrent fold can win the race in.
     *
-    * `refreshManifest` re-counts the WHOLE served index, so batch
-    * absorbers pass false and refresh once per commit batch. A crash
+    * `refreshManifest` re-counts the WHOLE served index — for
+    * [[AnnIndex]] one listing of the served parts, one footer read per
+    * data file on the driver and one write job — so batch absorbers
+    * pass false and refresh once per commit batch. A crash
     * between the commit and the refresh leaves the manifest stale until
     * the next refresh — acceptable: `_DELTAS` bears correctness, the
     * manifest is counts.
@@ -381,24 +393,25 @@ private[graft] trait IndexLifecycle {
     due
   }
 
-  /** The one reading rule of the serving paths, the manifest and the
-    * fold: base `component` plus each delta's in `deltas` (the committed
-    * set, or a fold's pinned snapshot). Each part is read at its own
+  /** The directories of the one reading rule of the serving paths, the
+    * manifests and the folds: base `component`, then each delta's in
+    * `deltas` (the committed set, or a fold's pinned snapshot).
+    */
+  protected def partDirs(root: String, component: String,
+                         deltas: Seq[String]): Seq[String] =
+    s"$root/$component" +: deltas.map(d => s"$root/deltas/$d/$component")
+
+  /** The rows of [[partDirs]], unioned. Each part is read at its own
     * directory, so a hive-partitioned component keeps its partition
-    * column. A declared `schema` reads only its columns; without one
-    * each part takes its own footer's schema ([[graft.core.Tables.parquet]],
-    * read on the driver), so a delta keeps the type its caller wrote.
+    * column, and takes its own footer's schema
+    * ([[graft.core.Tables.parquet]], read on the driver), so a delta
+    * keeps the type its caller wrote.
     */
   protected def unionParts(spark: SparkSession, root: String, component: String,
-                           cols: Seq[String], deltas: Seq[String],
-                           schema: Option[StructType] = None): DataFrame = {
-    def part(dir: String) =
-      schema.fold(graft.core.Tables.parquet(spark, dir))(spark.read.schema(_).parquet(dir))
-        .select(cols.map(col): _*)
-    deltas.foldLeft(part(s"$root/$component")) { (acc, d) =>
-      acc.unionByName(part(s"$root/deltas/$d/$component"))
-    }
-  }
+                           cols: Seq[String], deltas: Seq[String]): DataFrame =
+    partDirs(root, component, deltas)
+      .map(dir => graft.core.Tables.parquet(spark, dir).select(cols.map(col): _*))
+      .reduce(_ unionByName _)
 
   protected def writeManifest(spark: SparkSession, root: String): DataFrame =
     snapshotManifest(spark, root, manifestPlan(spark, root))

@@ -85,19 +85,42 @@ package object graftbridge {
                           file: org.apache.hadoop.fs.FileStatus): types.StructType = {
     import execution.datasources.parquet._
     val conf = sqlConf(spark)
-    val hadoopConf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
     val converter = new ParquetToSparkSchemaConverter(
       assumeBinaryIsString = conf.isParquetBinaryAsString,
       assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
       inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
       nanosAsLong = conf.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
-    val footer = ParquetFooterReader.readFooter(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hadoopConf),
+    val footer = readFooter(spark, file,
       org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(
       new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
   }
+
+  /** The rows of one parquet file, from its footer on the driver: the sum
+    * of its row groups' row counts — the rows a scan of the file reads.
+    */
+  def parquetFooterRows(spark: SparkSession,
+                        file: org.apache.hadoop.fs.FileStatus): Long = {
+    import scala.jdk.CollectionConverters._
+    readFooter(spark, file,
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum
+  }
+
+  private def readFooter(spark: SparkSession, file: org.apache.hadoop.fs.FileStatus,
+      filter: org.apache.parquet.format.converter.ParquetMetadataConverter.MetadataFilter)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    execution.datasources.parquet.ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file,
+        spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()),
+      filter)
+
+  /** Spark's error for a read of a path that does not exist
+    * (`[PATH_NOT_FOUND]`, as `DataSource` raises it).
+    */
+  def pathNotFound(qualifiedPath: String): Throwable =
+    errors.QueryCompilationErrors.dataPathNotExistError(qualifiedPath)
 
   /** The names a file index never lists (`_x` and `.x` but not
     * `_metadata`/`_common_metadata` or `k=v`, and `._COPYING_` files).

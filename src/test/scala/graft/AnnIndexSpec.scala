@@ -425,7 +425,7 @@ class AnnIndexSpec extends SparkTestBase {
   private def jobsOf[A](body: => A): (A, Int) =
     org.apache.spark.TestBus.jobsOf(spark.sparkContext)(body)
 
-  test("job budget: quantizer loads run one job each; a refreshing appendDelta at most 12") {
+  test("job budget: quantizer loads one job each; a refreshing appendDelta at most 5") {
     val p = graft.io.IoScratch.dir + "/ann_job_budget"
     val hconf = spark.sparkContext.hadoopConfiguration
     new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
@@ -444,7 +444,9 @@ class AnnIndexSpec extends SparkTestBase {
     val (added, appendJobs) = jobsOf(AnnIndex.appendDelta(spark, shard,
       "vec_id", "embedding", p, "d1", refreshManifest = true))
     assert(added)
-    assert(appendJobs <= 12, s"appendDelta ran $appendJobs jobs")
+    // the two quantizer loads, the lists and codes writes, the manifest
+    // write: the manifest is counted from footers, no job
+    assert(appendJobs <= 5, s"appendDelta ran $appendJobs jobs")
   }
 
   test("declared quantizer schemas match what export writes; manifest equals an independent recount") {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Spark jobs that move no data are scheduler round trips on short
   * operations: a table load plans without a job, a Lloyd iteration runs
-  * one shuffle, and serving an index infers no schema.
+  * one shuffle, serving an index infers no schema, and a fold copies its
+  * frozen quantizers and counts its manifest without one.
   */
 class JobBudgetSpec extends SparkTestBase {
   import spark.implicits._
@@ -37,6 +38,26 @@ class JobBudgetSpec extends SparkTestBase {
     val want = KMeans.assign(embs, "vec_id", "embedding", centers)
       .select("id", "cluster").as[(Long, Int)].collect().sorted.toSeq
     assert(assigned.select("id", "cluster").as[(Long, Int)].collect().sorted.toSeq == want)
+  }
+
+  test("a folding maintain runs at most 3 jobs") {
+    val p = graft.io.IoScratch.dir + "/job_budget_fold"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+      .delete(new org.apache.hadoop.fs.Path(p), true)
+    val embs = graft.core.Tables.embeddings(spark, sfDir)
+    AnnIndex.export(spark, embs.filter(col("vec_id") < 300), "vec_id", "embedding",
+      p, cells = 4, lloydIters = 3, m = 4, ks = 4, pqIters = 3)
+    assert(AnnIndex.appendDelta(spark, embs.filter(col("vec_id") >= 300 &&
+      col("vec_id") < 400), "vec_id", "embedding", p, "d1"))
+    assert(AnnIndex.appendDelta(spark, embs.filter(col("vec_id") >= 400),
+      "vec_id", "embedding", p, "d2"))
+    // the lists and codes rewrites and the manifest write; the quantizers
+    // are copied as files and the manifest is counted from footers
+    val (folded, jobs) = jobsOf(AnnIndex.maintain(spark, p, minDeltas = 2))
+    assert(folded)
+    info(s"folding maintain: $jobs jobs")
+    assert(jobs <= 3, s"a folding maintain ran $jobs jobs")
   }
 
   test("servedTopK on a one-delta index runs at most 5 jobs") {

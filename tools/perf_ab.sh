@@ -7,18 +7,21 @@
 # `git archive` into a temporary directory (removed on exit). For each seed
 # the script runs `perfbench/run.py --trace 0 --keep` once on each side,
 # alternating which side runs first, and appends each run's `{"record": ...}`
-# line to parent.jsonl or change.jsonl under .bench_build/perf_ab/, and each
+# line to parent.jsonl or change.jsonl under .bench_build/perf_ab/, each
 # operation's median latency (side, seed, calib_ms, op, median_s, count) to
-# ops.tsv there (all three emptied at start); the kept run directory is then
-# deleted. It ends with `perfbench/compare.py parent.jsonl change.jsonl` and a
-# per-operation table from ops.tsv: each side's median over its runs of the
-# per-run medians, and the change in percent. The run length is
-# BENCHMARK.json's run_seconds. The parent side builds its own benchmark from
-# scratch, so its first run takes a few minutes longer.
+# ops.tsv there, and each run's set-up parts (session_s, prepare_s, warmup_s
+# and, for index_rw, export_s, a part of prepare_s) to setup.tsv (all four
+# emptied at start); the kept run directory is then deleted. It ends with
+# `perfbench/compare.py parent.jsonl change.jsonl`, a per-operation table
+# from ops.tsv (each side's median over its runs of the per-run medians, and
+# the change in percent) and the same table of the set-up parts from
+# setup.tsv. The run length is BENCHMARK.json's run_seconds. The parent side
+# builds its own benchmark from scratch, so its first run takes a few
+# minutes longer.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
-  sed -n '2,17p' "$0" | sed 's/^# \{0,1\}//'
+  sed -n '2,20p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
 rev=$1 workload=$2
@@ -35,6 +38,7 @@ mkdir -p "$out"
 : > "$out/parent.jsonl"
 : > "$out/change.jsonl"
 printf 'side\tseed\tcalib_ms\top\tmedian_s\tcount\n' > "$out/ops.tsv"
+printf 'side\tseed\tpart\tseconds\n' > "$out/setup.tsv"
 
 tmp=$(mktemp -d)
 trap 'rm -rf "$tmp"' EXIT
@@ -42,10 +46,11 @@ mkdir "$tmp/parent"
 git -C "$change" archive "$rev" | tar -x -C "$tmp/parent"
 
 # op_medians <side> <seed> <record.json>: one ops.tsv line per operation
+# and one setup.tsv line per set-up part
 op_medians() {
-  python3 - "$@" "$change/perfbench" >> "$out/ops.tsv" <<'PY'
+  python3 - "$@" "$change/perfbench" "$out/setup.tsv" >> "$out/ops.tsv" <<'PY'
 import json, statistics, sys
-side, seed, path, bench = sys.argv[1:5]
+side, seed, path, bench, setup = sys.argv[1:6]
 sys.path.insert(0, bench)
 import analyze
 rec = json.load(open(path))
@@ -56,6 +61,15 @@ for op in rec["ops"]:
 for name in sorted(by_op):
     xs = by_op[name]
     print(f"{side}\t{seed}\t{rec['calib_ms']}\t{name}\t{statistics.median(xs):.4f}\t{len(xs)}")
+# the parts of analyze.setup_s; session_s holds one time per session built,
+# of which setup_s takes the median, and export_s is a part of prepare_s
+parts = {"session_s": statistics.median(rec["session_s"]),
+         "prepare_s": rec["prepare_s"], "warmup_s": rec["warmup_s"]}
+if "export_s" in rec.get("workload_record", {}):
+    parts["export_s"] = rec["workload_record"]["export_s"]
+with open(setup, "a") as fh:
+    for part, secs in parts.items():
+        fh.write(f"{side}\t{seed}\t{part}\t{secs:.4f}\n")
 PY
 }
 
@@ -98,14 +112,17 @@ done
 echo "== $out/parent.jsonl vs $out/change.jsonl"
 python3 "$change/perfbench/compare.py" "$out/parent.jsonl" "$out/change.jsonl"
 
-echo "== per-operation medians (s) from $out/ops.tsv"
-python3 - "$out/ops.tsv" <<'PY'
+# median_table <tsv> <key column> <value column> <title>: each side's median
+# over its runs, the change in percent, and the runs per side
+median_table() {
+  python3 - "$@" <<'PY'
 import csv, statistics, sys
+path, key, value, title = sys.argv[1:5]
 meds = {}
-with open(sys.argv[1]) as fh:
+with open(path) as fh:
     for row in csv.DictReader(fh, delimiter="\t"):
-        meds.setdefault(row["op"], {}).setdefault(row["side"], []).append(float(row["median_s"]))
-print(f"{'operation':<24}{'parent':>10}{'change':>10}{'change %':>10}{'runs':>8}")
+        meds.setdefault(row[key], {}).setdefault(row["side"], []).append(float(row[value]))
+print(f"{title:<24}{'parent':>10}{'change':>10}{'change %':>10}{'runs':>8}")
 for op in sorted(meds):
     p, c = meds[op].get("parent", []), meds[op].get("change", [])
     pm = statistics.median(p) if p else None
@@ -114,3 +131,9 @@ for op in sorted(meds):
     fmt = lambda x: f"{x:.3f}" if x is not None else "-"
     print(f"{op:<24}{fmt(pm):>10}{fmt(cm):>10}{pct:>10}{len(p):>4}/{len(c):<3}")
 PY
+}
+
+echo "== per-operation medians (s) from $out/ops.tsv"
+median_table "$out/ops.tsv" op median_s operation
+echo "== set-up part medians (s) from $out/setup.tsv"
+median_table "$out/setup.tsv" part seconds "set-up part"
