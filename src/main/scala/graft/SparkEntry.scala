@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.{Classic, Pipeline}
 import graft.core.Tables
-import graft.dedup.Dedup
+import graft.dedup.{CorpusPipeline, Dedup}
 import graft.functions.TextAnalysis
 import graft.ops.{AsOfJoin, EstimatePi, RelationalOps, Sampling, TextOps, WindowOps}
 import graft.multimodal.Multimodal
@@ -509,142 +509,30 @@ object SparkEntry {
     }),
 
     // CAPSTONE — the full training-corpus run as ONE declarative plan:
-    // exact-dup-proof near-dedup (keep canonical doc) -> deterministic
-    // train/val/test split -> per-source char budget on the train slice
-    // (hash-priority order) -> token-budget shard packing. Every stage is
-    // the library op; Catalyst sees one query. The oracle replays the
-    // entire chain (closure CTEs + split CASE + budget/pack windows).
-    "q_corpus_run" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
-    }),
+    // the CorpusPipeline chain (near-dedup keep-canonical → split →
+    // per-source char budget → shard pack) over the documents table. The
+    // oracle replays the entire chain (closure CTEs + split CASE +
+    // budget/pack windows).
+    "q_corpus_run" -> ((s, dir) => corpusPack(Tables.documents(s, dir))),
 
-    // CAPSTONE v2 (round 9): the modern pipeline front-to-back in ONE
-    // plan — Gopher-rule QUALITY GATE first (the pass every production
-    // corpus runs before dedup), then the full q_corpus_run chain
-    // (near-dedup keep-canonical → split → per-source char budget →
-    // shard pack) over the surviving docs. The oracle replays the
+    // CAPSTONE v2 (round 9): the Gopher-rule QUALITY GATE first (the
+    // pass every production corpus runs before dedup), then the
+    // q_corpus_run chain over the surviving docs. The oracle replays the
     // quality CTE and re-roots the whole dedup closure on it.
-    //
-    // The gated docs are materialized ONCE (localCheckpoint): Catalyst
-    // does not dedupe common subtrees, and minhashLshEdges + canonicalize
-    // reference their input ~4-6x — without the checkpoint the full
-    // quality gate (scan + text-analysis agg + join) re-runs at every
-    // reference, a real cost when the gate is a full-corpus text pass.
-    "q_corpus_run2" -> ((s, dir) => {
-      val docs0 = Tables.documents(s, dir)
-      val keep = TextOps.qualityRules(docs0, "doc_id", "text")
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val docs = docs0.join(keep, "doc_id").localCheckpoint()
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
-    }),
+    "q_corpus_run2" -> ((s, dir) =>
+      corpusPack(CorpusPipeline.gate(Tables.documents(s, dir)))),
 
-    // CAPSTONE v3 (round 10): the Common-Crawl-shaped FRONT DOOR feeding
-    // the full v2 pipeline in one chain. The corpus is rendered as a
-    // DIRTY crawl — decomposed NFD runs, C0 control bytes, whitespace
-    // runs (the q_normalize dirt, deterministic per doc_id) — into a
-    // spec-layout .warc.gz archive; then task-per-file WARC read → HTTP
-    // body extraction → NFC normalize + control strip + whitespace
-    // collapse → Gopher quality gate → near-dedup keep-canonical → split
-    // → per-source char budget → shard pack. `source` and `n_chars` come
-    // from the ARCHIVE (URI host + cleaned length), never the parquet;
-    // the oracle replays the dirt, the clean, and the whole re-rooted
-    // closure string-level. Parsed docs and gated docs are each
-    // materialized ONCE (localCheckpoint) — neither the WARC parse nor
-    // the quality gate may re-run at every dedup-closure reference.
-    "q_corpus_run3" -> ((s, dir) => {
-      import s.implicits._
-      // fanOut: the archive-render map below is the expensive leg and a
-      // single-split scan would build every record on one task (and one
-      // output file would serialize the read-side parse the same way)
-      val recs = graft.ops.ScaleOps.fanOut(Tables.documents(s, dir))
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-        .map { case (id, src, text) =>
-          val dirt = new StringBuilder(text)
-          if (id % 3 == 0) {
-            dirt.append(" caf")
-            var i = 0L; while (i < 1 + id % 4) { dirt.append("e\u0301"); i += 1 }
-          }
-          if (id % 4 == 0) dirt.append('\u0007').append('\u001f')
-          if (id % 5 == 0) dirt.append("  \t ")
-          val body = dirt.toString.getBytes("UTF-8")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n" +
-            s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:graft:doc:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://$src.test/doc/$id"), http)
-        }
-      val path = graft.io.IoScratch.dir + "/corpus_warc"
-      graft.io.Warc.write(recs, path)
-      val parsed = graft.io.Warc.read(s, path + "/*.warc.gz")
-        .filter(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "^http://([^./]+)\\.test/", 1)
-            .as("source"),
-          col("content"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, src, content) =>
-          val body = graft.io.Warc.httpBody(content).getOrElse(Array.emptyByteArray)
-          (id, src, new String(body, "UTF-8"))
-        }
-        .toDF("doc_id", "source", "text_raw")
-        .localCheckpoint()
-      val docs0 = parsed.select("doc_id", "source")
-        .join(TextOps.normalizeText(parsed, "doc_id", "text_raw")
-          .select(col("id").as("doc_id"), col("text_clean").as("text"),
-            col("n_clean").as("n_chars")), "doc_id")
-      val keep = TextOps.qualityRules(docs0, "doc_id", "text")
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val docs = docs0.join(keep, "doc_id").localCheckpoint()
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
-    }),
+    // CAPSTONE v3 (round 10): the Common-Crawl-shaped FRONT DOOR in
+    // front of v2. The dirty corpus (crawlDirt) is written as text/plain
+    // responses into a spec-layout .warc.gz archive, read back
+    // task-per-file, and its HTTP bodies are normalized (crawlDocs).
+    // `source` and `n_chars` come from the ARCHIVE (URI host + cleaned
+    // length), never the parquet; the oracle replays the dirt, the clean,
+    // and the whole re-rooted closure string-level.
+    "q_corpus_run3" -> ((s, dir) =>
+      corpusPack(CorpusPipeline.gate(crawlDocs(graft.io.Warc.httpText(
+        crawl(s, dir, "corpus_warc")((id, text) =>
+          (crawlDirt(id, text).getBytes("UTF-8"), "text/plain"))))))),
 
     // Fill-in-the-middle transform (round 13): Bavarian et al. 2022 PSM
     // re-serialization at FimRate, both split positions hash-drawn per
@@ -718,99 +606,27 @@ object SparkEntry {
         .orderBy("doc_id", "block_idx")
     }),
 
-    // CAPSTONE v4 (round 13): the real crawl shape end-to-end — the dirty
-    // corpus (q_corpus_run3's NFD/control/whitespace dirt) rendered as
-    // HTML PAGES inside spec-layout .warc.gz archives, then task-per-file
-    // WARC read → HTTP body → HtmlOps.htmlExtract (the front door run3
-    // lacked: real crawl bodies are markup, not plain text) → NFC
-    // normalize + control strip + whitespace collapse → Gopher quality
-    // gate → near-dedup keep-canonical → split → per-source char budget →
-    // shard pack, one declarative plan. The oracle replays the dirt, the
-    // page render (same piece list), the extraction (same step list), the
-    // clean, and the whole re-rooted closure string-level. Extracted docs
-    // and gated docs are each materialized ONCE (localCheckpoint).
-    "q_corpus_run4" -> ((s, dir) => {
-      import s.implicits._
-      // fanOut: the archive-render map below is the expensive leg and a
-      // single-split scan would build every record on one task (and one
-      // output file would serialize the read-side parse the same way)
-      val recs = graft.ops.ScaleOps.fanOut(Tables.documents(s, dir))
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-        .map { case (id, src, text) =>
-          val dirt = new StringBuilder(text)
-          if (id % 3 == 0) {
-            dirt.append(" caf")
-            var i = 0L; while (i < 1 + id % 4) { dirt.append("e\u0301"); i += 1 }
-          }
-          if (id % 4 == 0) dirt.append('\u0007').append('\u001f')
-          if (id % 5 == 0) dirt.append("  \t ")
-          val body = htmlDirtScala(id, dirt.toString).getBytes("UTF-8")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
-            s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:graft:doc:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://$src.test/doc/$id"), http)
-        }
-      val path = graft.io.IoScratch.dir + "/corpus_warc_html"
-      graft.io.Warc.write(recs, path)
-      val parsed = graft.io.Warc.read(s, path + "/*.warc.gz")
-        .filter(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "^http://([^./]+)\\.test/", 1)
-            .as("source"),
-          col("content"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, src, content) =>
-          val body = graft.io.Warc.httpBody(content).getOrElse(Array.emptyByteArray)
-          (id, src, new String(body, "UTF-8"))
-        }
-        .toDF("doc_id", "source", "html_raw")
-        .select(col("doc_id"), col("source"),
-          graft.ops.HtmlOps.htmlExtract(col("html_raw")).as("text_raw"))
-        .localCheckpoint()
-      val docs0 = parsed.select("doc_id", "source")
-        .join(TextOps.normalizeText(parsed, "doc_id", "text_raw")
-          .select(col("id").as("doc_id"), col("text_clean").as("text"),
-            col("n_clean").as("n_chars")), "doc_id")
-      val keep = TextOps.qualityRules(docs0, "doc_id", "text")
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val docs = docs0.join(keep, "doc_id").localCheckpoint()
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
-    }),
+    // CAPSTONE v4 (round 13): v3 with the bodies rendered as HTML PAGES
+    // (htmlPage) and extracted by HtmlOps.htmlExtract before the
+    // normalize — real crawl bodies are markup, not plain text. The
+    // oracle replays the page render (same piece list) and the
+    // extraction (same step list) in front of v3's replay.
+    "q_corpus_run4" -> ((s, dir) =>
+      corpusPack(CorpusPipeline.gate(crawlDocs(
+        graft.io.Warc.httpText(crawl(s, dir, "corpus_warc_html")((id, text) =>
+            htmlPage(id, crawlDirt(id, text))))
+          .withColumn("text_raw",
+            graft.ops.HtmlOps.htmlExtract(col("text_raw"))))))),
 
-    // CAPSTONE v5 (round 13): the v2 chain with a DSIR IMPORTANCE-
-    // SELECTION stage between the quality gate and the dedup — the
-    // modern pipeline where a target-domain model, not just rules,
-    // decides what survives: gate → DSIR top-quartile (target =
-    // lang='en', featureHash bucket space) → near-dedup keep-canonical
-    // → split → per-source budget → shard pack, one plan. Gated docs,
-    // the weight frame, and the selected docs are each materialized
-    // ONCE; the oracle replays gate, the full DSIR weight/threshold
-    // chain re-rooted on the gated docs, and the re-rooted dedup
-    // closure — all through the SAME shared CTE builders as
-    // q_corpus_run2 and q_dsir.
+    // CAPSTONE v5 (round 13): v2 with a DSIR IMPORTANCE-SELECTION stage
+    // between the quality gate and the dedup — a target-domain model,
+    // not just rules, decides what survives: the top quartile of DSIR
+    // weights (target = lang='en', featureHash bucket space). The weight
+    // frame and the selected docs are each materialized ONCE; the oracle
+    // replays the DSIR weight/threshold chain re-rooted on the gated docs
+    // through the SAME shared CTE builders as q_dsir.
     "q_corpus_run5" -> ((s, dir) => {
-      val docs0 = Tables.documents(s, dir)
-      val keep = TextOps.qualityRules(docs0, "doc_id", "text")
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val gated = docs0.join(keep, "doc_id").localCheckpoint()
+      val gated = CorpusPipeline.gate(Tables.documents(s, dir))
       val w = TextOps.dsirWeights(gated, "doc_id", "text",
           col("lang") === "en", dim = 64)
         .localCheckpoint()
@@ -818,215 +634,54 @@ object SparkEntry {
         .select(col("value").as("thr"))
       val sel = w.crossJoin(broadcast(thr))
         .filter(col("lw") >= col("thr")).select(col("id").as("doc_id"))
-      val docs = gated.join(sel, "doc_id").localCheckpoint()
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
+      corpusPack(gated.join(sel, "doc_id").localCheckpoint())
     }),
 
     // CAPSTONE v7 (round 15; round 16: production extract-or-empty +
-    // both PDF file layouts): the MIXED-MEDIA crawl — one WARC archive
-    // set carrying text/html AND application/pdf response payloads (the
-    // real Common-Crawl shape; PDF legs alternate classic-xref and
-    // xref-stream layouts), dispatched through Warc.mediaText (the
-    // production path: a malformed PDF is empty text the gate drops,
-    // never a task-killing throw) into the matching front door (HtmlOps
-    // step chain / Pdf text walk), then run4's chain unchanged:
-    // normalize → Gopher gate →
-    // near-dedup keep-canonical → split → per-source budget → shard
-    // pack. Dirt is planted per-leg within format scope: control chars
-    // and whitespace everywhere, the NFD dirt only on HTML legs (a
-    // combining mark is outside the PDF builder's simple-font Latin-1
-    // scope — documented, and the oracle gates the same clause). The
-    // oracle replays the dispatch as a CTE union: HTML legs through the
-    // shared dirt+extract SQL renderers, PDF legs verbatim (format
-    // invisible, q_pdf_extract's contract), then the SAME clean + gate +
-    // closure + pack builders as run3/4.
-    "q_corpus_run6" -> ((s, dir) => {
-      import s.implicits._
-      // fanOut: the archive-render map below is the expensive leg and a
-      // single-split scan would build every record on one task (and one
-      // output file would serialize the read-side parse the same way)
-      val recs = graft.ops.ScaleOps.fanOut(Tables.documents(s, dir))
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-        .map { case (id, src, text) =>
-          val dirt = new StringBuilder(text)
-          if (id % 3 == 0 && id % 2 == 0) {
-            dirt.append(" caf")
-            var i = 0L; while (i < 1 + id % 4) { dirt.append("e\u0301"); i += 1 }
-          }
-          if (id % 4 == 0) dirt.append('\u0007').append('\u001f')
-          if (id % 5 == 0) dirt.append("  \t ")
-          val (body, ctype) =
-            if (id % 2 == 0)
-              (htmlDirtScala(id, dirt.toString).getBytes("UTF-8"),
-                "text/html; charset=utf-8")
-            else // both real PDF layouts, as in q_warc_mixed
-              (graft.io.Pdf.build(dirt.toString, xrefStream = id % 4 == 3),
-                "application/pdf")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-            s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:graft:doc:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://$src.test/doc/$id"), http)
-        }
-      val path = graft.io.IoScratch.dir + "/corpus_warc_mixed"
-      graft.io.Warc.write(recs, path)
-      val parsed = graft.io.Warc.read(s, path + "/*.warc.gz")
-        .filter(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "^http://([^./]+)\\.test/", 1)
-            .as("source"),
-          col("content"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, src, content) =>
-          // the PRODUCTION dispatch (Warc.mediaText): a malformed PDF is
-          // EMPTY text and the quality gate's to drop — one bad document
-          // in a real archive must never kill the run (fixture queries
-          // pin extraction success; this capstone pins survival)
-          val (kind, text) = graft.io.Warc.mediaText(content, pdfLineSep = "")
-          (id, src, kind, text)
-        }
-        .toDF("doc_id", "source", "kind", "payload")
-        .select(col("doc_id"), col("source"),
-          when(col("kind") === "html",
-            graft.ops.HtmlOps.htmlExtract(col("payload")))
-            .otherwise(col("payload")).as("text_raw"))
-        .localCheckpoint()
-      val docs0 = parsed.select("doc_id", "source")
-        .join(TextOps.normalizeText(parsed, "doc_id", "text_raw")
-          .select(col("id").as("doc_id"), col("text_clean").as("text"),
-            col("n_clean").as("n_chars")), "doc_id")
-      val keep = TextOps.qualityRules(docs0, "doc_id", "text")
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val docs = docs0.join(keep, "doc_id").localCheckpoint()
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
-    }),
+    // both PDF file layouts): the MIXED-MEDIA crawl — one archive set
+    // carrying text/html (even ids) AND application/pdf (odd ids, classic
+    // xref and xref-stream layouts alternating) responses, the real
+    // Common-Crawl shape, dispatched by mediaDocs, then run4's chain. The
+    // NFD dirt lands on HTML legs only (crawlDirt's `mixed`). The oracle
+    // replays the dispatch as a CTE union: HTML legs through the shared
+    // dirt+extract SQL renderers, PDF legs verbatim (format invisible,
+    // q_pdf_extract's contract).
+    "q_corpus_run6" -> ((s, dir) =>
+      corpusPack(CorpusPipeline.gate(crawlDocs(mediaDocs(
+        crawl(s, dir, "corpus_warc_mixed") { (id, text) =>
+          val dirty = crawlDirt(id, text, mixed = true)
+          if (id % 2 == 0) htmlPage(id, dirty)
+          else (graft.io.Pdf.build(dirty, xrefStream = id % 4 == 3),
+            "application/pdf")
+        }))))),
 
-    // CAPSTONE v8 (round 17): the run6 mixed-media chain with the whole
-    // round-17 front door in the loop. The PDF legs cycle EVERY file/
-    // font/cipher layout — classic, 1.5 xref+object streams, Type0/CID
-    // with a generated ToUnicode CMap, AESV2- and RC4-128-encrypted
-    // (empty user password) — all format-invisible by contract; PII
-    // spans (email + phone) planted into a third of the documents ride
-    // the archive round-trip and are scrubbed by the Pii chain between
+    // CAPSTONE v8 (round 17): run6 with the whole round-17 front door in
+    // the loop. The PDF legs cycle EVERY file/font/cipher layout —
+    // classic, 1.5 xref+object streams, Type0/CID with a generated
+    // ToUnicode CMap, AESV2- and RC4-128-encrypted (empty user password)
+    // — all format-invisible by contract. PII spans (email + phone)
+    // planted into a third of the documents (crawlDirt's `pii`) ride the
+    // archive round trip and are scrubbed by the Pii chain between
     // normalize and the quality gate, with n_chars re-taken on the
-    // REDACTED text so the budget/pack arithmetic downstream sees what
-    // a release sink would. Oracle: the shared run6 CTE builders plus
-    // the PII plant + redact CTEs (patterns interpolated from
-    // Pii.Patterns — nothing can drift).
+    // REDACTED text so the budget/pack arithmetic sees what a release
+    // sink would. Oracle: the run6 replay plus the PII plant + redact
+    // CTEs (patterns interpolated from Pii.Patterns).
     "q_corpus_run7" -> ((s, dir) => {
-      import s.implicits._
-      // fanOut: the archive-render map below is the expensive leg and a
-      // single-split scan would build every record on one task (and one
-      // output file would serialize the read-side parse the same way)
-      val recs = graft.ops.ScaleOps.fanOut(Tables.documents(s, dir))
-        .select(col("doc_id"), col("source"), col("text"))
-        .as[(Long, String, String)]
-        .map { case (id, src, text) =>
-          val dirt = new StringBuilder(text)
-          if (id % 3 == 0 && id % 2 == 0) {
-            dirt.append(" caf")
-            var i = 0L; while (i < 1 + id % 4) { dirt.append("e\u0301"); i += 1 }
-          }
-          if (id % 4 == 0) dirt.append('\u0007').append('\u001f')
-          if (id % 5 == 0) dirt.append("  \t ")
-          if (id % 3 == 0) // the PII plant rides the whole front door
-            dirt.append(" mail u").append(id).append("@ex.org tel 555-123-")
-              .append(f"${id % 10000}%04d")
-          val (body, ctype) =
-            if (id % 2 == 0)
-              (htmlDirtScala(id, dirt.toString).getBytes("UTF-8"),
-                "text/html; charset=utf-8")
-            else // every round-17 PDF layout, cycled by id
-              (graft.io.Pdf.build(dirt.toString,
-                xrefStream = id % 4 == 3,
-                cidFont = id % 8 == 1,
-                encrypt = (id % 8: @annotation.switch) match {
-                  case 5 => "aesv2"; case 7 => "rc4-128"; case _ => ""
-                }),
-                "application/pdf")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-            s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:graft:doc:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://$src.test/doc/$id"), http)
-        }
-      val path = graft.io.IoScratch.dir + "/corpus_warc_mixed7"
-      graft.io.Warc.write(recs, path)
-      val parsed = graft.io.Warc.read(s, path + "/*.warc.gz")
-        .filter(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "^http://([^./]+)\\.test/", 1)
-            .as("source"),
-          col("content"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, src, content) =>
-          val (kind, text) = graft.io.Warc.mediaText(content, pdfLineSep = "")
-          (id, src, kind, text)
-        }
-        .toDF("doc_id", "source", "kind", "payload")
-        .select(col("doc_id"), col("source"),
-          when(col("kind") === "html",
-            graft.ops.HtmlOps.htmlExtract(col("payload")))
-            .otherwise(col("payload")).as("text_raw"))
-        .localCheckpoint()
-      // normalize -> PII scrub -> n_chars on the REDACTED text
-      val docs0 = parsed.select("doc_id", "source")
-        .join(TextOps.normalizeText(parsed, "doc_id", "text_raw")
-          .select(col("id").as("doc_id"),
-            graft.ops.Pii.redactCol(col("text_clean")).as("text")), "doc_id")
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      val keep = TextOps.qualityRules(docs0, "doc_id", "text")
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val docs = docs0.join(keep, "doc_id").localCheckpoint()
-      val edges = Dedup.minhashLshEdges(docs, "doc_id", "text",
-        shingleN = 2, bands = 4, rowsPerBand = 4, tau = 0.8)
-      val kept = docs.join(Dedup.canonicalize(docs, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = 3000L)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars", budget = 8000L)
-        .select("doc_id", "cum", "shard")
-        .orderBy("doc_id")
+      val docs = crawlDocs(mediaDocs(
+        crawl(s, dir, "corpus_warc_mixed7") { (id, text) =>
+          val dirty = crawlDirt(id, text, mixed = true, pii = true)
+          if (id % 2 == 0) htmlPage(id, dirty)
+          else (graft.io.Pdf.build(dirty,
+              xrefStream = id % 4 == 3,
+              cidFont = id % 8 == 1,
+              encrypt = (id % 8) match {
+                case 5 => "aesv2"; case 7 => "rc4-128"; case _ => ""
+              }),
+            "application/pdf")
+        }))
+      corpusPack(CorpusPipeline.gate(docs
+        .withColumn("text", graft.ops.Pii.redactCol(col("text")))
+        .withColumn("n_chars", length(col("text")).cast("long"))))
     }),
 
     // Sequential funnel: users completing view -> click -> purchase in
@@ -4139,11 +3794,8 @@ object SparkEntry {
           minBytesPerTask = 128L << 10)
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
-          val body = text.getBytes("UTF-8")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n" +
-            s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:graft:doc:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://corpus.test/doc/$id"), http)
+          graft.io.Warc.httpResponse(id, "corpus", "text/plain",
+            text.getBytes("UTF-8"))
         }
       val path = graft.io.IoScratch.dir + "/documents_warc"
       graft.io.Warc.write(recs, path)
@@ -4274,17 +3926,13 @@ object SparkEntry {
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
           val (body, ctype) =
-            if (id % 2 == 0)
-              (htmlDirtScala(id, text).getBytes("UTF-8"), "text/html; charset=utf-8")
+            if (id % 2 == 0) htmlPage(id, text)
             else // PDF legs alternate the two real file layouts (classic
                  // xref table / PDF 1.5 xref+object streams) — the archive
                  // shape a real crawl mixes, same extracted text either way
               (graft.io.Pdf.build(text, xrefStream = id % 4 == 3),
                 "application/pdf")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ctype\r\n" +
-            s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:graft:doc:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://corpus.test/doc/$id"), http)
+          graft.io.Warc.httpResponse(id, "corpus", ctype, body)
         }
       val path = graft.io.IoScratch.dir + "/documents_warc_mixed"
       graft.io.Warc.write(recs, path)
@@ -4929,6 +4577,101 @@ object SparkEntry {
         .replace(">", "&gt;")
     }.mkString
 
+  /** [[htmlDirtScala]]'s page as an HTTP body and its Content-Type. */
+  private def htmlPage(id: Long, text: String): (Array[Byte], String) =
+    (htmlDirtScala(id, text).getBytes("UTF-8"), "text/html; charset=utf-8")
+
+  /** The dirty-crawl rendering of one document (q_normalize's dirt
+    * arithmetic, deterministic per doc_id; oracle: [[WarcDirtyCte]]): NFD
+    * "café" runs, C0 control bytes, whitespace runs. `mixed` plants the
+    * NFD dirt on even (HTML) ids only, since a combining mark is outside
+    * the PDF builder's simple-font Latin-1 scope; `pii` appends an email
+    * address and a phone number to every third document.
+    */
+  private def crawlDirt(id: Long, text: String, mixed: Boolean = false,
+                        pii: Boolean = false): String = {
+    val dirt = new StringBuilder(text)
+    if (id % 3 == 0 && (!mixed || id % 2 == 0)) {
+      dirt.append(" caf")
+      var i = 0L; while (i < 1 + id % 4) { dirt.append("e\u0301"); i += 1 }
+    }
+    if (id % 4 == 0) dirt.append('\u0007').append('\u001f')
+    if (id % 5 == 0) dirt.append("  \t ")
+    if (pii && id % 3 == 0)
+      dirt.append(" mail u").append(id).append("@ex.org tel 555-123-")
+        .append(f"${id % 10000}%04d")
+    dirt.toString
+  }
+
+  /** The crawl round trip of the WARC capstones: each document's text
+    * rendered by `render(id, text)` to an HTTP body and its Content-Type,
+    * framed as a response from its source, written under
+    * `IoScratch.dir/name` and read back as (doc_id, source, content).
+    */
+  private def crawl(s: SparkSession, dir: String, name: String)(
+      render: (Long, String) => (Array[Byte], String)): DataFrame = {
+    import s.implicits._
+    // fanOut: the archive-render map below is the expensive leg and a
+    // single-split scan would build every record on one task (and one
+    // output file would serialize the read-side parse the same way)
+    val recs = graft.ops.ScaleOps.fanOut(Tables.documents(s, dir))
+      .select(col("doc_id"), col("source"), col("text"))
+      .as[(Long, String, String)]
+      .map { case (id, src, text) =>
+        val (body, ctype) = render(id, text)
+        graft.io.Warc.httpResponse(id, src, ctype, body)
+      }
+    graft.io.Warc.roundTrip(recs, graft.io.IoScratch.dir + "/" + name)
+  }
+
+  /** [[crawl]]'s mixed-media payloads through the PRODUCTION dispatch
+    * (Warc.mediaText: a malformed PDF is EMPTY text for the quality gate
+    * to drop — one bad document in a real archive must never kill the
+    * run), HTML legs extracted by HtmlOps.htmlExtract:
+    * (doc_id, source, text_raw).
+    */
+  private def mediaDocs(raw: DataFrame): DataFrame = {
+    val s = raw.sparkSession
+    import s.implicits._
+    raw.as[(Long, String, Array[Byte])]
+      .map { case (id, src, content) =>
+        val (kind, text) = graft.io.Warc.mediaText(content, pdfLineSep = "")
+        (id, src, kind, text)
+      }
+      .toDF("doc_id", "source", "kind", "payload")
+      .select(col("doc_id"), col("source"),
+        when(col("kind") === "html",
+          graft.ops.HtmlOps.htmlExtract(col("payload")))
+          .otherwise(col("payload")).as("text_raw"))
+  }
+
+  /** Decoded crawl docs `(doc_id, source, text_raw)` materialized ONCE
+    * (the archive parse must not re-run at every dedup-closure
+    * reference), then NFC normalize + control strip + whitespace collapse
+    * (oracle: [[WarcCleanCtes]]): (doc_id, source, text, n_chars), with
+    * n_chars the cleaned length.
+    */
+  private def crawlDocs(decoded: DataFrame): DataFrame = {
+    val parsed = decoded.localCheckpoint()
+    parsed.select("doc_id", "source")
+      .join(TextOps.normalizeText(parsed, "doc_id", "text_raw")
+        .select(col("id").as("doc_id"), col("text_clean").as("text"),
+          col("n_clean").as("n_chars")), "doc_id")
+  }
+
+  /** The capstones' per-source char budget and shard budget, shared with
+    * the oracle's [[CorpusDedupAndPackSql]].
+    */
+  private final val CorpusSourceBudget = 3000L
+  private final val CorpusShardBudget = 8000L
+
+  /** [[CorpusPipeline.dedupSplitPack]] at the fixture budgets, in doc_id
+    * order.
+    */
+  private def corpusPack(docs: DataFrame): DataFrame =
+    CorpusPipeline.dedupSplitPack(docs, CorpusSourceBudget, CorpusShardBudget)
+      .orderBy("doc_id")
+
   /** `id` / `text` are SQL expressions (id must already be VARCHAR). */
   private def htmlDirtSql(id: String, text: String): String =
     HtmlDirtPieces.map {
@@ -5054,28 +4797,15 @@ object SparkEntry {
       |  SELECT r.src, u.dst FROM reach r JOIN und u ON u.src = r.dst),
       |lbl AS (SELECT src AS id, min(dst) AS canon FROM reach GROUP BY src)""".stripMargin
 
-  /** The dirty-crawl corpus (q_normalize's dirt arithmetic — NFD runs,
-    * C0 control bytes, whitespace runs, deterministic per doc_id) as one
+  /** The dirty-crawl corpus ([[crawlDirt]] without its PII plant) as one
     * CTE `wdirty(doc_id, source, t)`; shared root of the q_corpus_run3/4
-    * oracles. Carries the leading WITH RECURSIVE (the closure needs it).
+    * (`mixed = false`) and q_corpus_run6/7 (`mixed = true`: the NFD dirt
+    * on EVEN ids only) oracles. Carries the leading WITH RECURSIVE (the
+    * closure needs it).
     */
-  private def WarcDirtyCte: String =
-    """WITH RECURSIVE wdirty AS (SELECT doc_id, source, text ||
-      |    CASE WHEN doc_id % 3 = 0
-      |         THEN ' caf' || repeat('e' || chr(769), CAST(1 + doc_id % 4 AS INT))
-      |         ELSE '' END ||
-      |    CASE WHEN doc_id % 4 = 0 THEN chr(7) || chr(31) ELSE '' END ||
-      |    CASE WHEN doc_id % 5 = 0 THEN '  ' || chr(9) || ' ' ELSE '' END AS t
-      |  FROM documents),""".stripMargin
-
-  /** [[WarcDirtyCte]]'s mixed-media twin (q_corpus_run6): the NFD dirt
-    * is additionally gated on EVEN ids — the PDF legs (odd ids) stay
-    * within the builder's simple-font Latin-1 scope; control/whitespace
-    * dirt lands on every leg, exactly as the Scala record builder does.
-    */
-  private def WarcMixedDirtyCte: String =
-    """WITH RECURSIVE wdirty AS (SELECT doc_id, source, text ||
-      |    CASE WHEN doc_id % 3 = 0 AND doc_id % 2 = 0
+  private def WarcDirtyCte(mixed: Boolean): String =
+    s"""WITH RECURSIVE wdirty AS (SELECT doc_id, source, text ||
+      |    CASE WHEN doc_id % 3 = 0${if (mixed) " AND doc_id % 2 = 0" else ""}
       |         THEN ' caf' || repeat('e' || chr(769), CAST(1 + doc_id % 4 AS INT))
       |         ELSE '' END ||
       |    CASE WHEN doc_id % 4 = 0 THEN chr(7) || chr(31) ELSE '' END ||
@@ -5096,12 +4826,6 @@ object SparkEntry {
       |wdocs AS (SELECT doc_id, source, text,
       |    CAST(length(text) AS BIGINT) AS n_chars FROM wclean),""".stripMargin
 
-  /** The shared back half of every corpus-run oracle: Gopher quality gate
-    * over `$root(doc_id, source, text, n_chars)` → the dedup closure
-    * re-rooted (string-level: documents → qdocs) → keep-canonical → md5
-    * split → per-source budget window → global pack window. Formerly
-    * duplicated verbatim across the q_corpus_run2/3 oracles.
-    */
   /** The capstone back half — dedup closure re-rooted on `root`, then
     * split → per-source budget → shard pack (one definition shared by
     * every corpus_run oracle, so the chains cannot drift).
@@ -5124,10 +4848,10 @@ object SparkEntry {
       |          CAST(sum(n_chars) OVER (PARTITION BY source ORDER BY pri, doc_id
       |                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS scum
       |        FROM train),
-      |cf AS (SELECT doc_id, n_chars FROM cap WHERE scum <= 3000)
+      |cf AS (SELECT doc_id, n_chars FROM cap WHERE scum <= $CorpusSourceBudget)
       |SELECT doc_id,
       |       CAST(sum(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-      |       CAST((sum(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_chars) // 8000 AS BIGINT) AS shard
+      |       CAST((sum(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_chars) // $CorpusShardBudget AS BIGINT) AS shard
       |FROM cf ORDER BY doc_id""".stripMargin
   }
 
@@ -7451,27 +7175,7 @@ FROM planted ORDER BY doc_id"""
 
     // The whole pipeline replayed: closure CTEs -> keep-canonical ->
     // md5 split -> per-source budget window -> global pack window.
-    "q_corpus_run" ->
-      (DedupClosureCtes + ",\n" +
-        s"""canon AS (SELECT d.doc_id, d.source, d.n_chars,
-        |             coalesce(l.canon, d.doc_id) AS canon_id
-        |           FROM documents d LEFT JOIN lbl l ON l.id = d.doc_id),
-        |kept AS (SELECT doc_id, source, n_chars FROM canon WHERE doc_id = canon_id),
-        |sp AS (SELECT doc_id, source, n_chars,
-        |         ${graft.ops.Sampling.splitByHashSql("doc_id", Seq(0.8, 0.1, 0.1), "run")} AS split
-        |       FROM kept),
-        |train AS (SELECT doc_id, source, n_chars,
-        |            ${graft.ops.Sampling.hashDrawSql("doc_id", "runpri")} AS pri
-        |          FROM sp WHERE split = 0),
-        |cap AS (SELECT doc_id, n_chars,
-        |          CAST(sum(n_chars) OVER (PARTITION BY source ORDER BY pri, doc_id
-        |                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS scum
-        |        FROM train),
-        |cf AS (SELECT doc_id, n_chars FROM cap WHERE scum <= 3000)
-        |SELECT doc_id,
-        |       CAST(sum(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
-        |       CAST((sum(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_chars) // 8000 AS BIGINT) AS shard
-        |FROM cf ORDER BY doc_id""".stripMargin),
+    "q_corpus_run" -> ("WITH RECURSIVE " + CorpusDedupAndPackSql("documents")),
 
     // quality gate replayed, then the ENTIRE dedup-closure + split +
     // budget + shard chain re-rooted on the surviving docs (the shared
@@ -7497,7 +7201,7 @@ FROM planted ORDER BY doc_id"""
     // source; n_chars = cleaned length, NOT the table column). The WARC
     // container itself is proven invisible by q_warc_roundtrip.
     "q_corpus_run3" ->
-      (WarcDirtyCte + "\n" + WarcCleanCtes("wdirty", "t") + "\n" +
+      (WarcDirtyCte(mixed = false) + "\n" + WarcCleanCtes("wdirty", "t") + "\n" +
         CorpusGateAndPackSql("wdocs")),
 
     // Capstone v4: v3 with the HTML front door in the middle — the dirty
@@ -7507,7 +7211,7 @@ FROM planted ORDER BY doc_id"""
     // clean + gate + closure + pack chain over the extracted text. The
     // WARC container itself is proven invisible by q_warc_roundtrip.
     "q_corpus_run4" ->
-      (WarcDirtyCte + "\n" +
+      (WarcDirtyCte(mixed = false) + "\n" +
         s"""wh AS (SELECT doc_id, source, ${htmlDirtSql("CAST(doc_id AS VARCHAR)", "t")} AS html
            |  FROM wdirty),
            |wx AS (SELECT doc_id, source, ${graft.ops.HtmlOps.htmlExtractSql("html")} AS t
@@ -7520,7 +7224,7 @@ FROM planted ORDER BY doc_id"""
     // verbatim (format invisible, q_pdf_extract's contract) — then the
     // SAME clean + gate + closure + pack chain as run3/4.
     "q_corpus_run6" ->
-      (WarcMixedDirtyCte + "\n" +
+      (WarcDirtyCte(mixed = true) + "\n" +
         s"""wh AS (SELECT doc_id, source, ${htmlDirtSql("CAST(doc_id AS VARCHAR)", "t")} AS html
            |  FROM wdirty WHERE doc_id % 2 = 0),
            |wx AS (SELECT doc_id, source, ${graft.ops.HtmlOps.htmlExtractSql("html")} AS t
@@ -7535,7 +7239,7 @@ FROM planted ORDER BY doc_id"""
     // with n_chars re-taken on the redacted text. The PDF cipher/font
     // layouts are invisible by contract, so the SQL never models them.
     "q_corpus_run7" ->
-      (WarcMixedDirtyCte + "\n" +
+      (WarcDirtyCte(mixed = true) + "\n" +
         s"""wpd AS (SELECT doc_id, source, t ||
            |    CASE WHEN doc_id % 3 = 0
            |         THEN ' mail u' || CAST(doc_id AS VARCHAR) || '@ex.org tel 555-123-' ||

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -32,6 +32,19 @@ object Warc {
                         targetUri: Option[String], content: Array[Byte])
 
   private val Crlf = "\r\n".getBytes("US-ASCII")
+
+  /** The HTTP 200 `response` record of document `id` from `source`: the
+    * payload is the status line, `Content-Type`, `Content-Length`, a blank
+    * line and `body`; the record id is `<urn:graft:doc:id>` and the target
+    * URI `http://source.test/doc/id`, the layout [[roundTrip]] parses back.
+    */
+  def httpResponse(id: Long, source: String, contentType: String,
+                   body: Array[Byte]): WarcRecord = {
+    val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $contentType\r\n" +
+      s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++ body
+    WarcRecord("response", s"<urn:graft:doc:$id>", "2026-01-01T00:00:00Z",
+      Some(s"http://$source.test/doc/$id"), http)
+  }
 
   /** Serialize one record (returns the exact on-wire bytes). */
   def recordBytes(r: WarcRecord): Array[Byte] = {
@@ -228,9 +241,6 @@ object Warc {
     }
   }
 
-  /** Distributed read: task-per-file binary scan → parsed records.
-    * Output: (file, warc_type, record_id, date, target_uri, content).
-    */
   /** Decode one archive file's bytes to records: gunzip when the path
     * says so, then the record parse. The shared task-body of the batch
     * [[read]] and the streaming landing-directory ingest.
@@ -241,6 +251,9 @@ object Warc {
     parseAll(raw, strict)
   }
 
+  /** Distributed read: task-per-file binary scan → parsed records.
+    * Output: (file, warc_type, record_id, date, target_uri, content).
+    */
   def read(spark: SparkSession, glob: String,
            strict: Boolean = true): DataFrame = {
     import spark.implicits._
@@ -295,5 +308,35 @@ object Warc {
           (path, r.warcType, r.recordId, r.date, r.targetUri.orNull, r.content))
       }
       .toDF("file", "warc_type", "record_id", "date", "target_uri", "content")
+  }
+
+  /** The crawl round trip: [[write]] `recs` under `path`, [[read]] it
+    * back and keep the `response` records as (doc_id, source, content),
+    * with doc_id and source parsed from the target URI that
+    * [[httpResponse]] writes.
+    */
+  def roundTrip(recs: Dataset[WarcRecord], path: String): DataFrame = {
+    write(recs, path)
+    read(recs.sparkSession, path + "/*.warc.gz")
+      .filter(col("warc_type") === "response")
+      .select(
+        regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
+          .cast("long").as("doc_id"),
+        regexp_extract(col("target_uri"), "^http://([^./]+)\\.test/", 1)
+          .as("source"),
+        col("content"))
+  }
+
+  /** [[roundTrip]]'s responses with their HTTP bodies decoded as UTF-8:
+    * (doc_id, source, text_raw).
+    */
+  def httpText(responses: DataFrame): DataFrame = {
+    val spark = responses.sparkSession
+    import spark.implicits._
+    responses.as[(Long, String, Array[Byte])]
+      .map { case (id, src, content) =>
+        (id, src, new String(httpBody(content).getOrElse(Array.emptyByteArray), "UTF-8"))
+      }
+      .toDF("doc_id", "source", "text_raw")
   }
 }

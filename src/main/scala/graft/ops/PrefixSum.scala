@@ -121,13 +121,10 @@ object PrefixSum {
     * G·P-row aggregate (windowed per group, ≤ P rows per window — nothing
     * collects to the driver) and broadcast-joined back. Result is
     * bit-identical to the one-task window (PrefixSumSpec asserts it).
-    * `orderCols` must be a total order within each group. For
-    * dictionary-scale G (millions of domains) where a G·P-row broadcast no
-    * longer fits, pass `hintBroadcast = false` and let AQE pick the join.
+    * `orderCols` must be a total order within each group.
     */
   def prefixSumByGroup(df: DataFrame, groupCol: String, orderCols: Seq[String],
-                       valCol: String, partitions: Int = 32,
-                       hintBroadcast: Boolean = true): DataFrame = {
+                       valCol: String, partitions: Int = 32): DataFrame = {
     val reserved = Seq("_pid", "_local", "_c", "_off", "_opid", "_og")
     reserved.foreach(c => require(!df.columns.contains(c),
       s"prefixSumByGroup: input must not contain reserved column '$c'"))
@@ -146,10 +143,9 @@ object PrefixSum {
       .agg(sum(col(valCol).cast("long")).as("_c"))
     val wOff = Window.partitionBy(groupCol).orderBy("_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offs0 = cnts
+    val offs = broadcast(cnts
       .withColumn("_off", coalesce(sum(col("_c")).over(wOff), lit(0L)))
-      .select(col("_pid").as("_opid"), col(groupCol).as("_og"), col("_off"))
-    val offs = if (hintBroadcast) broadcast(offs0) else offs0
+      .select(col("_pid").as("_opid"), col(groupCol).as("_og"), col("_off")))
     local.join(offs,
         col("_pid") === col("_opid") && col(groupCol) === col("_og"))
       .withColumn("cum", col("_local") + col("_off"))

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dedup.Dedup
+import graft.dedup.{CorpusPipeline, Dedup}
 import graft.similarity.Similarity
 
 /** Synthetic sf1-equivalent scale probe for the similarity suite.
@@ -594,25 +594,12 @@ object ScaleProbe {
       Dedup.splitLeakageSafe(docs, "doc_id",
         Dedup.minhashLshEdges(docs, "doc_id", "text", 2, 4, 4, 0.8),
         Seq(0.8, 0.1, 0.1)) }
-    timed("corpus_run") {
-      val src = docs.withColumn("source",
+    // the corpus chain at budgets scaled with n (20 sources)
+    val sourced = docs.withColumn("source",
         concat(lit("s"), pmod(col("doc_id"), lit(20))))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      val edges = Dedup.minhashLshEdges(src, "doc_id", "text", 2, 4, 4, 0.8)
-      val kept = src.join(Dedup.canonicalize(src, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = graft.ops.Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", graft.ops.Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = n * 20)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars",
-        budget = n * 10)
-    }
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    def pack(d: DataFrame) = CorpusPipeline.dedupSplitPack(d, n * 20, n * 10)
+    timed("corpus_run") { pack(sourced) }
 
     // dedup_scaled crossover, quantified on a PLANTED exact-dup-heavy
     // corpus (the regime the collapse+star path exists for): half the
@@ -799,32 +786,13 @@ object ScaleProbe {
     // most-frequent synthetic tokens so the gate keeps most docs and the
     // full text-analysis aggregation really runs.
     val probeStops = (0 until 500).map(i => s"w$i")
-    def gatedChain(checkpoint: Boolean): DataFrame = {
-      val src = docs.withColumn("source",
-        concat(lit("s"), pmod(col("doc_id"), lit(20))))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      val keep = graft.ops.TextOps.qualityRules(src, "doc_id", "text",
+    timed("corpus_run2_ckpt") { pack(CorpusPipeline.gate(sourced, probeStops)) }
+    timed("corpus_run2_nockpt") { // the gate inline, un-materialized
+      val keep = graft.ops.TextOps.qualityRules(sourced, "doc_id", "text",
           stopwords = probeStops)
         .filter(col("keep")).select(col("id").as("doc_id"))
-      val gated0 = src.join(keep, "doc_id")
-      val gated = if (checkpoint) gated0.localCheckpoint() else gated0
-      val edges = Dedup.minhashLshEdges(gated, "doc_id", "text", 2, 4, 4, 0.8)
-      val kept = gated.join(Dedup.canonicalize(gated, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = graft.ops.Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", graft.ops.Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = n * 20)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars",
-        budget = n * 10)
+      pack(sourced.join(keep, "doc_id"))
     }
-    timed("corpus_run2_ckpt") { gatedChain(checkpoint = true) }
-    timed("corpus_run2_nockpt") { gatedChain(checkpoint = false) }
 
     // Capstone v3 probe: the WARC front door feeding the gated chain —
     // archive write+read+HTTP-body extraction + normalize ahead of the
@@ -841,49 +809,18 @@ object ScaleProbe {
       import spark.implicits._
       val recs = docs.select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, text) =>
-          val body = text.getBytes("UTF-8")
-          val http = (s"HTTP/1.1 200 OK\r\nContent-Length: ${body.length}\r\n\r\n")
-            .getBytes("US-ASCII") ++ body
-          graft.io.Warc.WarcRecord("response", s"<urn:probe:$id>",
-            "2026-01-01T00:00:00Z", Some(s"http://s${id % 20}.test/doc/$id"), http)
+          graft.io.Warc.httpResponse(id, s"s${id % 20}", "text/plain",
+            text.getBytes("UTF-8"))
         }
-      val path = graft.io.IoScratch.dir + "/probe_warc3"
-      graft.io.Warc.write(recs, path)
-      val parsed = graft.io.Warc.read(spark, path + "/*.warc.gz")
-        .filter(col("warc_type") === "response")
-        .select(regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"),
-          regexp_extract(col("target_uri"), "^http://([^./]+)\\.test/", 1)
-            .as("source"), col("content"))
-        .as[(Long, String, Array[Byte])]
-        .map { case (id, src, c) =>
-          (id, src, new String(graft.io.Warc.httpBody(c)
-            .getOrElse(Array.emptyByteArray), "UTF-8")) }
-        .toDF("doc_id", "source", "text_raw")
+      val parsed = graft.io.Warc.httpText(graft.io.Warc.roundTrip(recs,
+          graft.io.IoScratch.dir + "/probe_warc3"))
         .localCheckpoint()
       cr3Parsed = parsed
       val base = parsed.select(col("doc_id"), col("source"),
           col("text_raw").as("text"))
         .withColumn("n_chars", length(col("text")).cast("long"))
-      val keep = graft.ops.TextOps.qualityRules(base, "doc_id", "text",
-          stopwords = probeStops)
-        .filter(col("keep")).select(col("id").as("doc_id"))
-      val gated = base.join(keep, "doc_id").localCheckpoint()
-      cr3Gated = gated
-      val edges = Dedup.minhashLshEdges(gated, "doc_id", "text", 2, 4, 4, 0.8)
-      val kept = gated.join(Dedup.canonicalize(gated, "doc_id", edges), "doc_id")
-        .filter(col("doc_id") === col("canon_id"))
-        .select("doc_id", "source", "n_chars")
-      val train = graft.ops.Sampling.splitByHash(kept, col("doc_id"),
-          Seq(0.8, 0.1, 0.1), salt = "run")
-        .filter(col("split") === 0)
-        .withColumn("pri", graft.ops.Sampling.hashDraw(col("doc_id"), "runpri"))
-      val capped = graft.ops.PrefixSum.budgetCapPerGroup(
-          train.select("doc_id", "source", "n_chars", "pri"),
-          "source", Seq("pri", "doc_id"), "n_chars", budget = n * 20)
-        .select("doc_id", "n_chars")
-      graft.ops.PrefixSum.packShards(capped, "doc_id", "n_chars",
-        budget = n * 10)
+      cr3Gated = CorpusPipeline.gate(base, probeStops)
+      pack(cr3Gated)
     }
     if (cr3Parsed != null) { // cheap: both are already materialized
       rows("corpus_run3_parsed") = cr3Parsed.count()

@@ -18,13 +18,7 @@ object StageProbe {
       else "/root/testdata/sf0.1"
     val names = args.filter(_.startsWith("q_")).toSeq
     require(names.nonEmpty, "StageProbe: give at least one q_* name")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession.builder("graft-stage-probe", cores = 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: tables + one plan per codegen family (the Bench protocol)

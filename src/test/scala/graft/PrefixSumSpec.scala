@@ -65,11 +65,10 @@ class PrefixSumSpec extends SparkTestBase {
         sum(col("v")).over(Window.partitionBy("g").orderBy("id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("id", "cum").as[(Long, Long)].collect().toMap
-    for (p <- Seq(1, 7, 32); bc <- Seq(true, false)) {
-      val got = PrefixSum.prefixSumByGroup(df, "g", Seq("id"), "v",
-          partitions = p, hintBroadcast = bc)
+    for (p <- Seq(1, 7, 32)) {
+      val got = PrefixSum.prefixSumByGroup(df, "g", Seq("id"), "v", partitions = p)
         .select("id", "cum").as[(Long, Long)].collect().toMap
-      assert(got == expect, s"diverged at partitions=$p broadcast=$bc")
+      assert(got == expect, s"diverged at partitions=$p")
     }
   }
 
