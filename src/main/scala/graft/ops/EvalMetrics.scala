@@ -1,17 +1,40 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed model-evaluation metrics over prediction tables — the
   * "score a trained model on 10^9 held-out rows" pass.
   *
-  * `partitions` on [[aucExact]] / [[aucByGroup]] is the range width of
-  * [[WindowOps.rankFunctions]]: derived from the scored frame's size by
-  * default ([[WindowOps.rankWidth]]; width 1 is the plain window), used as
-  * given when positive. On [[prCurve]] it is [[PrefixSum]]'s fixed width.
+  * The ranks and running sums ([[aucExact]], [[aucByGroup]], [[prCurve]])
+  * run on [[WindowOps]]' exact-rank scaffold at the width it derives from
+  * the ranked frame's size ([[WindowOps.rankWidth]]; width 1 is the plain
+  * window).
   */
 object EvalMetrics {
+
+  /** `labelCol` as an int that must be 0 or 1: anything else raises,
+    * naming the operator `op`.
+    */
+  private def label01(labelCol: String, op: String): Column = {
+    val lab0 = col(labelCol).cast("int")
+    when(lab0 === 0 || lab0 === 1, lab0)
+      .otherwise(raise_error(concat(
+        lit(s"$op: label outside {0,1}: "), lab0.cast("string"))))
+  }
+
+  /** The Mann–Whitney sums over ranked `_lab` rows — Σ 2·midrank over
+    * positives (`sum2`), positives (`p`), negatives (`ng`) — and the AUC
+    * they give.
+    */
+  private val uSums = Seq(
+    sum(when(col("_lab") === 1, col("rank") + col("peers_through"))
+      .otherwise(lit(0L))).as("sum2"),
+    sum(col("_lab").cast("long")).as("p"),
+    sum(lit(1L) - col("_lab").cast("long")).as("ng"))
+  private val uAuc = round((col("sum2").cast("double") / lit(2.0) -
+      col("p").cast("double") * (col("p").cast("double") + lit(1.0)) / lit(2.0)) /
+    (col("p").cast("double") * col("ng").cast("double")), 6)
 
   /** Exact ROC AUC via the Mann–Whitney U statistic — computed with the
     * DISTRIBUTED rank machinery ([[WindowOps.rankFunctions]]): no single
@@ -35,27 +58,18 @@ object EvalMetrics {
     * One row per group: (group, n_pos, n_neg, auc).
     */
   def aucByGroup(df: DataFrame, groupCol: String, labelCol: String,
-                 scoreCol: String, partitions: Int = WindowOps.DerivedWidth): DataFrame = {
-    val lab0 = col(labelCol).cast("int")
-    val lab = when(lab0 === 0 || lab0 === 1, lab0)
-      .otherwise(raise_error(concat(
-        lit(s"aucByGroup: label outside {0,1}: "), lab0.cast("string"))))
-    val scored = df.select(col(groupCol).as("_grp"), lab.as("_lab"),
+                 scoreCol: String): DataFrame = {
+    val scored = df.select(col(groupCol).as("_grp"),
+      label01(labelCol, "aucByGroup").as("_lab"),
       col(scoreCol).cast("double").as("_score"))
     val ranked = WindowOps.rankFunctions(scored, "_grp", Seq("_score"),
-      numTiles = 2, partitions = partitions, keepRanks = true)
+      numTiles = 2, keepRanks = true)
     ranked.groupBy(col("_grp").as(groupCol))
-      .agg(
-        sum(when(col("_lab") === 1, col("rank") + col("peers_through"))
-          .otherwise(lit(0L))).as("sum2"),
-        sum(col("_lab").cast("long")).as("p"),
-        sum(lit(1L) - col("_lab").cast("long")).as("ng"))
+      .agg(uSums.head, uSums.tail: _*)
       .select(
         col(groupCol), col("p").as("n_pos"), col("ng").as("n_neg"),
         when(col("p") === 0 || col("ng") === 0, lit(null).cast("double"))
-          .otherwise(round((col("sum2").cast("double") / lit(2.0) -
-              col("p").cast("double") * (col("p").cast("double") + lit(1.0)) / lit(2.0)) /
-            (col("p").cast("double") * col("ng").cast("double")), 6)).as("auc"))
+          .otherwise(uAuc).as("auc"))
   }
 
   /** Log loss (cross-entropy) and Brier score in one aggregation pass.
@@ -106,27 +120,12 @@ object EvalMetrics {
           count(lit(1)).cast("double"), 9).as("frac_pos"))
   }
 
-  def aucExact(df: DataFrame, labelCol: String, scoreCol: String,
-               partitions: Int = WindowOps.DerivedWidth): DataFrame = {
-    val lab0 = col(labelCol).cast("int")
-    val lab = when(lab0 === 0 || lab0 === 1, lab0)
-      .otherwise(raise_error(concat(
-        lit(s"aucExact: label outside {0,1}: "), lab0.cast("string"))))
-    val scored = df.select(lab.as("_lab"),
+  def aucExact(df: DataFrame, labelCol: String, scoreCol: String): DataFrame = {
+    val scored = df.select(label01(labelCol, "aucExact").as("_lab"),
         col(scoreCol).cast("double").as("_score"))
-      .withColumn("_ag", lit(1))
-    val ranked = WindowOps.rankFunctions(scored, "_ag", Seq("_score"),
-      numTiles = 2, partitions = partitions, keepRanks = true)
-    ranked.agg(
-        sum(when(col("_lab") === 1, col("rank") + col("peers_through"))
-          .otherwise(lit(0L))).as("sum2"), // Σ 2·midrank over positives
-        sum(col("_lab").cast("long")).as("p"),
-        sum(lit(1L) - col("_lab").cast("long")).as("ng"))
-      .select(
-        col("p").as("n_pos"), col("ng").as("n_neg"),
-        round((col("sum2").cast("double") / lit(2.0) -
-            col("p").cast("double") * (col("p").cast("double") + lit(1.0)) / lit(2.0)) /
-          (col("p").cast("double") * col("ng").cast("double")), 6).as("auc"))
+    WindowOps.ranks(scored, None, Seq("_score"), numTiles = 2, keepRanks = true)
+      .agg(uSums.head, uSums.tail: _*)
+      .select(col("p").as("n_pos"), col("ng").as("n_neg"), uAuc.as("auc"))
   }
 
   /** Full precision/recall/F1 curve over every distinct score threshold
@@ -149,21 +148,16 @@ object EvalMetrics {
     * Output: (thr, tp, fp, fn, tn, precision, recall, f1), one row per
     * distinct score, ascending thr.
     */
-  def prCurve(df: DataFrame, labelCol: String, scoreCol: String,
-              partitions: Int = 32): DataFrame = {
-    val lab0 = col(labelCol).cast("int")
-    val lab = when(lab0 === 0 || lab0 === 1, lab0)
-      .otherwise(raise_error(concat(
-        lit(s"prCurve: label outside {0,1}: "), lab0.cast("string"))))
-    val collapsed = df.select(lab.as("_lab"),
+  def prCurve(df: DataFrame, labelCol: String, scoreCol: String): DataFrame = {
+    val collapsed = df.select(label01(labelCol, "prCurve").as("_lab"),
         col(scoreCol).cast("double").as("thr"))
       .groupBy("thr").agg(
         sum(col("_lab").cast("long")).as("pos"),
         sum(lit(1L) - col("_lab").cast("long")).as("neg"))
       .withColumn("_ns", -col("thr")) // descending-score order key
-    val tp = PrefixSum.prefixSum(collapsed, "_ns", "pos", partitions)
+    val tp = PrefixSum.prefixSum(collapsed, "_ns", "pos")
       .withColumnRenamed("cum", "tp")
-    val both = PrefixSum.prefixSum(tp, "_ns", "neg", partitions)
+    val both = PrefixSum.prefixSum(tp, "_ns", "neg")
       .withColumnRenamed("cum", "fp")
     val tot = both.agg(sum("pos").as("p"), sum("neg").as("n"))
     val pr = col("tp").cast("double") / (col("tp") + col("fp")).cast("double")

@@ -1,21 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed prefix sum + token-budget shard packing.
+/** Distributed prefix sums + token-budget shard packing.
   *
   * A global running sum is usually written as one unpartitioned window —
   * which Spark executes as a SINGLE task (the whole dataset through one
-  * sorter). This implementation keeps the math identical but distributes:
-  *
-  *  1. range-partition by the order column (P parallel sorted ranges),
-  *  2. per-partition local running sum (parallel windows),
-  *  3. collect the P partition TOTALS (P longs — not rows) to the driver,
-  *     scan them into per-partition start offsets, broadcast back as a
-  *     literal map,
-  *  4. global prefix = local prefix + offset(partition).
+  * sorter). Both prefix sums here run on [[WindowOps]]' exact-rank
+  * scaffold (its scaladoc holds the rationale): the running sum is the
+  * scaffold's local pass, and `cum` = the range's offset + the local sum,
+  * at the scaffold's width ([[WindowOps.rankWidth]] of the input).
   *
   * The result is partitioning-independent (it equals the one-task window
   * bit-for-bit — asserted in PrefixSumSpec), so the DuckDB oracle is just
@@ -23,36 +19,30 @@ import org.apache.spark.sql.functions._
   */
 object PrefixSum {
 
+  /** Adds `cum` = running sum of `valCol` (as a long) in `orderCols` order
+    * (inclusive) within each `group`, or over the whole frame with no group.
+    * `orderCols` may be sort orders (`col(c).desc`).
+    */
+  private[ops] def runningSum(df: DataFrame, group: Option[String],
+                              orderCols: Seq[Column], valCol: String): DataFrame = {
+    Seq("_pid", "_local", "_c", "_off", "_n", "_opid", "_og")
+      .foreach(c => require(!df.columns.contains(c),
+        s"prefix sum: input must not contain reserved column '$c'"))
+    val v = col(valCol).cast("long")
+    WindowOps.rankScaffold(df, group, orderCols, v, WindowOps.rankWidth(df)) {
+      (frame, keys) =>
+        frame.withColumn("_local", sum(v).over(Window.partitionBy(keys: _*)
+          .orderBy(orderCols: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    }.withColumn("cum", col("_off") + col("_local"))
+      .drop("_pid", "_local", "_off", "_n")
+  }
+
   /** Adds `cum` = running sum of `valCol` in `orderCol` order (inclusive).
     * `orderCol` must be unique (it is the total order).
     */
-  def prefixSum(df: DataFrame, orderCol: String, valCol: String,
-                partitions: Int = 32): DataFrame = {
-    val parted = df.repartitionByRange(partitions, col(orderCol))
-      .withColumn("_pid", F.spark_partition_id())
-    val w = Window.partitionBy("_pid").orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // MATERIALIZE pass 1: the totals collect and the final projection must
-    // see the SAME range boundaries, and RangePartitioner's sampling is not
-    // stable across re-executions (rdd.id seeds it). localCheckpoint pins
-    // the partitioning and truncates lineage (cluster scale: checkpoint).
-    val local = parted.withColumn("_local",
-      sum(col(valCol).cast("long")).over(w))
-      .localCheckpoint()
-    // P partition totals -> driver (P values), scanned into start offsets.
-    // sum(valCol), NOT max(_local): with negative values the running sum's
-    // max is not the partition total.
-    val totals = local.groupBy("_pid").agg(sum(col(valCol).cast("long")).as("_tot"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, tot)) =>
-      (pid + 1, acc + tot)
-    }.toMap // pid -> sum of all earlier partitions' totals
-    val offCol = typedLit(offsets)
-    local
-      .withColumn("cum", col("_local") + coalesce(
-        element_at(offCol, col("_pid")), lit(0L)))
-      .drop("_pid", "_local")
-  }
+  def prefixSum(df: DataFrame, orderCol: String, valCol: String): DataFrame =
+    runningSum(df, None, Seq(col(orderCol)), valCol)
 
   /** Token-budget shard packing — the "cut a corpus into ~budget-token
     * training shards in a stable order" pipeline step: shard id = the
@@ -62,8 +52,8 @@ object PrefixSum {
     * boundary belongs to the shard its first token lands in).
     */
   def packShards(df: DataFrame, orderCol: String, sizeCol: String,
-                 budget: Long, partitions: Int = 32): DataFrame =
-    prefixSum(df, orderCol, sizeCol, partitions)
+                 budget: Long): DataFrame =
+    prefixSum(df, orderCol, sizeCol)
       // integral `div`, not double `/`: exact past 2^53 (100 TB of tokens)
       .withColumn("shard", expr(s"(cum - $sizeCol) div ${budget}L"))
 
@@ -91,10 +81,9 @@ object PrefixSum {
     * (nothing to pack).
     */
   def packSequences(df: DataFrame, orderCol: String, sizeCol: String,
-                    seqLen: Long, partitions: Int = 32): DataFrame = {
+                    seqLen: Long): DataFrame = {
     require(seqLen >= 1, s"packSequences: seqLen must be >= 1: $seqLen")
-    val cum = prefixSum(df.filter(col(sizeCol) > 0), orderCol, sizeCol,
-      partitions)
+    val cum = prefixSum(df.filter(col(sizeCol) > 0), orderCol, sizeCol)
     val start = col("cum") - col(sizeCol)                 // global start, 0-based
     val firstSeq = expr(s"(cum - $sizeCol) div ${seqLen}L")
     val lastSeq = expr(s"(cum - 1) div ${seqLen}L")
@@ -112,45 +101,16 @@ object PrefixSum {
   }
 
   /** Adds `cum` = running sum of `valCol` within each group, in
-    * `orderCols` order (inclusive). The per-GROUP dual of [[prefixSum]],
-    * on the [[WindowOps.rankFunctions]] two-pass shape: a naive
-    * `Window.partitionBy(group)` funnels every group through ONE task (the
-    * giant-source straggler); here the data is range-partitioned by
-    * (group, order) into P parallel sorted ranges, summed locally, and
-    * each (partition, group)'s start offset is computed IN-PLAN from a
-    * G·P-row aggregate (windowed per group, ≤ P rows per window — nothing
-    * collects to the driver) and broadcast-joined back. Result is
-    * bit-identical to the one-task window (PrefixSumSpec asserts it).
+    * `orderCols` order (inclusive). The per-GROUP dual of [[prefixSum]]: a
+    * naive `Window.partitionBy(group)` funnels every group through ONE
+    * task (the giant-source straggler); on the scaffold a group wider than
+    * one range is summed in parallel ranges with in-plan offsets. Result
+    * is bit-identical to the one-task window (PrefixSumSpec asserts it).
     * `orderCols` must be a total order within each group.
     */
   def prefixSumByGroup(df: DataFrame, groupCol: String, orderCols: Seq[String],
-                       valCol: String, partitions: Int = 32): DataFrame = {
-    val reserved = Seq("_pid", "_local", "_c", "_off", "_opid", "_og")
-    reserved.foreach(c => require(!df.columns.contains(c),
-      s"prefixSumByGroup: input must not contain reserved column '$c'"))
-    val ordCols = orderCols.map(col)
-    // MATERIALIZE pass 1 (prefixSum rationale): both passes must see the
-    // SAME range boundaries; RangePartitioner sampling isn't re-run-stable.
-    val parted = df
-      .repartitionByRange(partitions, (col(groupCol) +: ordCols): _*)
-      .withColumn("_pid", F.spark_partition_id())
-      .localCheckpoint()
-    val wl = Window.partitionBy(col("_pid"), col(groupCol)).orderBy(ordCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted.withColumn("_local",
-      sum(col(valCol).cast("long")).over(wl))
-    val cnts = parted.groupBy(col("_pid"), col(groupCol))
-      .agg(sum(col(valCol).cast("long")).as("_c"))
-    val wOff = Window.partitionBy(groupCol).orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = broadcast(cnts
-      .withColumn("_off", coalesce(sum(col("_c")).over(wOff), lit(0L)))
-      .select(col("_pid").as("_opid"), col(groupCol).as("_og"), col("_off")))
-    local.join(offs,
-        col("_pid") === col("_opid") && col(groupCol) === col("_og"))
-      .withColumn("cum", col("_local") + col("_off"))
-      .drop("_pid", "_local", "_off", "_opid", "_og")
-  }
+                       valCol: String): DataFrame =
+    runningSum(df, Some(groupCol), orderCols.map(col), valCol)
 
   /** Per-group token-budget selection — the data-mixing step "cap every
     * source/domain at B tokens, keeping documents in a deterministic
@@ -164,9 +124,8 @@ object PrefixSum {
     * Output keeps `cum` — the row's cumulative cost, ≤ `budget`.
     */
   def budgetCapPerGroup(df: DataFrame, groupCol: String, orderCols: Seq[String],
-                        sizeCol: String, budget: Long,
-                        partitions: Int = 32): DataFrame =
-    prefixSumByGroup(df, groupCol, orderCols, sizeCol, partitions)
+                        sizeCol: String, budget: Long): DataFrame =
+    prefixSumByGroup(df, groupCol, orderCols, sizeCol)
       .filter(col("cum") <= budget)
 
   /** Padding-waste audit of fixed-size batching — the number a
@@ -180,12 +139,12 @@ object PrefixSum {
     * waste, waste_frac round 6), exact integers.
     */
   def padWaste(df: DataFrame, orderCol: String, lenCol: String,
-               batchSize: Int, partitions: Int = 32): DataFrame = {
+               batchSize: Int): DataFrame = {
     require(batchSize >= 1, s"padWaste batchSize: $batchSize")
     val ranked = prefixSum(
       df.select(col(orderCol).as("_ord"), col(lenCol).cast("long").as("len"))
         .withColumn("_one", lit(1L)),
-      "_ord", "_one", partitions)
+      "_ord", "_one")
     ranked
       .withColumn("batch", expr(s"(cum - 1) div ${batchSize}L"))
       .groupBy("batch")

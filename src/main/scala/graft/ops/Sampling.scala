@@ -214,13 +214,12 @@ object Sampling {
     *
     * Output: (id, pos) with pos in [0, n).
     */
-  def shuffleIndex(df: DataFrame, key: Column, salt: String,
-                   partitions: Int = 32): DataFrame = {
+  def shuffleIndex(df: DataFrame, key: Column, salt: String): DataFrame = {
     val base = df.select(key.cast("long").as("id"))
       .withColumn("_enc",
         hashDraw(col("id"), salt) * lit(2147483648L) + col("id"))
       .withColumn("_one", lit(1L))
-    PrefixSum.prefixSum(base, "_enc", "_one", partitions)
+    PrefixSum.prefixSum(base, "_enc", "_one")
       .select(col("id"), (col("cum") - 1).as("pos"))
   }
 
@@ -258,40 +257,22 @@ object Sampling {
 
   /** CURRICULUM read order — the training-prep step "read the highest
     * quality tier first, shuffled within each tier": position = rank in
-    * (bucket DESC, draw, id) order. Distributed as within-bucket
-    * [[PrefixSum.prefixSumByGroup]] ranks (range-partitioned two-pass,
-    * never a one-task global window) plus a bucket-grain offset table
-    * (counts of higher buckets — a handful of rows, broadcast). Same
-    * salt = same curriculum on any cluster.
+    * (bucket DESC, draw, id) order — one distributed running count in
+    * that order ([[PrefixSum]] on the exact-rank scaffold, never a
+    * one-task global window). Same salt = same curriculum on any cluster.
     *
     * Output: (id, bucket, pos) with pos in [0, n), descending-bucket
     * blocks each internally hash-shuffled.
     */
   def curriculumIndex(df: DataFrame, bucket: Column, key: Column,
-                      salt: String = "curriculum",
-                      partitions: Int = 32): DataFrame = {
+                      salt: String = "curriculum"): DataFrame = {
     val base = df.select(bucket.cast("int").as("bucket"),
         key.cast("long").as("id"))
       .withColumn("draw", hashDraw(col("id"), salt))
       .withColumn("_one", lit(1L))
-    val within = PrefixSum.prefixSumByGroup(base, "bucket",
-      Seq("draw", "id"), "_one", partitions)
-    // Bucket counts come from the prefix-sum OUTPUT (max inclusive rank
-    // per bucket == bucket size), not from `base`: prefixSumByGroup
-    // checkpointed its own copy of the input, so grouping `base` here
-    // would re-execute the caller's entire upstream chain (for
-    // q_curriculum that chain is a full corpus LM-scoring pass) a second
-    // time just to count rows it already ranked.
-    val counts = within.groupBy("bucket").agg(max(col("cum")).as("_n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bucket").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = counts // bucket-grain: a handful of rows through one window
-      .withColumn("_off", coalesce(sum("_n").over(w), lit(0L)))
-      .select("bucket", "_off")
-    within.join(broadcast(offsets), "bucket")
-      .select(col("id"), col("bucket"),
-        (col("_off") + col("cum") - 1).as("pos"))
+    PrefixSum.runningSum(base, None,
+        Seq(col("bucket").desc, col("draw"), col("id")), "_one")
+      .select(col("id"), col("bucket"), (col("cum") - 1).as("pos"))
   }
 
   /** Temperature-mixing EPOCH materializer — [[mixWeights]] applied to

@@ -18,13 +18,11 @@ import org.apache.spark.sql.functions._
   * Shape at 100 TB: one two-phase hash aggregation; five numbers per
   * group cross the wire.
   *
-  * `partitions`, on the rank-based operators (winsorize, madPerGroup,
-  * flagOutliers, psi, psiByGroup), is the range width of the
-  * [[WindowOps]] exact-rank scaffold: by default
-  * ([[WindowOps.DerivedWidth]]) each ranked frame gets a width derived
-  * from its size estimate ([[WindowOps.rankWidth]]) — 1, the plain
-  * window, for a frame within one advisory partition; a positive value
-  * is used as given.
+  * The rank-based operators (winsorize, madPerGroup, flagOutliers, psi,
+  * psiByGroup) run on the [[WindowOps]] exact-rank scaffold, each ranked
+  * frame at the width derived from its size estimate
+  * ([[WindowOps.rankWidth]]) — 1, the plain window, for a frame within
+  * one advisory partition.
   */
 object StatsOps {
 
@@ -36,12 +34,12 @@ object StatsOps {
     * Adds `<valueCol>_w` (double); bounds follow `quantile_disc`
     * semantics (engine-replayable, no interpolated phantom values).
     */
-  def winsorize(df: DataFrame, valueCol: String, loQ: Double, hiQ: Double,
-                partitions: Int = WindowOps.DerivedWidth): DataFrame = {
+  def winsorize(df: DataFrame, valueCol: String, loQ: Double,
+                hiQ: Double): DataFrame = {
     require(loQ > 0 && hiQ <= 1 && loQ < hiQ,
       s"winsorize needs 0 < loQ < hiQ <= 1: ($loQ, $hiQ)")
     val bounds = graft.ops.WindowOps.exactQuantilesGlobal(
-        df.select(col(valueCol)), valueCol, Seq(loQ, hiQ), partitions)
+        df.select(col(valueCol)), valueCol, Seq(loQ, hiQ))
       .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     // a bound no value reaches (empty input) is NULL, which the clip skips
     def bound(q: Double) =
@@ -61,8 +59,7 @@ object StatsOps {
     * (identical op on both engines, bit-identical to deviating the raw
     * rows). Output: (group, median, mad).
     */
-  def madPerGroup(df: DataFrame, groupCol: String, valCol: String,
-                  partitions: Int = WindowOps.DerivedWidth): DataFrame = {
+  def madPerGroup(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     Seq("_mv", "_mc").foreach(c => require(!df.columns.contains(c),
       s"madPerGroup: input must not contain reserved column '$c'"))
     // one scan + one hash aggregation; localCheckpoint so the two ranked
@@ -73,18 +70,15 @@ object StatsOps {
       .groupBy(groupCol, "_mv").agg(count(lit(1)).as("_mc"))
       .localCheckpoint()
     val med = graft.ops.WindowOps.exactQuantilesByGroupWeighted(
-        counts, groupCol, "_mv", "_mc", Seq(0.5), partitions)
+        counts, groupCol, "_mv", "_mc", Seq(0.5))
       .select(col(groupCol), col("value").as("_med"))
     val dev = counts.join(broadcast(med), groupCol)
       .select(col(groupCol),
         abs(col("_mv") - col("_med")).as("_dev"), col("_mc"))
     // `dev` has exactly `counts`' rows, but its size estimate is the
-    // join's product of both sides: a derived width is taken from `counts`
-    val devWidth =
-      if (partitions == WindowOps.DerivedWidth) WindowOps.rankWidth(counts)
-      else partitions
-    graft.ops.WindowOps.exactQuantilesByGroupWeighted(
-        dev, groupCol, "_dev", "_mc", Seq(0.5), devWidth)
+    // join's product of both sides: its width is taken from `counts`
+    WindowOps.quantilesByGroupWeighted(dev, groupCol, "_dev", "_mc", Seq(0.5),
+        Some(WindowOps.rankWidth(counts)))
       .select(col(groupCol), col("value").as("mad"))
       .join(broadcast(med), groupCol)
       .select(col(groupCol), col("_med").as("median"), col("mad"))
@@ -123,9 +117,9 @@ object StatsOps {
     * scan. Output: input row + (median, mad, is_outlier).
     */
   def flagOutliers(df: DataFrame, groupCol: String, valCol: String,
-                   k: Double, partitions: Int = WindowOps.DerivedWidth): DataFrame = {
+                   k: Double): DataFrame = {
     require(k > 0, s"flagOutliers: k must be positive, got $k")
-    val stats = madPerGroup(df, groupCol, valCol, partitions)
+    val stats = madPerGroup(df, groupCol, valCol)
     val dev = abs(col(valCol).cast("double") - col("median"))
     df.join(broadcast(stats), groupCol)
       .withColumn("is_outlier",
@@ -297,8 +291,7 @@ object StatsOps {
     * psi) — bins rows per group, `psi` repeated within the group.
     */
   def psiByGroup(ref: DataFrame, cur: DataFrame, groupCol: String,
-                 valueCol: String, bins: Int = 10,
-                 partitions: Int = WindowOps.DerivedWidth): DataFrame = {
+                 valueCol: String, bins: Int = 10): DataFrame = {
     require(bins >= 2, s"psiByGroup needs at least 2 bins: $bins")
     val qs = (1 until bins).map(_.toDouble / bins)
     def slim(df: DataFrame) =
@@ -306,7 +299,7 @@ object StatsOps {
         .where(col("v").isNotNull)
     val refS = slim(ref)
     val edges = WindowOps
-      .exactQuantilesByGroupDiscrete(refS, "g", "v", qs, partitions)
+      .exactQuantilesByGroupDiscrete(refS, "g", "v", qs)
       .select(col("g"), col("value").as("e"))
     def binCounts(slimmed: DataFrame, name: String) = {
       val gv = slimmed.groupBy("g", "v").agg(count(lit(1)).as("c"))
@@ -340,8 +333,8 @@ object StatsOps {
         round(col("term"), 6).as("term"), col("psi"))
   }
 
-  def psi(ref: DataFrame, cur: DataFrame, valueCol: String, bins: Int = 10,
-          partitions: Int = WindowOps.DerivedWidth): DataFrame = {
+  def psi(ref: DataFrame, cur: DataFrame, valueCol: String,
+          bins: Int = 10): DataFrame = {
     require(bins >= 2, s"psi needs at least 2 bins: $bins")
     val spark = ref.sparkSession
     val qs = (1 until bins).map(_.toDouble / bins)
@@ -351,7 +344,7 @@ object StatsOps {
     // when/otherwise bucket otherwise mapped NULL to bin 1).
     def slim(df: DataFrame) =
       df.select(col(valueCol).cast("double").as("v")).where(col("v").isNotNull)
-    val edges = WindowOps.exactQuantilesGlobal(slim(ref), "v", qs, partitions)
+    val edges = WindowOps.exactQuantilesGlobal(slim(ref), "v", qs)
       .select(col("value").cast("double"))
       .collect().map(_.getDouble(0)).toSeq
     def bucket(v: org.apache.spark.sql.Column) =

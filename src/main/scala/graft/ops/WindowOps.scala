@@ -46,20 +46,16 @@ object WindowOps {
     df.withColumn("prev", lag(col(valCol), 1).over(w))
   }
 
-  /** `partitions` value that asks the exact-rank scaffold for its derived
-    * range width ([[rankWidth]]); the default of every rank and quantile
-    * operator built on it. Any positive value is used as given.
-    */
-  val DerivedWidth: Int = 0
-
-  /** The range width the exact-rank scaffold gives `df` when the caller
-    * passes no width: the optimizer's size estimate of `df` over
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, rounded up and
-    * clamped to [1, `spark.sql.shuffle.partitions`]. A frame that fits one
-    * advisory partition is ranked by the plain window (width 1). Without
-    * CBO the estimate errs high, so a large input is never under-split.
-    * The division runs in BigInt because estimates can overflow a Long (see
-    * `graftbridge.localCheckpointCappedStats`).
+  /** The range width of the exact-rank scaffold, and so of every rank,
+    * quantile and prefix-sum operator built on it: the optimizer's size
+    * estimate of `df` over `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
+    * rounded up and clamped to [1, `spark.sql.shuffle.partitions`]. A frame
+    * that fits one advisory partition is ranked by the plain window (width
+    * 1). Without CBO the estimate errs high, so a large input is never
+    * under-split. The division runs in BigInt because estimates can
+    * overflow a Long (see `graftbridge.localCheckpointCappedStats`). With
+    * an advisory size of 1 byte the width is `spark.sql.shuffle.partitions`
+    * for any input, which is how a caller (or a spec) pins it.
     */
   def rankWidth(df: DataFrame): Int = {
     val conf = graftbridge.sqlConf(df.sparkSession)
@@ -70,55 +66,80 @@ object WindowOps {
     ((est + advisory - 1) / advisory).max(1).min(cap).toInt
   }
 
-  /** The exact-rank scaffold under [[rankFunctions]] and [[groupValueCum]]:
-    * runs `local` (windows partitioned by the keys it is given) over ranges
-    * of `df` sorted by (group, `orderCols`), and adds `_pid` (the range),
-    * `_off` (the `weight` of the group's rows in earlier ranges) and `_n`
-    * (the group's total `weight`), so a global position is `_off` plus the
-    * local one.
+  /** The exact-rank scaffold — the one home of every exact rank, quantile
+    * and prefix sum ([[rankFunctions]], the quantile forms,
+    * [[PrefixSum]]). A global rank written as one window sorts the whole
+    * group (or, with no group, the whole frame) in ONE task; the scaffold
+    * keeps the math and splits the sort. It runs `local` (windows
+    * partitioned by the keys it is given) over ranges of `df` sorted by
+    * (`group`, `orderCols`), and adds `_pid` (the range), `_off` (the
+    * `weight` of the group's rows in earlier ranges) and `_n` (the group's
+    * total `weight`), so a global position, or a running sum, is `_off`
+    * plus the local one. With no `group` the whole frame is one group.
     *
-    * At width 1 there is one range, so there are no offsets: `local` runs
-    * partitioned by the group alone, `_off` is 0 and `_n` is the group's
-    * window sum — one hash exchange, nothing materialized. At width P > 1:
+    * `width` is [[rankWidth]] of the ranked frame. At width 1 there is one
+    * range, so there are no offsets: `local` runs partitioned by the group
+    * alone (with no group, by `_pid` over the frame gathered into one
+    * partition, so no window runs unpartitioned), `_off` is 0 and `_n` is
+    * the group's window sum — one exchange, nothing materialized. At
+    * width P > 1:
     *
     *  1. range-partition by (group, orderCols) — each group's rows split
     *     across consecutive sorted ranges, P parallel sorts; equal sort
     *     keys land in ONE partition (range assignment is a deterministic
     *     function of the key), so tie groups never straddle a boundary.
-    *     The ranges are MATERIALIZED (the [[PrefixSum]] rationale): the
-    *     offsets and the local pass must see the SAME boundaries, and
-    *     RangePartitioner's sampling is not stable across re-executions,
+    *     The ranges are MATERIALIZED (`localCheckpoint`): the offsets and
+    *     the local pass must see the SAME boundaries, and
+    *     RangePartitioner's sampling is not stable across re-executions
+    *     (rdd.id seeds it),
     *  2. `local` partitioned by (range, group),
     *  3. per-(range, group) weights → per-group running offsets and totals,
     *     computed IN-PLAN (a G·P-row aggregate windowed per group, ≤ P rows
     *     per window — nothing collects to the driver) and broadcast-joined
-    *     back.
+    *     back. The offsets are sums of `weight`, never a maximum of the
+    *     local pass (with negative weights a running sum's maximum is not
+    *     the range's total).
+    *
+    * Results are bit-identical to the one-task window at every width
+    * (WindowRankSpec, PrefixSumSpec).
     */
-  private def rankScaffold(df: DataFrame, groupCol: String,
-                           orderCols: Seq[Column], weight: Column,
-                           partitions: Int)(
+  private[ops] def rankScaffold(df: DataFrame, group: Option[String],
+                                orderCols: Seq[Column], weight: Column,
+                                width: Int)(
       local: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
-    require(partitions >= 0,
-      s"partitions must be positive, or DerivedWidth: $partitions")
-    val g = col(groupCol)
-    val width = if (partitions == DerivedWidth) rankWidth(df) else partitions
+    val g = group.map(col).toSeq
     if (width == 1) {
-      local(df.withColumn("_pid", lit(0)), Seq(g))
+      val (one, keys) =
+        if (g.nonEmpty) (df.withColumn("_pid", lit(0)), g)
+        else (df.repartition(1).withColumn("_pid", F.spark_partition_id()),
+          Seq(col("_pid")))
+      local(one, keys)
         .withColumn("_off", lit(0L))
-        .withColumn("_n", sum(weight).over(Window.partitionBy(g)))
+        .withColumn("_n", sum(weight).over(Window.partitionBy(keys: _*)))
     } else {
       val parted = df
-        .repartitionByRange(width, (g +: orderCols): _*)
+        .repartitionByRange(width, (g ++ orderCols): _*)
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint()
-      val wOff = Window.partitionBy(g).orderBy("_pid")
+      val sums = parted.groupBy((col("_pid") +: g): _*).agg(sum(weight).as("_c"))
+      // with no group the ≤ P range rows are one window partition, keyed by
+      // a column that is false on every range: a literal key would be
+      // folded into an unpartitioned window, and an expression key would
+      // be re-derived (and re-shuffled) for each of the two windows
+      val (keyed, byGroup) =
+        if (g.nonEmpty) (sums, g)
+        else (sums.withColumn("_all", col("_pid") < 0), Seq(col("_all")))
+      val wOff = Window.partitionBy(byGroup: _*).orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = parted.groupBy(col("_pid"), g).agg(sum(weight).as("_c"))
+      val offs = keyed
         .withColumn("_off", coalesce(sum(col("_c")).over(wOff), lit(0L)))
-        .withColumn("_n", sum(col("_c")).over(Window.partitionBy(g)))
-        .select(col("_pid").as("_opid"), g.as("_og"), col("_off"), col("_n"))
-      local(parted, Seq(col("_pid"), g))
-        .join(broadcast(offs), col("_pid") === col("_opid") && g === col("_og"))
+        .withColumn("_n", sum(col("_c")).over(Window.partitionBy(byGroup: _*)))
+        .select((col("_pid").as("_opid") +: g.map(_.as("_og"))) ++
+          Seq(col("_off"), col("_n")): _*)
+      // null-safe: a null group is one group, as in the width-1 window
+      val onRange = g.foldLeft(col("_pid") === col("_opid"))(_ && _ <=> col("_og"))
+      local(parted, col("_pid") +: g)
+        .join(broadcast(offs), onRange)
         .drop("_opid", "_og")
     }
   }
@@ -139,10 +160,9 @@ object WindowOps {
     *     (first n%k buckets get one extra row), percent_rank =
     *     (rank−1)/(n−1), cume_dist = peers_through_current / n.
     *
-    * `partitions` is the range width; by default it is derived from the
-    * input's size ([[rankWidth]]), and an input that fits one advisory
-    * partition is ranked by the plain window partitioned by the group
-    * (no range exchange, no checkpoint, no offsets). Results are
+    * The range width is [[rankWidth]] of the input: an input that fits
+    * one advisory partition is ranked by the plain window partitioned by
+    * the group (no range exchange, no checkpoint, no offsets). Results are
     * bit-identical to the one-task-per-group window (asserted in
     * WindowRankSpec) at every width. `orderCols` should be a total order
     * within each group for ntile determinism (ties make any engine's ntile
@@ -151,15 +171,23 @@ object WindowOps {
     * for distribution assertions in specs; 0 at width 1).
     */
   def rankFunctions(df: DataFrame, groupCol: String, orderCols: Seq[String],
-                    numTiles: Int, partitions: Int = DerivedWidth,
-                    keepPid: Boolean = false,
-                    keepRanks: Boolean = false): DataFrame = {
+                    numTiles: Int, keepPid: Boolean = false,
+                    keepRanks: Boolean = false): DataFrame =
+    ranks(df, Some(groupCol), orderCols, numTiles, keepPid, keepRanks)
+
+  /** [[rankFunctions]] with an optional group: `None` ranks the whole
+    * frame as one group ([[EvalMetrics.aucExact]]).
+    */
+  private[ops] def ranks(df: DataFrame, group: Option[String],
+                         orderCols: Seq[String], numTiles: Int,
+                         keepPid: Boolean = false,
+                         keepRanks: Boolean = false): DataFrame = {
     val reserved = Seq("_pid", "_lrn", "_lmin", "_lmax", "_off", "_n", "_c",
       "_opid", "_og")
     reserved.foreach(c => require(!df.columns.contains(c),
       s"rankFunctions: input must not contain reserved column '$c'"))
     val ordCols: Seq[Column] = orderCols.map(col)
-    val joined = rankScaffold(df, groupCol, ordCols, lit(1L), partitions) {
+    val joined = rankScaffold(df, group, ordCols, lit(1L), rankWidth(df)) {
       (frame, keys) =>
         val wl = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
         val wk = Window.partitionBy((keys ++ ordCols): _*)
@@ -206,15 +234,16 @@ object WindowOps {
     * cumulative pass scales with |distinct values|, not |rows| — the
     * decisive difference on low-cardinality measures. The cumulative pass
     * runs on the exact-rank scaffold ([[rankScaffold]]) over the collapsed
-    * table, whose size sets the derived width ([[rankWidth]]) when
-    * `partitions` is [[DerivedWidth]]: at width 1 it is one window
-    * partitioned by the group, at width P it is P parallel sorted ranges
-    * with per-(range, group) partial sums and in-plan broadcast offsets.
-    * Nulls are excluded (the `percentile` / `quantile_cont` contract).
+    * table, whose size sets the width ([[rankWidth]]) unless the caller
+    * gives one: at width 1 it is one window partitioned by the group, at
+    * width P it is P parallel sorted ranges with per-(range, group)
+    * partial sums and in-plan broadcast offsets. With no group the whole
+    * input is one group. Nulls are excluded (the `percentile` /
+    * `quantile_cont` contract).
     */
-  private def groupValueCum(df: DataFrame, groupCol: String, valueCol: String,
-                            partitions: Int,
-                            weightCol: Option[String] = None): DataFrame = {
+  private def groupValueCum(df: DataFrame, group: Option[String], valueCol: String,
+                            weightCol: Option[String] = None,
+                            width: Option[Int] = None): DataFrame = {
     Seq("_v", "_cnt", "_pid", "_lcum", "_c", "_off", "_n", "_opid", "_og")
       .foreach(c => require(!df.columns.contains(c),
         s"quantiles: input must not contain reserved column '$c'"))
@@ -224,23 +253,24 @@ object WindowOps {
     // no re-collapse shuffle; duplicate (group, value) rows are harmless
     // because a tie's sub-intervals all carry the same value, so any rank
     // probe landing in the tie range selects it regardless of the split.
+    val g = group.map(col).toSeq
+    val v = col(valueCol).cast("double").as("_v")
     val counts = weightCol match {
       case Some(wc) =>
-        df.select(col(groupCol), col(valueCol).cast("double").as("_v"),
-            col(wc).cast("long").as("_cnt"))
+        df.select(g :+ v :+ col(wc).cast("long").as("_cnt"): _*)
           .filter(col("_v").isNotNull)
       case None =>
-        df.select(col(groupCol), col(valueCol).cast("double").as("_v"))
+        df.select(g :+ v: _*)
           .filter(col("_v").isNotNull)
-          .groupBy(groupCol, "_v").agg(count(lit(1)).as("_cnt"))
+          .groupBy(g :+ col("_v"): _*).agg(count(lit(1)).as("_cnt"))
     }
-    rankScaffold(counts, groupCol, Seq(col("_v")), col("_cnt"), partitions) {
-      (frame, keys) =>
-        frame.withColumn("_lcum", sum(col("_cnt")).over(
-          Window.partitionBy(keys: _*).orderBy("_v")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    }.select(col(groupCol), col("_v"), col("_cnt"),
-      (col("_off") + col("_lcum")).as("_cum"), col("_n"))
+    rankScaffold(counts, group, Seq(col("_v")), col("_cnt"),
+        width.getOrElse(rankWidth(counts))) { (frame, keys) =>
+      frame.withColumn("_lcum", sum(col("_cnt")).over(
+        Window.partitionBy(keys: _*).orderBy("_v")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    }.select(g ++ Seq(col("_v"), col("_cnt"),
+      (col("_off") + col("_lcum")).as("_cum"), col("_n")): _*)
   }
 
   /** Schema of [[exactQuantilesGlobal]]'s result. */
@@ -251,9 +281,9 @@ object WindowOps {
   /** Exact GLOBAL discrete quantiles without a one-task global sort:
     * quantile_disc(q) = min value whose cumulative distribution reaches q
     * (the element at sorted position ceil(q·n), ties collapse), from the
-    * collapsed weighted-cumulative table ([[groupValueCum]], at the derived
-    * width by default — a collapsed table that fits one advisory partition
-    * is one plain window). Exactly matches DuckDB's `quantile_disc`
+    * collapsed weighted-cumulative table ([[groupValueCum]] with no group —
+    * a collapsed table that fits one advisory partition is one plain
+    * window). Exactly matches DuckDB's `quantile_disc`
     * (oracle-checked).
     *
     * EAGER: every q is answered by one aggregate row (`min(_v)` where the
@@ -265,15 +295,11 @@ object WindowOps {
     * requested quantile, in q order; a q that no value reaches (an empty
     * input) has no row.
     */
-  def exactQuantilesGlobal(df: DataFrame, valueCol: String, qs: Seq[Double],
-                           partitions: Int = DerivedWidth): DataFrame = {
+  def exactQuantilesGlobal(df: DataFrame, valueCol: String,
+                           qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must lie in (0, 1]: $qs")
-    require(!df.columns.contains("_qg"),
-      "exactQuantilesGlobal: input must not contain reserved column '_qg'")
-    val cum = groupValueCum(
-      df.select(col(valueCol)).withColumn("_qg", lit(1)),
-      "_qg", valueCol, partitions)
+    val cum = groupValueCum(df.select(col(valueCol)), None, valueCol)
     val cume = col("_cum").cast("double") / col("_n").cast("double")
     val probes = qs.distinct.sorted
     val hit = cum.agg(min(when(cume >= probes.head, col("_v"))),
@@ -292,11 +318,10 @@ object WindowOps {
     * Output: (group, q, value).
     */
   def exactQuantilesByGroupDiscrete(df: DataFrame, groupCol: String,
-                                    valueCol: String, qs: Seq[Double],
-                                    partitions: Int = DerivedWidth): DataFrame = {
+                                    valueCol: String, qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must lie in (0, 1]: $qs")
-    val cum = groupValueCum(df, groupCol, valueCol, partitions)
+    val cum = groupValueCum(df, Some(groupCol), valueCol)
     cum.select(col(groupCol), explode(typedLit(qs.sorted)).as("q"), col("_v"),
         (col("_cum").cast("double") / col("_n").cast("double")).as("_cume"))
       .filter(col("_cume") >= col("q"))
@@ -317,9 +342,8 @@ object WindowOps {
     * Output: (group, q, value), one row per group × quantile.
     */
   def exactQuantilesByGroup(df: DataFrame, groupCol: String, valueCol: String,
-                            qs: Seq[Double], partitions: Int = DerivedWidth): DataFrame =
-    quantilesFromCum(groupValueCum(df, groupCol, valueCol, partitions),
-      groupCol, qs)
+                            qs: Seq[Double]): DataFrame =
+    quantilesFromCum(groupValueCum(df, Some(groupCol), valueCol), groupCol, qs)
 
   /** [[exactQuantilesByGroup]] over PRE-AGGREGATED data: each input row is
     * a (group, value, weight) with weight = how many raw rows it stands
@@ -334,10 +358,20 @@ object WindowOps {
     */
   def exactQuantilesByGroupWeighted(df: DataFrame, groupCol: String,
                                     valueCol: String, weightCol: String,
-                                    qs: Seq[Double],
-                                    partitions: Int = DerivedWidth): DataFrame =
+                                    qs: Seq[Double]): DataFrame =
+    quantilesByGroupWeighted(df, groupCol, valueCol, weightCol, qs, None)
+
+  /** [[exactQuantilesByGroupWeighted]] at a `width` taken from another
+    * frame than `df` (its [[rankWidth]] when `None`) — for a caller whose
+    * input is a join that keeps one side's rows but whose size estimate is
+    * the join's product ([[StatsOps.madPerGroup]]'s deviation pass).
+    */
+  private[ops] def quantilesByGroupWeighted(df: DataFrame, groupCol: String,
+                                            valueCol: String, weightCol: String,
+                                            qs: Seq[Double],
+                                            width: Option[Int]): DataFrame =
     quantilesFromCum(
-      groupValueCum(df, groupCol, valueCol, partitions, Some(weightCol)),
+      groupValueCum(df, Some(groupCol), valueCol, Some(weightCol), width),
       groupCol, qs)
 
   private def quantilesFromCum(cum: DataFrame, groupCol: String,

@@ -1,11 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graftbridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkEntry
 
 /** Plan auditor: prints the formatted physical plan for the given queries
   * (default: a scale-critical subset) so shuffle counts, broadcast choices,
-  * pushed filters and codegen spans can be reviewed per round.
+  * pushed filters and codegen spans can be reviewed per round. A query
+  * that runs actions while it is built (a collected quantile, a
+  * checkpoint) is followed by those actions' executed plans, one
+  * `---------- <query> build action N ----------` block each: the query's
+  * own plan starts where they stopped.
   *
   * Usage: runMain graft.tools.ExplainAudit [sfDir] [query ...]
   */
@@ -27,9 +37,20 @@ object ExplainAudit {
         "q_neg_sample", "q_corpus_run", "q_ivm", "q_dedup_scaled")
     val spark = graft.core.GraftSession.builder("graft-explain", cores = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val built = new ConcurrentLinkedQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = built.add(qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     names.foreach { n =>
       println(s"\n========== $n ==========")
+      built.clear()
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      graftbridge.drainListenerBus(spark.sparkContext)
+      built.asScala.zipWithIndex.foreach { case (qe, i) =>
+        println(s"---------- $n build action ${i + 1} ----------")
+        println(qe.explainString(FormattedMode))
+      }
     }
     spark.stop()
   }

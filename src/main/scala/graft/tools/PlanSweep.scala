@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graftbridge
+
 import graft.SparkEntry
 
 /** Whole-surface plan sweep: builds every declared query's physical plan
@@ -11,6 +13,12 @@ import graft.SparkEntry
   * are presumptively bugs. Complements PlanGuardSpec, which pins the
   * adjudicated subset permanently.
   *
+  * It also takes the build-job census: per query, the Spark jobs that
+  * building the DataFrame fires before any action (collects, checkpoints
+  * and sampling passes inside the query's construction), counted by job
+  * group through the status tracker, one `BUILD-JOBS <query> <jobs>` line
+  * each.
+  *
   * Usage: runMain graft.tools.PlanSweep [sfDir]
   */
 object PlanSweep {
@@ -18,13 +26,20 @@ object PlanSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.core.GraftSession.builder("graft-plansweep", cores = 8)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     var cart = List.empty[String]
     var bnlj = List.empty[String]
     var failed = List.empty[String]
     for ((name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {
-        val plan = q(spark, sfDir).queryExecution.executedPlan.toString
+        sc.setJobGroup(name, s"build $name")
+        val df = try q(spark, sfDir) finally {
+          sc.clearJobGroup()
+          graftbridge.drainListenerBus(sc)
+          println(s"BUILD-JOBS $name ${sc.statusTracker.getJobIdsForGroup(name).length}")
+        }
+        val plan = df.queryExecution.executedPlan.toString
         if (plan.contains("CartesianProduct")) cart ::= name
         if (plan.contains("BroadcastNestedLoopJoin")) bnlj ::= name
       } catch {

@@ -543,13 +543,13 @@ object ScaleProbe {
     // rank functions on the straggler shape (5-value group key): the
     // distributed two-pass form vs the naive one-task-per-group window —
     // at any n the naive form sorts n/5 rows in ONE task; the distributed
-    // form's per-task work is n/partitions
+    // form's per-task work is n over its derived range width
     def rankTable = spark.range(0, n).select(col("id"),
       pmod(col("id"), lit(5)).as("g"),
       pmod(hash(col("id")), lit(1000000)).as("v"))
     timed("rankfns_dist") {
       graft.ops.WindowOps.rankFunctions(rankTable, "g", Seq("v", "id"),
-        numTiles = 10, partitions = 32)
+        numTiles = 10)
     }
     timed("rankfns_naive") {
       val w = org.apache.spark.sql.expressions.Window

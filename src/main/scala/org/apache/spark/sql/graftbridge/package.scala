@@ -20,6 +20,13 @@ package object graftbridge {
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
 
+  /** Blocks until every event posted so far has reached the context's
+    * listeners (`listenerBus` is `private[spark]`), so what a listener, or
+    * the status tracker it feeds, reports is complete when it is read.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The session's typed SQL configuration, for reading a setting through
     * its `ConfigEntry` (fallbacks and byte-size units resolved).
     */

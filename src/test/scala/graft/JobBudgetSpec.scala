@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Spark jobs that move no data are scheduler round trips on short
   * operations: a table load plans without a job, a Lloyd iteration runs
-  * one shuffle, serving an index infers no schema, and a fold copies its
-  * frozen quantizers and counts its manifest without one.
+  * one shuffle, serving an index infers no schema, a fold copies its
+  * frozen quantizers and counts its manifest without one, and a prefix
+  * sum within one range builds as a plain plan.
   */
 class JobBudgetSpec extends SparkTestBase {
   import spark.implicits._
@@ -78,5 +79,22 @@ class JobBudgetSpec extends SparkTestBase {
     assert(top.length == 4 * 5)
     info(s"servedTopK + collect: $jobs jobs")
     assert(jobs <= 5, s"servedTopK ran $jobs jobs")
+  }
+
+  test("prefix-sum consumers build with no job at the fixture's derived width") {
+    for (q <- Seq("q_shard_pack", "q_seq_pack", "q_budget_cap", "q_domain_budget",
+        "q_shuffle_index", "q_pad_waste", "q_pr_curve")) {
+      val (df, jobs) = jobsOf(SparkEntry.queries(q)(spark, sfDir))
+      assert(df.columns.nonEmpty)
+      assert(jobs == 0, s"building $q ran $jobs jobs")
+    }
+  }
+
+  test("a width-7 prefixSum builds with its range checkpoint only, no totals collect") {
+    val df = spark.range(0, 3000).select(col("id"),
+      pmod(hash(col("id")), lit(97)).cast("long").as("v"))
+    val (_, jobs) = withRankWidth(7)(jobsOf(graft.ops.PrefixSum.prefixSum(df, "id", "v")))
+    info(s"width-7 prefixSum build: $jobs jobs")
+    assert(jobs == 3, s"a width-7 prefixSum build ran $jobs jobs")
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.PrefixSum
 
 /** Distributed prefix sum: must equal the one-task global window
-  * bit-for-bit at any partition count, without ever RUNNING a one-task
-  * global window.
+  * bit-for-bit at any range width, without ever RUNNING a one-task
+  * global window. Widths are pinned with `withRankWidth`.
   */
 class PrefixSumSpec extends SparkTestBase {
   import spark.implicits._
@@ -19,9 +19,9 @@ class PrefixSumSpec extends SparkTestBase {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("id", "cum").as[(Long, Long)].collect().toMap
     for (p <- Seq(1, 7, 32)) {
-      val got = PrefixSum.prefixSum(df, "id", "v", partitions = p)
-        .select("id", "cum").as[(Long, Long)].collect().toMap
-      assert(got == expect, s"prefix sum diverged at partitions=$p")
+      val got = withRankWidth(p)(PrefixSum.prefixSum(df, "id", "v")
+        .select("id", "cum").as[(Long, Long)].collect().toMap)
+      assert(got == expect, s"prefix sum diverged at width $p")
     }
   }
 
@@ -32,8 +32,8 @@ class PrefixSumSpec extends SparkTestBase {
         sum(col("v")).over(Window.orderBy("id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("id", "cum").as[(Long, Long)].collect().toMap
-    val got = PrefixSum.prefixSum(df, "id", "v", partitions = 7)
-      .select("id", "cum").as[(Long, Long)].collect().toMap
+    val got = withRankWidth(7)(PrefixSum.prefixSum(df, "id", "v")
+      .select("id", "cum").as[(Long, Long)].collect().toMap)
     assert(got == expect)
   }
 
@@ -66,9 +66,23 @@ class PrefixSumSpec extends SparkTestBase {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("id", "cum").as[(Long, Long)].collect().toMap
     for (p <- Seq(1, 7, 32)) {
-      val got = PrefixSum.prefixSumByGroup(df, "g", Seq("id"), "v", partitions = p)
-        .select("id", "cum").as[(Long, Long)].collect().toMap
-      assert(got == expect, s"diverged at partitions=$p")
+      val got = withRankWidth(p)(PrefixSum.prefixSumByGroup(df, "g", Seq("id"), "v")
+        .select("id", "cum").as[(Long, Long)].collect().toMap)
+      assert(got == expect, s"diverged at width $p")
+    }
+  }
+
+  test("a null group is one group at every width") {
+    val df = spark.range(0, 600).select(col("id"),
+      when(col("id") % 3 =!= 0, col("id") % 2).as("g"), lit(1L).as("v"))
+    val expect = df.withColumn("cum",
+        sum(col("v")).over(Window.partitionBy("g").orderBy("id")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select("id", "cum").as[(Long, Long)].collect().toMap
+    for (p <- Seq(1, 7)) {
+      val got = withRankWidth(p)(PrefixSum.prefixSumByGroup(df, "g", Seq("id"), "v")
+        .select("id", "cum").as[(Long, Long)].collect().toMap)
+      assert(got == expect, s"diverged at width $p")
     }
   }
 
@@ -76,7 +90,7 @@ class PrefixSumSpec extends SparkTestBase {
     val df = spark.range(0, 400).select(col("id"),
       pmod(hash(col("id")), lit(4)).as("g"),
       (pmod(hash(col("id") + 13), lit(50)) + 1).cast("long").as("n"))
-    val kept = PrefixSum.budgetCapPerGroup(df, "g", Seq("id"), "n", budget = 500L)
+    def kept = PrefixSum.budgetCapPerGroup(df, "g", Seq("id"), "n", budget = 500L)
       .select("id", "g", "n", "cum").as[(Long, Int, Long, Long)].collect()
     // driver-side reference: accumulate EVERY doc (a crossing doc is
     // dropped but still consumes budget — no first-fit backfill)
@@ -88,18 +102,23 @@ class PrefixSumSpec extends SparkTestBase {
           if (acc <= 500L) Some((id, g, n, acc)) else None
         }
       }.toSet
-    assert(kept.toSet == ref)
-    assert(kept.forall(_._4 <= 500L))
-    assert(kept.nonEmpty)
+    val widths = Seq("derived width" -> kept) ++
+      Seq(7, 32).map(p => s"width $p" -> withRankWidth(p)(kept))
+    for ((label, got) <- widths) {
+      assert(got.toSet == ref, label)
+      assert(got.forall(_._4 <= 500L), label)
+      assert(got.nonEmpty, label)
+    }
   }
 
   test("packSequences: hand-checked boundary segments + exact-cover invariants") {
     // docs 5,3,4 at seqLen 4 — stream [0,12): doc 1 spans the seq0/seq1
     // cut, doc 2 fills seq1's tail, doc 3 is exactly seq2
     val d = Seq((1L, 5L), (2L, 3L), (3L, 4L), (4L, 0L)).toDF("id", "sz")
-    val got = PrefixSum.packSequences(d, "id", "sz", seqLen = 4)
+    def got = PrefixSum.packSequences(d, "id", "sz", seqLen = 4)
       .orderBy("id", "seq")
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    Seq(7, 32).foreach(p => assert(withRankWidth(p)(got) == got, s"width $p"))
     assert(got == Seq(
       (1L, 0L, 0L, 0L, 4L),   // doc 1 tokens [0,4) -> seq 0 at offset 0
       (1L, 1L, 0L, 4L, 1L),   // doc 1 token  [4,5) CONTINUES into seq 1
@@ -128,6 +147,11 @@ class PrefixSumSpec extends SparkTestBase {
           col("a.seq_off") < col("b.seq_off") + col("b.len") &&
           col("b.seq_off") < col("a.seq_off") + col("a.len")).count()
     assert(overlap == 0, "segments within a sequence must not overlap")
+    // the segment table is the same at pinned widths
+    def segRows = PrefixSum.packSequences(docs, "doc_id", "n_chars", seqLen = 512)
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    val derived = segRows
+    Seq(7, 32).foreach(p => assert(withRankWidth(p)(segRows) == derived, s"width $p"))
   }
 
   test("padWaste: hand-computed batches; length-sorting cuts waste on the fixture") {
@@ -136,9 +160,11 @@ class PrefixSumSpec extends SparkTestBase {
     // waste = (2*10-12) + (2*8-12) + (1*6-6) = 8+4+0 = 12; padded = 42
     val d = Seq((1L, 10L), (2L, 2L), (3L, 8L), (4L, 4L), (5L, 6L))
       .toDF("id", "len")
-    val r = graft.ops.PrefixSum.padWaste(d, "id", "len", batchSize = 2).head()
-    assert(r.getLong(0) == 5 && r.getLong(1) == 3)
-    assert(r.getLong(2) == 30 && r.getLong(3) == 42 && r.getLong(4) == 12)
+    def hand = graft.ops.PrefixSum.padWaste(d, "id", "len", batchSize = 2).head()
+    for (r <- hand +: Seq(7, 32).map(withRankWidth(_)(hand))) {
+      assert(r.getLong(0) == 5 && r.getLong(1) == 3)
+      assert(r.getLong(2) == 30 && r.getLong(3) == 42 && r.getLong(4) == 12)
+    }
     // fixture: sorting by length must strictly reduce waste, same totals
     val docs = graft.core.Tables.documents(spark, sfDir)
       .select(col("doc_id"),
@@ -151,5 +177,9 @@ class PrefixSumSpec extends SparkTestBase {
     assert(arrival.getLong(2) == sorted.getLong(2)) // same token mass
     assert(sorted.getLong(4) < arrival.getLong(4),
       s"sorted waste ${sorted.getLong(4)} !< arrival ${arrival.getLong(4)}")
+    // the audit row is the same at pinned widths
+    Seq(7, 32).foreach(p => assert(withRankWidth(p)(
+      graft.ops.PrefixSum.padWaste(docs, "doc_id", "len", 32).head()) == arrival,
+      s"width $p"))
   }
 }

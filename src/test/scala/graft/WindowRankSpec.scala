@@ -5,11 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.ops.WindowOps
 
 /** Distributed rank functions: must equal the one-task-per-group window
-  * bit-for-bit at any partition count (the derived default included), while
-  * never giving a whole group to a single task when split into ranges.
+  * bit-for-bit at any range width (the derived one included), while never
+  * giving a whole group to a single task when split into ranges. Widths
+  * are pinned with `withRankWidth`; `None` is the derived width.
   */
 class WindowRankSpec extends SparkTestBase {
   import spark.implicits._
+
+  private val widths = Seq(Some(1), Some(8), Some(32), None)
+
+  private def atWidth[A](p: Option[Int])(body: => A): A =
+    p.fold(body)(withRankWidth(_)(body))
 
   private lazy val orders = graft.core.Tables.orders(spark, sfDir)
     .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -22,15 +28,15 @@ class WindowRankSpec extends SparkTestBase {
         percent_rank().over(w).as("p"),
         cume_dist().over(w).as("c"))
       .as[(Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap
-    for (p <- Seq(1, 8, 32, WindowOps.DerivedWidth)) {
-      val got = WindowOps.rankFunctions(orders, "o_orderpriority",
-          Seq("o_totalprice", "o_orderkey"), numTiles = 10, partitions = p)
+    for (p <- widths) {
+      val got = atWidth(p)(WindowOps.rankFunctions(orders, "o_orderpriority",
+          Seq("o_totalprice", "o_orderkey"), numTiles = 10)
         .select(col("o_orderkey"), col("ntile_10"), col("pct_rank"), col("cume"))
-        .as[(Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap
-      assert(got.size == expect.size, s"row count diverged at partitions=$p")
+        .as[(Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap)
+      assert(got.size == expect.size, s"row count diverged at width $p")
       // bit-for-bit: the closed forms use the same double ops as the built-in
       expect.foreach { case (k, e) =>
-        assert(got(k) == e, s"rank values diverged at partitions=$p key=$k: ${got(k)} vs $e")
+        assert(got(k) == e, s"rank values diverged at width $p key=$k: ${got(k)} vs $e")
       }
     }
   }
@@ -43,20 +49,18 @@ class WindowRankSpec extends SparkTestBase {
     val expect = df.select(col("g"), col("v"),
         percent_rank().over(w).as("p"), cume_dist().over(w).as("c"))
       .distinct().as[(Long, Int, Double, Double)].collect().toSet
-    val got = WindowOps.rankFunctions(df, "g", Seq("v"), numTiles = 4,
-        partitions = 8)
+    val got = withRankWidth(8)(WindowOps.rankFunctions(df, "g", Seq("v"), numTiles = 4)
       .select(col("g"), col("v"), col("pct_rank"), col("cume"))
-      .distinct().as[(Long, Int, Double, Double)].collect().toSet
+      .distinct().as[(Long, Int, Double, Double)].collect().toSet)
     assert(got == expect)
   }
 
   test("no task receives a whole group: every group spans multiple range partitions") {
-    val byPid = WindowOps.rankFunctions(orders, "o_orderpriority",
-        Seq("o_totalprice", "o_orderkey"), numTiles = 10, partitions = 8,
-        keepPid = true)
+    val byPid = withRankWidth(8)(WindowOps.rankFunctions(orders, "o_orderpriority",
+        Seq("o_totalprice", "o_orderkey"), numTiles = 10, keepPid = true)
       .groupBy("o_orderpriority")
       .agg(countDistinct(col("_pid")).as("nPids"), count(lit(1)).as("n"))
-      .as[(String, Long, Long)].collect()
+      .as[(String, Long, Long)].collect())
     assert(byPid.length == 5)
     byPid.foreach { case (g, nPids, n) =>
       assert(nPids >= 2, s"group $g ($n rows) landed on a single partition")
@@ -65,9 +69,8 @@ class WindowRankSpec extends SparkTestBase {
 
   test("ntile with n < k gives each row its own bucket (q=0 branch never divides)") {
     val df = Seq((1L, 10.0), (1L, 20.0), (1L, 30.0)).toDF("g", "v")
-    val got = WindowOps.rankFunctions(df, "g", Seq("v"), numTiles = 10,
-        partitions = 4)
-      .select("v", "ntile_10").as[(Double, Long)].collect().sortBy(_._1)
+    val got = withRankWidth(4)(WindowOps.rankFunctions(df, "g", Seq("v"), numTiles = 10)
+      .select("v", "ntile_10").as[(Double, Long)].collect().sortBy(_._1))
     assert(got.map(_._2).toSeq == Seq(1L, 2L, 3L))
   }
 
@@ -76,12 +79,12 @@ class WindowRankSpec extends SparkTestBase {
       .select(pmod(hash(col("id")), lit(997)).cast("double").as("x"))
     val sorted = df.orderBy("x").as[Double].collect()
     def disc(q: Double): Double = sorted(math.ceil(q * sorted.length).toInt - 1)
-    for (p <- Seq(1, 8, 32, WindowOps.DerivedWidth)) {
-      val got = WindowOps.exactQuantilesGlobal(df.repartition(11), "x",
-          Seq(0.1, 0.5, 0.9, 1.0), partitions = p)
-        .as[(Double, Double)].collect().toMap
+    for (p <- widths) {
+      val got = atWidth(p)(WindowOps.exactQuantilesGlobal(df.repartition(11), "x",
+          Seq(0.1, 0.5, 0.9, 1.0))
+        .as[(Double, Double)].collect().toMap)
       Seq(0.1, 0.5, 0.9, 1.0).foreach { q =>
-        assert(got(q) == disc(q), s"quantile $q diverged at partitions=$p")
+        assert(got(q) == disc(q), s"quantile $q diverged at width $p")
       }
     }
   }
@@ -94,11 +97,11 @@ class WindowRankSpec extends SparkTestBase {
       df.groupBy("g").agg(percentile(col("v"), lit(q)).as("value"))
         .as[(String, Double)].collect().map { case (g, v) => (g, q, v) }
     }.toSet
-    for (p <- Seq(1, 8, 32, WindowOps.DerivedWidth)) {
-      val got = WindowOps.exactQuantilesByGroup(df.repartition(11), "g", "v",
-          Seq(0.1, 0.5, 0.9), partitions = p)
-        .as[(String, Double, Double)].collect().toSet
-      assert(got == expect, s"quantiles diverged at partitions=$p")
+    for (p <- widths) {
+      val got = atWidth(p)(WindowOps.exactQuantilesByGroup(df.repartition(11), "g", "v",
+          Seq(0.1, 0.5, 0.9))
+        .as[(String, Double, Double)].collect().toSet)
+      assert(got == expect, s"quantiles diverged at width $p")
     }
   }
 
@@ -131,11 +134,11 @@ class WindowRankSpec extends SparkTestBase {
       "empty input" -> (empty, Seq(0.5, 0.9)),
       "duplicate qs" -> (xs, Seq(0.9, 0.5, 0.5, 0.9)),
       "q = 1.0" -> (xs, Seq(1.0)))
-    for ((label, (df, qs)) <- cases; p <- Seq(WindowOps.DerivedWidth, 8)) {
-      val got = WindowOps.exactQuantilesGlobal(df, "x", qs, partitions = p)
+    for ((label, (df, qs)) <- cases; p <- Seq(None, Some(8))) {
+      val got = atWidth(p)(WindowOps.exactQuantilesGlobal(df, "x", qs))
       val want = lazyGlobalQuantiles(df, "x", qs)
       assert(got.schema == want.schema, s"$label: schema ${got.schema} vs ${want.schema}")
-      assert(got.collect().toSeq == want.collect().toSeq, s"$label rows at partitions=$p")
+      assert(got.collect().toSeq == want.collect().toSeq, s"$label rows at width $p")
     }
     assert(WindowOps.exactQuantilesGlobal(empty, "x", Seq(0.5)).count() == 0)
     assert(WindowOps.exactQuantilesGlobal(xs, "x", Seq(0.5, 0.5)).count() == 1)
@@ -171,13 +174,13 @@ class WindowRankSpec extends SparkTestBase {
       assert(!rangeExchange(out), s"$name planned a range exchange at width 1")
     }
     // the ranged form of the same call does checkpoint its ranges
-    assert(checkpoints(WindowOps.rankFunctions(df, "g", Seq("v", "id"),
-      numTiles = 4, partitions = 8)) > 0)
+    assert(checkpoints(withRankWidth(8)(WindowOps.rankFunctions(df, "g", Seq("v", "id"),
+      numTiles = 4))) > 0)
     // and both forms agree bit for bit
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.select("id", "ntile_4", "pct_rank", "cume").collect().toSet
-    assert(rows(ranked) == rows(WindowOps.rankFunctions(df, "g", Seq("v", "id"),
-      numTiles = 4, partitions = 8)))
+    assert(rows(ranked) == rows(withRankWidth(8)(WindowOps.rankFunctions(df, "g", Seq("v", "id"),
+      numTiles = 4))))
   }
 
   test("madPerGroup's deviation pass takes the width of the collapsed counts, not of their join") {
@@ -192,9 +195,9 @@ class WindowRankSpec extends SparkTestBase {
     val rdds = mad.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd.id }
     assert(rdds.distinct.size == 1, mad.queryExecution.optimizedPlan.treeString)
     assert(!mad.queryExecution.executedPlan.toString.contains("rangepartitioning"))
-    val ranged = graft.ops.StatsOps.madPerGroup(df, "g", "v", partitions = 8)
-    assert(mad.as[(Long, Double, Double)].collect().toSet ==
-      ranged.as[(Long, Double, Double)].collect().toSet)
+    val ranged = withRankWidth(8)(graft.ops.StatsOps.madPerGroup(df, "g", "v")
+      .as[(Long, Double, Double)].collect().toSet)
+    assert(mad.as[(Long, Double, Double)].collect().toSet == ranged)
   }
 
   test("with a tiny advisory partition size the derived width is spark.sql.shuffle.partitions") {
@@ -267,7 +270,7 @@ class WindowRankSpec extends SparkTestBase {
     // pos scores {3,2}, neg {1,2}: pairs 3>1, 3>2, 2>1 win, 2==2 half
     // → AUC = 3.5/4 = 0.875
     val df = Seq((1, 3.0), (1, 2.0), (0, 1.0), (0, 2.0)).toDF("lab", "score")
-    val r = EvalMetrics.aucExact(df, "lab", "score", partitions = 3).collect().head
+    val r = withRankWidth(3)(EvalMetrics.aucExact(df, "lab", "score").collect().head)
     assert((r.getLong(0), r.getLong(1)) == ((2L, 2L)))
     assert(r.getDouble(2) == 0.875)
     // perfect separation → 1.0; reversed → 0.0; partitioning-independent
@@ -279,9 +282,9 @@ class WindowRankSpec extends SparkTestBase {
     val big = spark.range(0, 20000).select(
       pmod(hash(col("id")), lit(2)).cast("int").as("lab"),
       pmod(hash(col("id"), lit(7)), lit(100)).cast("double").as("score"))
-    val a = EvalMetrics.aucExact(big, "lab", "score", partitions = 4).collect().head
-    val b = EvalMetrics.aucExact(big.repartition(17), "lab", "score",
-      partitions = 32).collect().head
+    val a = withRankWidth(4)(EvalMetrics.aucExact(big, "lab", "score").collect().head)
+    val b = withRankWidth(32)(EvalMetrics.aucExact(big.repartition(17), "lab", "score")
+      .collect().head)
     assert(a == b, "AUC must be partitioning-independent")
   }
 
@@ -298,6 +301,31 @@ class WindowRankSpec extends SparkTestBase {
       .as[(String, Double, Double)].collect().toSet
     assert(got == Set(("a", 0.1, 7.0), ("a", 0.9, 7.0),
       ("b", 0.1, 3.0), ("b", 0.9, 3.0)))
+  }
+
+  test("the scaffold plans no window without a partition key, with or without a group") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    import graft.ops.{EvalMetrics, PrefixSum}
+    def unkeyed(out: org.apache.spark.sql.DataFrame) =
+      out.queryExecution.optimizedPlan.collect {
+        case w: WindowNode if w.partitionSpec.isEmpty => w
+      }.size
+    val df = spark.range(0, 2000).select((col("id") % 3).as("g"),
+      pmod(hash(col("id")), lit(53)).as("v"), col("id"))
+    // the detector sees a literal key the optimizer folds away
+    assert(unkeyed(df.withColumn("k", lit(1))
+      .withColumn("s", sum(col("v")).over(Window.partitionBy("k")))) == 1)
+    val scored = df.select((col("id") % 2).as("lab"), col("v").as("score"))
+    for (p <- Seq(1, 8)) withRankWidth(p) {
+      for ((name, out) <- Seq(
+          "prefixSum" -> PrefixSum.prefixSum(df, "id", "v"),
+          "prefixSumByGroup" -> PrefixSum.prefixSumByGroup(df, "g", Seq("id"), "v"),
+          "rankFunctions" -> WindowOps.rankFunctions(df, "g", Seq("v", "id"), numTiles = 4),
+          "aucExact" -> EvalMetrics.aucExact(scored, "lab", "score"))) {
+        assert(unkeyed(out) == 0,
+          s"$name at width $p: ${out.queryExecution.optimizedPlan.treeString}")
+      }
+    }
   }
 
   test("reserved column names are rejected loudly") {
