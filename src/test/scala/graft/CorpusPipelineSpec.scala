@@ -50,7 +50,12 @@ class CorpusPipelineSpec extends SparkTestBase {
       assert(got.schema == ref.schema, s"budgets $sb/$pb")
       val g = rows(got)
       assert(g.nonEmpty, s"budgets $sb/$pb kept nothing")
-      assert(g == rows(ref), s"budgets $sb/$pb")
+      val r = rows(ref)
+      assert(g == r, s"budgets $sb/$pb")
+      // the budget cut and the pack over multi-range prefix sums
+      for (w <- Seq(7, 32))
+        assert(withRankWidth(w)(rows(CorpusPipeline.dedupSplitPack(in, sb, pb))) == r,
+          s"budgets $sb/$pb at width $w")
     }
   }
 

@@ -40,8 +40,10 @@ class PrefixSumSpec extends SparkTestBase {
   test("packShards: shards are contiguous, ordered, and budget-shaped") {
     val df = spark.range(0, 500).select(col("id"),
       (pmod(hash(col("id")), lit(50)) + 1).cast("long").as("n"))
-    val shards = PrefixSum.packShards(df, "id", "n", budget = 300L)
-      .select("id", "n", "shard").as[(Long, Long, Long)].collect().sortBy(_._1)
+    def pack = PrefixSum.packShards(df, "id", "n", budget = 300L)
+      .select("id", "n", "shard").as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val shards = pack
+    Seq(7, 32).foreach(p => assert(withRankWidth(p)(pack) == shards, s"width $p"))
     // shard ids never decrease in doc order and skip nothing
     val ids = shards.map(_._3)
     assert(ids.zip(ids.tail).forall { case (a, b) => b == a || b == a + 1 })

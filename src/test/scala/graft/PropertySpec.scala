@@ -592,9 +592,11 @@ class PropertySpec extends SparkTestBase {
     val rows = Seq.fill(500)((if (rnd.nextBoolean()) 1 else 0,
       rnd.nextInt(20).toLong))
     val df = rows.toDF("lab", "score")
-    val got = graft.ops.EvalMetrics.prCurve(df, "lab", "score")
-      .orderBy("thr")
-      .as[(Double, Long, Long, Long, Long, Double, Double, Double)].collect()
+    def curve(in: org.apache.spark.sql.DataFrame) =
+      graft.ops.EvalMetrics.prCurve(in, "lab", "score")
+        .orderBy("thr")
+        .as[(Double, Long, Long, Long, Long, Double, Double, Double)].collect()
+    val got = curve(df)
     val p = rows.count(_._1 == 1)
     val n = rows.size - p
     for ((thr, tp, fp, fn, tn, prec, rec, f1) <- got) {
@@ -613,10 +615,11 @@ class PropertySpec extends SparkTestBase {
     assert(got.map(_._7).toSeq == got.map(_._7).sorted.reverse.toSeq)
     // one row per distinct score
     assert(got.length == rows.map(_._2).distinct.size)
-    val repart = graft.ops.EvalMetrics.prCurve(df.repartition(13), "lab", "score")
-      .orderBy("thr")
-      .as[(Double, Long, Long, Long, Long, Double, Double, Double)].collect()
+    val repart = curve(df.repartition(13))
     assert(repart.sameElements(got))
+    // the same curve from the multi-range prefix sums
+    for (w <- Seq(7, 32); in <- Seq(df, df.repartition(13)))
+      assert(withRankWidth(w)(curve(in)).sameElements(got), s"width $w")
   }
 
   test("prCurve: fractional scores keep full resolution (no integer collapse)") {

@@ -276,14 +276,37 @@ class SamplingSessionSpec extends SparkTestBase {
       .map { case (id, i) => id -> i.toLong }.toMap
     a.foreach { case (id, pos) => assert(pos == expected(id), s"id $id") }
     // repartition-invariant
-    val b = graft.ops.Sampling.shuffleIndex(df.repartition(13), col("id"), "e0")
-      .as[(Long, Long)].collect()
-    assert(a.toSet == b.toSet)
+    def index(in: org.apache.spark.sql.DataFrame) =
+      graft.ops.Sampling.shuffleIndex(in, col("id"), "e0")
+        .as[(Long, Long)].collect().toSet
+    assert(a.toSet == index(df.repartition(13)))
+    // the same permutation from the multi-range prefix sum
+    for (w <- Seq(7, 32); in <- Seq(df, df.repartition(13)))
+      assert(withRankWidth(w)(index(in)) == a.toSet, s"width $w")
     // a new salt is a genuinely different permutation
     val c = graft.ops.Sampling.shuffleIndex(df, col("id"), "e1")
       .as[(Long, Long)].collect().toMap
     assert(a.count { case (id, pos) => c(id) == pos } < 50,
       "epoch permutations should share almost no fixed points")
+  }
+
+  test("curriculumIndex: the one-task (bucket desc, draw, id) row number at every width") {
+    import org.apache.spark.sql.expressions.Window
+    // five buckets of uneven size plus null buckets (last in a descending
+    // order), arriving over scattered partitions
+    val df = spark.range(0, 2000).select(col("id"),
+        when(col("id") % 97 =!= 0, pmod(hash(col("id")), lit(5))).as("b"))
+      .repartition(13)
+    val expect = df.select(col("id"), col("b").cast("int").as("bucket"),
+        (row_number().over(Window.orderBy(col("b").desc,
+          Sampling.hashDraw(col("id"), "cur"), col("id"))) - 1).cast("long").as("pos"))
+      .as[(Long, Option[Int], Long)].collect().toSet
+    assert(expect.map(_._2).size == 6)
+    def index = Sampling.curriculumIndex(df, col("b"), col("id"), salt = "cur")
+      .as[(Long, Option[Int], Long)].collect().toSet
+    for ((label, got) <- Seq("derived width" -> index) ++
+        Seq(1, 7, 32).map(w => s"width $w" -> withRankWidth(w)(index)))
+      assert(got == expect, label)
   }
 
   test("mixWeights: hand-computed temperature scaling, weights sum to 1, flattening") {

@@ -256,14 +256,17 @@ class StreamsSpec extends SparkTestBase {
         s"got $rows")
       // parity with the batch operator over the same total order
       import spark.implicits._
-      val batch = graft.ops.PrefixSum.budgetCapPerGroup(
+      def batch = graft.ops.PrefixSum.budgetCapPerGroup(
           Seq(("A", 1L, 50L), ("A", 2L, 40L), ("B", 3L, 60L),
             ("A", 4L, 20L), ("A", 5L, 5L), ("B", 6L, 40L)).toDF("k", "ord", "sz"),
           "k", Seq("ord"), "sz", budget = 100L)
         .select("k", "ord", "cum").as[(String, Long, Long)].collect().toSet
       val streamAccepted = rows.filter(_._4).map(r => (r._1, r._2, r._3))
-      assert(streamAccepted == batch,
-        s"stream accept set diverged from batch: $streamAccepted vs $batch")
+      // the batch op at the derived width and at multi-range widths
+      for ((label, b) <- Seq("derived width" -> batch) ++
+          Seq(7, 32).map(w => s"width $w" -> withRankWidth(w)(batch)))
+        assert(streamAccepted == b,
+          s"stream accept set diverged from batch at $label: $streamAccepted vs $b")
     } finally q.stop()
   }
 
@@ -1225,14 +1228,17 @@ class StreamsSpec extends SparkTestBase {
         "duplicate (grp, ord) emissions across restart")
       assert(got.size == file1.size + file2.size)
       val all = file1 ++ file2
-      val batchKept = graft.ops.PrefixSum.budgetCapPerGroup(
+      def batchKept = graft.ops.PrefixSum.budgetCapPerGroup(
           all.map(r => (r._4, r._5, r._6)).toDF("grp", "ord", "sz"),
           "grp", Seq("ord"), "sz", budget = 60L)
         .select("grp", "ord", "cum").as[(String, Long, Long)].collect().toSet
       val streamKept = got.filter(_._4).map(r => (r._1, r._2, r._3)).toSet
-      assert(streamKept == batchKept,
-        s"quota state lost across crash: ${streamKept.size} accepted vs " +
-          s"batch ${batchKept.size}")
+      // the batch op at the derived width and at multi-range widths
+      for ((label, b) <- Seq("derived width" -> batchKept) ++
+          Seq(7, 32).map(w => s"width $w" -> withRankWidth(w)(batchKept)))
+        assert(streamKept == b,
+          s"quota state lost across crash: ${streamKept.size} accepted vs " +
+            s"batch ${b.size} at $label")
       // the crossing itself must span the crash: some pre-crash rows
       // accepted, and at least one post-crash rejection caused by
       // PRE-crash consumption
@@ -1493,10 +1499,12 @@ class StreamsSpec extends SparkTestBase {
         ("a.example.com", 1L, 50L), ("a.example.com", 2L, 40L),
         ("b.example.com", 3L, 40L), ("a.example.com", 4L, 30L),
         ("b.example.com", 5L, 50L)).toDF("domain", "ord", "n_chars")
-      val batchKept = graft.ops.PrefixSum.budgetCapPerGroup(
+      def batchKept = graft.ops.PrefixSum.budgetCapPerGroup(
           batchRows, "domain", Seq("ord"), "n_chars", budget = 100L)
         .select("ord").as[Long].collect().toSet
-      assert(got.filter(_._2._4).keySet == batchKept)
+      // the batch op at the derived width and at multi-range widths
+      for (b <- batchKept +: Seq(7, 32).map(withRankWidth(_)(batchKept)))
+        assert(got.filter(_._2._4).keySet == b)
     } finally q.stop()
   }
 
